@@ -1,13 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, sum, xxhash64}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCores
     // sbt wraps stdout in [info] decoration, which broke the driver's
     // JSON extraction in round 1 (BENCH_r01 "parsed": null) — the result
     // line is ALSO written verbatim to a file
@@ -18,18 +17,7 @@ object Bench {
     // binaries 1.4-70x in throttle windows; see BENCH_ISOLATED.json) is
     // one artifact instead of three cross-referenced ones.
     val prior: Map[String, Double] = priorQueries(outPath)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the ScaleStress sweep lessons apply to this 222-query session
-      // too: the ContextCleaner frees dead broadcasts/shuffle state
-      // only after a GC, and its default periodic GC is longer than
-      // the whole run
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // absorb session/codegen warm-up outside the timed region so the
     // first query's number is comparable to the rest
     try {
@@ -74,56 +62,50 @@ object Bench {
         }
       name -> dt
     }
+    val lines = resultLines(results, failed.toSeq, prior, cpus, sfDir)
+    Files.writeString(Paths.get(outPath), lines.head + "\n")
+    lines.foreach(println)
+    spark.stop()
+  }
+
+  /** The result lines in print order. First the full artifact line
+    * (metric "total_full": per-query map, ratios vs the prior run), which
+    * is also the BENCH_OUT file. Last the short summary (metric "total"):
+    * result parsers read only a 2,000-char stdout tail, so the short
+    * line must be the last line and the only "metric":"total" one. */
+  def resultLines(results: Map[String, Double], failed: Seq[String],
+                  prior: Map[String, Double], cpus: Int,
+                  sfDir: String): Seq[String] = {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val total = results.values.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // The full artifact (with the 68-entry per-query map, ~2,900 chars)
-    // goes to the file ONLY: the driver captures just a 2,000-char tail
-    // of stdout, so printing the long line left the perf gate reading
-    // "parsed": null for three straight rounds (it arrived truncated
-    // mid-JSON). Stdout gets a short total-only summary — well under the
-    // tail budget — printed LAST so it survives the tail capture.
     // Per-query ratios vs the prior committed run. Sub-0.3s prior lines
     // are skipped (ratio of noise); the top offenders land in the
     // artifact so BenchIsolated's auto mode can re-measure exactly them.
     val ratios = results.toSeq.flatMap { case (k, v) =>
       prior.get(k).filter(_ >= 0.3).map(p => (k, v / p))
     }
-    // Locale.ROOT: f"" uses the JVM default locale, and a comma-decimal
-    // locale (de_DE) would render 0,95 and corrupt the JSON artifact.
-    def num(v: Double, digits: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${digits}f",
-        java.lang.Double.valueOf(v))
-    val ratioJson =
-      if (ratios.isEmpty) "null"
-      else {
-        val sortedR = ratios.map(_._2).sorted
-        val median = sortedR(sortedR.length / 2)
-        val top = ratios.sortBy(-_._2).take(8)
-          .map { case (k, r) => s""""$k":${num(r, 2)}""" }
-          .mkString("{", ",", "}")
-        s"""{"n":${ratios.length},"median":${num(median, 3)},"top":$top}"""
-      }
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"failed":$failedJson,"ratios_vs_prior":$ratioJson,"sf":"$sfDir"}"""
-    Files.writeString(Paths.get(outPath), fullLine + "\n")
-    val medianStr =
-      if (ratios.isEmpty) "null"
-      else num(ratios.map(_._2).sorted.apply(ratios.length / 2), 3)
-    // r11 (VERDICT item 2): ALSO print the full line (per-query map +
-    // cores) so a driver that reads more than the 2,000-char stdout
-    // tail regains per-query/geomean/scaling comparability. Printed
-    // FIRST and additions-only: the short line stays LAST, so a
-    // tail-only parser sees exactly the r5-r10 contract (the full
-    // line's own "{"metric" head is cut out of any 2,000-char tail,
-    // so it can never shadow the short line there).
-    println(fullLine)
-    val shortLine =
+    val median = ratios.map(_._2).sorted.lift(ratios.length / 2)
+    val ratioJson = median.fold("null") { m =>
+      val top = ratios.sortBy(-_._2).take(8)
+        .map { case (k, r) => s""""$k":${num(r, 2)}""" }
+        .mkString("{", ",", "}")
+      s"""{"n":${ratios.length},"median":${num(m, 3)},"top":$top}"""
+    }
+    val medianStr = median.fold("null")(num(_, 3))
+    val full =
+      s"""{"metric":"total_full","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"failed":$failedJson,"ratios_vs_prior":$ratioJson,"sf":"$sfDir"}"""
+    val short =
       s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"n":${results.size},"failed":$failedJson,"ratio_median":$medianStr,"sf":"$sfDir"}"""
-    println(shortLine)
-    spark.stop()
+    Seq(full, short)
   }
+
+  // Locale.ROOT: f"" uses the JVM default locale, and a comma-decimal
+  // locale (de_DE) would render 0,95 and corrupt the JSON artifact.
+  private def num(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f",
+      java.lang.Double.valueOf(v))
 
   /** Parse the per-query seconds map out of a prior bench artifact
     * (json4s ships with Spark; absent/corrupt artifact -> empty). */

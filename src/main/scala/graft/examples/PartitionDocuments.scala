@@ -1,9 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators._
 
 /** End-to-end example mirroring the reference's example pipelines
@@ -20,13 +19,7 @@ object PartitionDocuments {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-example").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
 
     val docs = Tables(spark, sfDir, "documents")
     val grouper = Grouper.byColumn("source") // ≙ C4 domain partitioning

@@ -92,8 +92,8 @@ object DatasetCard {
     * checkpointed slice-bounded aggregate. */
   private def fused(docs0: DataFrame): DataFrame = {
     // r10 added a parallelism floor here on mechanism alone (honestly
-    // declared unmeasured); r11's same-window A/B (tools/R11Probe
-    // card-floor vs card-nofloor, both orders) found no confirmed
+    // declared unmeasured); r11's same-window A/B (card-floor vs
+    // card-nofloor, both orders) found no confirmed
     // delta — warm means ~5.2s vs ~5.0s, inside noise — so per the
     // keep-only-with-a-confirmed-delta rule the floor is REVERTED to
     // keep the plan minimal. (The `parallel` shape never had one —

@@ -37,6 +37,13 @@ object PartitionedDataset {
                    limit: Long = Pack.BytesLimit): DataFrame =
     Pack.packGroups(df, grouper, serializeExpr(df.schema), limit)
 
+  /** One group's examples as a serialized SequenceExample record. */
+  private def sequenceExample(examples: Column): Column =
+    udf(new UDF1[Seq[Array[Byte]], Array[Byte]] {
+      override def call(ex: Seq[Array[Byte]]): Array[Byte] =
+        SequenceExampleCodec.encode(ex)
+    }, BinaryType).apply(examples)
+
   /** Write packed groups as TFRecords of SequenceExamples, dropping the
     * group id (reference invariant §1.4.2). One TFRecord record per
     * group. Returns shard paths. */
@@ -45,12 +52,8 @@ object PartitionedDataset {
                      suffix: String = ""): Seq[String] = {
     val spark = packed.sparkSession
     import spark.implicits._
-    val seqEx = new UDF1[Seq[Array[Byte]], Array[Byte]] {
-      override def call(ex: Seq[Array[Byte]]): Array[Byte] =
-        SequenceExampleCodec.encode(ex)
-    }
     val records = packed
-      .select(udf(seqEx, BinaryType).apply(col("examples")).as("record"))
+      .select(sequenceExample(col("examples")).as("record"))
       .as[Array[Byte]]
     TFRecordIO.write(records, dir, prefix, suffix)
   }
@@ -74,16 +77,12 @@ object PartitionedDataset {
                             prefix: String = "groups.tfrecord"): Seq[String] = {
     val spark = packed.sparkSession
     import spark.implicits._
-    val seqEx = new UDF1[Seq[Array[Byte]], Array[Byte]] {
-      override def call(ex: Seq[Array[Byte]]): Array[Byte] =
-        SequenceExampleCodec.encode(ex)
-    }
     val shard = pmod(
       graft.expressions.Md5Hex.u32(col("group_id").cast("string")),
       lit(nShards.toLong))
     val pairs = packed
       .select(shard.as("__shard"),
-        udf(seqEx, BinaryType).apply(col("examples")).as("record"))
+        sequenceExample(col("examples")).as("record"))
       .as[(Long, Array[Byte])]
       .rdd
       .partitionBy(new org.apache.spark.Partitioner {

@@ -15,7 +15,7 @@ import graft.functions.{TopK, Vectors}
   *    bits once (linear), queries probe nearby buckets only; the 100 TB
   *    path where the corpus cross-product is unpayable.
   *
-  * Perf notes (measured in graft.tools.Profile): vectors are normalized
+  * Perf notes: vectors are normalized
   * ONCE per row and materialized behind a `repartition` barrier before
   * any pairwise join. Without the barrier Catalyst collapses the
   * normalization projection into the join, recomputing the O(dim)

@@ -2,10 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Isolated cold/warm timing for a set of declared queries, written as
   * one JSON file (`BENCH_ISOLATED.json`) committed alongside the round's
@@ -41,15 +40,8 @@ object BenchIsolated {
         "events_stream_interval_join", "dedup_ngram_documents",
         "pack_token_budget_documents")
     val reps = 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // parity with Bench/Smoke/Verify: extension-registered SQL
-      // (sql_text_stats_extension) must resolve here too
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCores
+    val spark = GraftSession.local(cpus)
     graft.Tables(spark, dir, "region").count() // absorb session warm-up
     val rows = names.map { name =>
       val times = (1 to reps).map { _ =>

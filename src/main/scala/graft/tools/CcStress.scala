@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Dedup
 
 /** Connected-components stress (not part of the driver contract):
@@ -16,12 +16,7 @@ object CcStress {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
     val chain = args.drop(1).headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32, "spark.sql.shuffle.partitions" -> "64")
 
     val t0 = System.nanoTime()
     val pairs = spark.range(n - 1)

@@ -2,40 +2,32 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Writes `<outDir>/<query>_<suffix>.txt` with the formatted physical
-  * plan of each named declared query — the optimization-round evidence
-  * files (plans/r10/...). Queries that TRAIN during construction (PCA
-  * power iteration, Lloyd fits) run their expensive jobs before the
-  * returned DataFrame exists, so a QueryExecutionListener additionally
-  * captures every construction-time job's formatted plan: the
-  * before/after diff for those queries lives in the step plans, not
-  * the (tiny) final plan. Run:
-  *   sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> q1 q2 ..."
+  * plan of each named declared query (every query when none is named)
+  * and prints a one-line scorecard per query: shuffles, broadcasts,
+  * scans and whole-stage codegen spans. Queries that TRAIN during
+  * construction (PCA power iteration, Lloyd fits) run their expensive
+  * jobs before the returned DataFrame exists, so a
+  * QueryExecutionListener additionally captures every
+  * construction-time job's formatted plan: the before/after diff for
+  * those queries lives in the step plans, not the (tiny) final plan.
+  * AQE is off so the static plan shows its codegen spans (production
+  * sessions keep AQE on). Per-layer timings live in `perfbench/`. Run:
+  *   sbt "runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q1 q2 ...]"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val names = args.drop(3).toSeq
-    require(names.nonEmpty, "usage: PlanDump <sfDir> <outDir> <suffix> q1 ...")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static plans must show WholeStageCodegen spans (the
-      // ExplainAudit rationale); production sessions keep AQE on
-      .config("spark.sql.adaptive.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val named = args.drop(3).toSeq
+    val names = if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
+    val spark = GraftSession.local(4, "spark.sql.adaptive.enabled" -> "false")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val sb = new StringBuilder
@@ -72,6 +64,7 @@ object PlanDump {
           sb.toString)
         println(s"[plandump] wrote $outDir/${name}_$suffix.txt " +
           s"($jobN construction jobs)")
+        println(scorecard(name, df.queryExecution.executedPlan.toString))
       } catch {
         case e: Throwable =>
           spark.listenerManager.unregister(listener)
@@ -79,5 +72,15 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** Plan-shape counts of an executed plan's tree string. */
+  private def scorecard(name: String, plan: String): String = {
+    def n(re: String) = re.r.findAllIn(plan).size
+    // codegen'd operators print as "*(id) Op": one id = one fused span
+    val spans = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
+    s"== $name: shuffles=${n("Exchange (hash|range)partitioning|Exchange SinglePartition")} " +
+      s"broadcasts=${n("BroadcastExchange")} scans=${n("Scan parquet|FileScan")} " +
+      s"codegenSpans=$spans"
   }
 }

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators._
 
 /** Scale stress harness (not part of the driver contract): generates a
@@ -18,20 +18,12 @@ object ScaleStress {
     // generate steps always run); lets a single case re-measure without
     // the full ~20-min sweep
     val only = args.drop(1).headOption
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "8g")
-      // ContextCleaner frees dead broadcasts/shuffle state only after
-      // a GC, and its periodic GC defaults to 30 min — longer than the
-      // whole sweep, so 40+ cases of broadcast maps piled onto the
-      // heap (dsir green isolated, OOM in sequence). An explicit
-      // System.gc() per case traded this for GCLocker starvation under
-      // 32 allocating tasks; the supported knob is the right lever.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the shared session policy's periodic ContextCleaner GC matters
+    // most here: an explicit System.gc() per case traded broadcast
+    // pile-up for GCLocker starvation under 32 allocating tasks
+    val spark = GraftSession.local(32,
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.driver.memory" -> "8g")
     import spark.implicits._
 
     // keepStorage: the IVF build case persists an index its QUERY case

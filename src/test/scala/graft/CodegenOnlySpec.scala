@@ -16,14 +16,7 @@ class CodegenOnlySpec extends AnyFunSuite with Matchers {
     val previous = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-codegen-only")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.codegen.wholeStage", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(2, "spark.sql.codegen.fallback" -> "false")
     try {
       import spark.implicits._
       import org.apache.spark.sql.functions._

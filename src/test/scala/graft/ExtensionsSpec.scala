@@ -16,13 +16,7 @@ class ExtensionsSpec extends AnyFunSuite with Matchers {
     val previous = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.local(2)
     try {
       val dot = spark.sql(
         "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
