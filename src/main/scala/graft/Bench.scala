@@ -72,14 +72,18 @@ object Bench {
     * (metric "total_full": per-query map, ratios vs the prior run), which
     * is also the BENCH_OUT file. Last the short summary (metric "total"):
     * result parsers read only a 2,000-char stdout tail, so the short
-    * line must be the last line and the only "metric":"total" one. */
+    * line must be the last line and the only "metric":"total" one. It
+    * names at most [[ShortFailedNames]] failed queries (the full line
+    * names them all) and counts them in `failed_n`, so a mass failure
+    * cannot push it past the tail. */
   def resultLines(results: Map[String, Double], failed: Seq[String],
                   prior: Map[String, Double], cpus: Int,
                   sfDir: String): Seq[String] = {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.values.sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def names(ns: Seq[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = names(failed)
     // Per-query ratios vs the prior committed run. Sub-0.3s prior lines
     // are skipped (ratio of noise); the top offenders land in the
     // artifact so BenchIsolated's auto mode can re-measure exactly them.
@@ -97,9 +101,12 @@ object Bench {
     val full =
       s"""{"metric":"total_full","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"failed":$failedJson,"ratios_vs_prior":$ratioJson,"sf":"$sfDir"}"""
     val short =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"n":${results.size},"failed":$failedJson,"ratio_median":$medianStr,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"n":${results.size},"failed":${names(failed.take(ShortFailedNames))},"failed_n":${failed.size},"ratio_median":$medianStr,"sf":"$sfDir"}"""
     Seq(full, short)
   }
+
+  /** Failed query names the short line carries. */
+  val ShortFailedNames = 8
 
   // Locale.ROOT: f"" uses the JVM default locale, and a comma-decimal
   // locale (de_DE) would render 0,95 and corrupt the JSON artifact.

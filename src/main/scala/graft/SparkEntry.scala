@@ -91,13 +91,6 @@ object SparkEntry {
     p.toString
   }
 
-  /** Bound on a driver-side wait for jobs a query builder runs from
-    * other threads: a wedged job fails its query, it does not hang the
-    * run. Far above the wall time of any declared query at sf0.1
-    * (about 10 s at most). */
-  private val DriverWaitTimeout =
-    scala.concurrent.duration.Duration(30, java.util.concurrent.TimeUnit.MINUTES)
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A3/A4 group-counts aggregation (SURVEY §2.3) over documents, keyed
     // by lang — the reference's domain-partitioned counts pipeline shape.
@@ -611,22 +604,10 @@ object SparkEntry {
       // eagerly inside joinAdvice (r11 persist hygiene), so OVERLAP
       // them (guide §2.6): three driver threads submit the jobs
       // concurrently and the scheduler back-fills idle cores; the
-      // result rows and their union order are unchanged. Pool threads
-      // do not inherit the caller's job group and description, so each
-      // future sets them before submitting: listeners attribute the
-      // jobs to this query and cancelling its group reaches them.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val sc = s.sparkContext
-      val tags = Seq("spark.jobGroup.id", "spark.job.description",
-        "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
+      // result rows and their union order are unchanged.
       def advise(name: String, l: DataFrame, lk: Column,
-                 r: DataFrame, rk: Column) = Future {
-        tags.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-        try p.joinAdvice(name, l, lk, r, rk)
-        finally tags.foreach { case (k, _) => sc.setLocalProperty(k, null) }
-      }
-      val advices = Seq(
+                 r: DataFrame, rk: Column) = () => p.joinAdvice(name, l, lk, r, rk)
+      DriverJobs.runAll(s.sparkContext)(Seq(
         advise("lineitem_orders",
           Tables(s, dir, "lineitem"), col("l_orderkey"),
           Tables(s, dir, "orders"), col("o_orderkey")),
@@ -635,15 +616,8 @@ object SparkEntry {
           Tables(s, dir, "nation"), col("n_nationkey")),
         advise("orders_events",
           Tables(s, dir, "orders"), col("o_custkey"),
-          Tables(s, dir, "events"), col("user_id")))
-      try Await.result(Future.sequence(advices), DriverWaitTimeout)
+          Tables(s, dir, "events"), col("user_id"))))
         .reduce(_ union _)
-      catch {
-        case e: java.util.concurrent.TimeoutException =>
-          Option(sc.getLocalProperty("spark.jobGroup.id"))
-            .foreach(sc.cancelJobGroup)
-          throw e
-      }
     },
     // PARTITION-SIZING advisor: exact row/byte totals folded into the
     // submit-time config — shuffle partition count at the 128 MiB

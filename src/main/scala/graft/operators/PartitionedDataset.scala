@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.api.java.{UDF1, UDF2}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.expressions.{DecodeExample, EncodeExample}
 import graft.serialization.{SequenceExampleCodec, TFExampleCodec}
 import graft.sources.TFRecordIO
 
@@ -23,13 +24,8 @@ import graft.sources.TFRecordIO
 object PartitionedDataset {
 
   /** Proto-serialize each row (schema-driven boundary codec). */
-  def serializeExpr(schema: StructType): Column = {
-    val codec = new TFExampleCodec(schema)
-    val f = new UDF1[Row, Array[Byte]] {
-      override def call(r: Row): Array[Byte] = codec.encode(r)
-    }
-    udf(f, BinaryType).apply(struct(schema.fieldNames.map(col).toSeq: _*))
-  }
+  def serializeExpr(schema: StructType): Column =
+    EncodeExample(struct(schema.fieldNames.map(col).toSeq: _*), schema)
 
   /** Key -> serialize -> capped pack: `(group_id, examples, num_examples,
     * num_bytes)`. One shuffle end-to-end (SURVEY §3.1). */
@@ -98,13 +94,12 @@ object PartitionedDataset {
     * `(group_file, examples array<binary>)` — the dataset-of-datasets
     * shape, one row per group (data_loaders.py:70-125). */
   def loadTFRecords(spark: SparkSession, pattern: String): DataFrame = {
-    val parse = new UDF1[Array[Byte], Seq[Array[Byte]]] {
-      override def call(rec: Array[Byte]): Seq[Array[Byte]] =
-        SequenceExampleCodec.decode(rec)
-    }
-    TFRecordIO.read(spark, pattern)
-      .select(col("file"),
-        udf(parse, ArrayType(BinaryType)).apply(col("record")).as("examples"))
+    import spark.implicits._
+    // parsed by a typed map, which the explode-inferred `size(examples) > 0`
+    // filter cannot be pushed below: one parse per record
+    TFRecordIO.read(spark, pattern).as[(String, Array[Byte])]
+      .map { case (file, record) => (file, SequenceExampleCodec.decode(record)) }
+      .toDF("file", "examples")
   }
 
   /** Decode a group-rows DataFrame back to the original per-example
@@ -112,13 +107,9 @@ object PartitionedDataset {
     * Round-trip invariant: output schema == original input schema
     * (integration_test.py:52-59). */
   def decodeExamples(groups: DataFrame, schema: StructType): DataFrame = {
-    val codec = new TFExampleCodec(schema)
-    val dec = new UDF1[Array[Byte], Row] {
-      override def call(b: Array[Byte]): Row = codec.decode(b)
-    }
     groups
       .select(explode(col("examples")).as("__ex"))
-      .select(udf(dec, schema).apply(col("__ex")).as("__row"))
+      .select(DecodeExample(col("__ex"), schema).as("__row"))
       .select(schema.fieldNames.map(n => col(s"__row.$n")).toSeq: _*)
   }
 

@@ -2,7 +2,7 @@ package graft.serialization
 
 import scala.collection.mutable
 
-import ProtoWire.{Reader, Writer}
+import ProtoWire.{fieldSize, lenDelimTag, putHeader, Cursor}
 
 /** `tf.train.SequenceExample` packing of a group's serialized examples —
   * the reference's `create_sequence_example`
@@ -14,73 +14,96 @@ import ProtoWire.{Reader, Writer}
 object SequenceExampleCodec {
 
   val BytesFeatureName = "serialized_bytes"
+  private val NameBytes = BytesFeatureName.getBytes("UTF-8")
+
+  private val T1 = lenDelimTag(1)
+  private val T2 = lenDelimTag(2)
 
   /** Wrap a group's example bytes into SequenceExample proto bytes. */
   def encode(examples: Seq[Array[Byte]]): Array[Byte] = {
-    val featureList = new Writer // FeatureList: repeated Feature feature = 1
+    // FeatureList: per example, Feature{bytes_list{value}}
+    var listLen = 0L
+    examples.foreach { ex => listLen += fieldSize(fieldSize(fieldSize(ex.length))) }
+    val entryLen = fieldSize(NameBytes.length) + fieldSize(listLen) // map entry
+    val featureListsLen = fieldSize(entryLen) // FeatureLists.feature_list = 1
+    val out = ProtoWire.allocate(fieldSize(featureListsLen))
+    var p = putHeader(out, 0, T2, featureListsLen) // SequenceExample.feature_lists = 2
+    p = putHeader(out, p, T1, entryLen)
+    p = putHeader(out, p, T1, NameBytes.length)
+    System.arraycopy(NameBytes, 0, out, p, NameBytes.length)
+    p = putHeader(out, p + NameBytes.length, T2, listLen)
     examples.foreach { ex =>
-      val bytesList = new Writer // BytesList: repeated bytes value = 1
-      bytesList.writeBytesField(1, ex)
-      val feature = new Writer // Feature.bytes_list = 1
-      feature.writeMessageField(1, bytesList)
-      featureList.writeMessageField(1, feature)
+      val bytesList = fieldSize(ex.length)
+      p = putHeader(out, p, T1, fieldSize(bytesList)) // FeatureList.feature = 1
+      p = putHeader(out, p, T1, bytesList) // Feature.bytes_list = 1
+      p = putHeader(out, p, T1, ex.length) // BytesList.value = 1
+      System.arraycopy(ex, 0, out, p, ex.length)
+      p += ex.length
     }
-    val entry = new Writer // map<string, FeatureList> entry
-    entry.writeStringField(1, BytesFeatureName)
-    entry.writeMessageField(2, featureList)
-    val featureLists = new Writer // FeatureLists.feature_list = 1
-    featureLists.writeMessageField(1, entry)
-    val seqExample = new Writer // SequenceExample.feature_lists = 2
-    seqExample.writeMessageField(2, featureLists)
-    seqExample.toByteArray
+    out
   }
 
   /** Extract the per-example bytes back out (the loader's
     * `parse_sequence_example` path, data_loaders.py:62-68). */
   def decode(bytes: Array[Byte]): Seq[Array[Byte]] = {
     val out = mutable.ArrayBuffer.empty[Array[Byte]]
-    val se = new Reader(bytes)
-    while (se.hasNext) {
-      val (field, wt) = se.readTag()
-      if (field == 2 && wt == ProtoWire.WtLenDelim) { // feature_lists
-        val fls = se.subReader()
-        while (fls.hasNext) {
-          val (f, w) = fls.readTag()
-          if (f == 1 && w == ProtoWire.WtLenDelim) { // map entry
-            val entry = fls.subReader()
-            var key: String = null
-            var listReader: Reader = null
-            while (entry.hasNext) {
-              val (ef, ew) = entry.readTag()
-              ef match {
-                case 1 => key = new String(entry.readBytes(), "UTF-8")
-                case 2 => listReader = entry.subReader()
-                case _ => entry.skip(ew)
+    val c = new Cursor(bytes)
+    def lenDelim(tag: Long, field: Int) =
+      (tag >>> 3).toInt == field && (tag & 7).toInt == ProtoWire.WtLenDelim
+    while (c.hasNext) {
+      val t = c.readTag()
+      if (lenDelim(t, 2)) { // feature_lists
+        val outer = c.enter()
+        while (c.hasNext) {
+          val mt = c.readTag()
+          if (lenDelim(mt, 1)) { // map entry
+            val outer = c.enter()
+            var named = false
+            var listStart, listEnd = -1
+            while (c.hasNext) {
+              val et = c.readTag()
+              (et >>> 3).toInt match {
+                case 1 =>
+                  val len = c.readLength()
+                  named = java.util.Arrays.equals(c.buf, c.pos, c.pos + len,
+                    NameBytes, 0, NameBytes.length)
+                  c.pos += len
+                case 2 =>
+                  val len = c.readLength()
+                  listStart = c.pos
+                  listEnd = c.pos + len
+                  c.pos = listEnd
+                case _ => c.skip((et & 7).toInt)
               }
             }
-            if (key == BytesFeatureName && listReader != null) {
-              while (listReader.hasNext) {
-                val (lf, lw) = listReader.readTag()
-                if (lf == 1 && lw == ProtoWire.WtLenDelim) { // Feature
-                  val feature = listReader.subReader()
-                  while (feature.hasNext) {
-                    val (ff, fw) = feature.readTag()
-                    if (ff == 1 && fw == ProtoWire.WtLenDelim) { // bytes_list
-                      val bl = feature.subReader()
-                      while (bl.hasNext) {
-                        val (bf, bw) = bl.readTag()
-                        if (bf == 1 && bw == ProtoWire.WtLenDelim)
-                          out += bl.readBytes()
-                        else bl.skip(bw)
+            if (named && listStart >= 0) {
+              val outer = c.within(listStart, listEnd)
+              while (c.hasNext) {
+                val lt = c.readTag()
+                if (lenDelim(lt, 1)) { // FeatureList.feature
+                  val outer = c.enter()
+                  while (c.hasNext) {
+                    val ft = c.readTag()
+                    if (lenDelim(ft, 1)) { // Feature.bytes_list
+                      val outer = c.enter()
+                      while (c.hasNext) {
+                        val bt = c.readTag()
+                        if (lenDelim(bt, 1)) out += c.readBytes()
+                        else c.skip((bt & 7).toInt)
                       }
-                    } else feature.skip(fw)
+                      c.exit(outer)
+                    } else c.skip((ft & 7).toInt)
                   }
-                } else listReader.skip(lw)
+                  c.exit(outer)
+                } else c.skip((lt & 7).toInt)
               }
+              c.exit(outer)
             }
-          } else fls.skip(w)
+            c.exit(outer)
+          } else c.skip((mt & 7).toInt)
         }
-      } else se.skip(wt)
+        c.exit(outer)
+      } else c.skip((t & 7).toInt)
     }
     out.toSeq
   }

@@ -1,11 +1,14 @@
 package graft.serialization
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
-import ProtoWire.{Reader, Writer}
+import ProtoWire.{fieldSize, lenDelimTag, putHeader, putVarint, varintSize, Cursor}
 
 /** Row <-> `tf.train.Example` proto bytes, driven by a Spark schema — the
   * engine's boundary codec mirroring the reference's
@@ -40,249 +43,556 @@ import ProtoWire.{Reader, Writer}
   * exactly), but a consumer restoring uint8/float16 TENSOR dtypes must
   * carry that dtype out-of-band, exactly as TFDS metadata does — a
   * representational gap of the engine's type system, not a data loss.
+  *
+  * The wire work is done by [[ExampleKernel]] over Catalyst's internal
+  * rows; this class converts external Rows to and from them. Timestamps
+  * travel as Spark's proleptic-Gregorian epoch micros, so a
+  * `java.sql.Timestamp` before 1582-10-15 (whose external value uses the
+  * hybrid Julian calendar) is written as the micros Spark stores for it.
   */
 final class TFExampleCodec(schema: StructType) extends Serializable {
 
-  private case class Leaf(path: String, dataType: DataType, elem: DataType,
-                          isArray: Boolean)
-
-  // Leaves addressed by ORDINAL path (schema-declared positions), so the
-  // codec works on schema-less GenericRows too.
-  private val leaves: Seq[(Seq[Int], Leaf)] = {
-    def walk(prefix: Seq[Int], names: Seq[String], st: StructType): Seq[(Seq[Int], Leaf)] =
-      st.fields.toSeq.zipWithIndex.flatMap { case (f, i) =>
-        val p = prefix :+ i
-        val n = names :+ f.name
-        f.dataType match {
-          case s: StructType => walk(p, n, s)
-          case ArrayType(et, _) =>
-            Seq(p -> Leaf(n.mkString("/"), f.dataType, et, isArray = true))
-          case dt => Seq(p -> Leaf(n.mkString("/"), dt, dt, isArray = false))
-        }
-      }
-    walk(Nil, Nil, schema)
-  }
-
-  // ---------------------------------------------------------------- encode
-
-  private def encodeFeature(leaf: Leaf, value: Any): Writer = {
-    val w = new Writer
-    def vals: Seq[Any] =
-      if (value == null) Seq.empty
-      else if (leaf.isArray) value.asInstanceOf[scala.collection.Seq[Any]].toSeq
-      else Seq(value)
-    leaf.elem match {
-      case StringType =>
-        val bl = new Writer
-        vals.foreach(v => bl.writeBytesField(1, v.asInstanceOf[String].getBytes("UTF-8")))
-        w.writeMessageField(1, bl) // Feature.bytes_list = 1
-      case BinaryType =>
-        val bl = new Writer
-        vals.foreach(v => bl.writeBytesField(1, v.asInstanceOf[Array[Byte]]))
-        w.writeMessageField(1, bl)
-      case FloatType =>
-        val fl = new Writer
-        fl.writePackedFloat(1, vals.map(_.asInstanceOf[Float]))
-        w.writeMessageField(2, fl) // Feature.float_list = 2
-      case DoubleType =>
-        val fl = new Writer
-        fl.writePackedFloat(1, vals.map(v => v.asInstanceOf[Double].toFloat))
-        w.writeMessageField(2, fl)
-      case ByteType | ShortType | IntegerType | LongType | BooleanType |
-          TimestampType | TimestampNTZType =>
-        val il = new Writer
-        il.writePackedInt64(1, vals.map(toInt64)) // Feature.int64_list = 3
-        w.writeMessageField(3, il)
-      case other =>
-        throw new UnsupportedOperationException(
-          s"TFExampleCodec: unsupported leaf type $other at ${leaf.path}")
-    }
-    w
-  }
-
-  private def toInt64(v: Any): Long = v match {
-    case b: Byte    => b.toLong
-    case s: Short   => s.toLong
-    case i: Int     => i.toLong
-    case l: Long    => l
-    case b: Boolean => if (b) 1L else 0L
-    case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000) % 1000
-    case t: java.time.Instant  =>
-      t.getEpochSecond * 1000000L + t.getNano / 1000
-    case t: java.time.LocalDateTime =>
-      t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000
-  }
+  private val kernel = new ExampleKernel(schema)
+  @transient private lazy val toCatalyst =
+    CatalystTypeConverters.createToCatalystConverter(schema)
+  @transient private lazy val toScala =
+    CatalystTypeConverters.createToScalaConverter(schema)
+  @transient private lazy val scratch =
+    ThreadLocal.withInitial[ExampleScratch](() => kernel.newScratch())
 
   /** Serialize one row to `tf.train.Example` bytes. */
-  def encode(row: Row): Array[Byte] = {
-    val features = new Writer // Features message
-    leaves.foreach { case (path, leaf) =>
-      val value = extract(row, path)
-      val entry = new Writer // map<string, Feature> entry
-      entry.writeStringField(1, leaf.path)
-      entry.writeMessageField(2, encodeFeature(leaf, value))
-      features.writeMessageField(1, entry)
-    }
-    val example = new Writer // Example.features = 1
-    example.writeMessageField(1, features)
-    example.toByteArray
-  }
-
-  private def extract(row: Row, path: Seq[Int]): Any = {
-    var cur: Any = row
-    path.foreach { i =>
-      cur = cur match {
-        case null   => null
-        case r: Row => if (r.isNullAt(i)) null else r.get(i)
-      }
-    }
-    cur
-  }
-
-  // ---------------------------------------------------------------- decode
-
-  private sealed trait FeatureValues
-  private case class BytesValues(v: mutable.ArrayBuffer[Array[Byte]]) extends FeatureValues
-  private case class FloatValues(v: mutable.ArrayBuffer[Float]) extends FeatureValues
-  private case class Int64Values(v: mutable.ArrayBuffer[Long]) extends FeatureValues
-
-  private def parseFeature(r: Reader): FeatureValues = {
-    var out: FeatureValues = null
-    while (r.hasNext) {
-      val (field, wt) = r.readTag()
-      field match {
-        case 1 => // bytes_list
-          val bl = r.subReader()
-          val buf = mutable.ArrayBuffer.empty[Array[Byte]]
-          while (bl.hasNext) {
-            val (f, w) = bl.readTag()
-            if (f == 1 && w == ProtoWire.WtLenDelim) buf += bl.readBytes()
-            else bl.skip(w)
-          }
-          out = BytesValues(buf)
-        case 2 => // float_list (packed or unpacked)
-          val fl = r.subReader()
-          val buf = mutable.ArrayBuffer.empty[Float]
-          while (fl.hasNext) {
-            val (f, w) = fl.readTag()
-            if (f == 1 && w == ProtoWire.WtLenDelim) {
-              val packed = fl.subReader()
-              while (packed.hasNext)
-                buf += java.lang.Float.intBitsToFloat(packed.readFixed32())
-            } else if (f == 1 && w == ProtoWire.WtFixed32) {
-              buf += java.lang.Float.intBitsToFloat(fl.readFixed32())
-            } else fl.skip(w)
-          }
-          out = FloatValues(buf)
-        case 3 => // int64_list (packed or unpacked)
-          val il = r.subReader()
-          val buf = mutable.ArrayBuffer.empty[Long]
-          while (il.hasNext) {
-            val (f, w) = il.readTag()
-            if (f == 1 && w == ProtoWire.WtLenDelim) {
-              val packed = il.subReader()
-              while (packed.hasNext) buf += packed.readVarint()
-            } else if (f == 1 && w == ProtoWire.WtVarint) {
-              buf += il.readVarint()
-            } else il.skip(w)
-          }
-          out = Int64Values(buf)
-        case _ => r.skip(wt)
-      }
-    }
-    if (out == null) BytesValues(mutable.ArrayBuffer.empty)
-    else out
-  }
-
-  private def parseExample(bytes: Array[Byte]): Map[String, FeatureValues] = {
-    val out = mutable.Map.empty[String, FeatureValues]
-    val ex = new Reader(bytes)
-    while (ex.hasNext) {
-      val (field, wt) = ex.readTag()
-      if (field == 1 && wt == ProtoWire.WtLenDelim) {
-        val features = ex.subReader()
-        while (features.hasNext) {
-          val (f, w) = features.readTag()
-          if (f == 1 && w == ProtoWire.WtLenDelim) {
-            val entry = features.subReader()
-            var key: String = null
-            var value: FeatureValues = null
-            while (entry.hasNext) {
-              val (ef, ew) = entry.readTag()
-              ef match {
-                case 1 => key = new String(entry.readBytes(), "UTF-8")
-                case 2 => value = parseFeature(entry.subReader())
-                case _ => entry.skip(ew)
-              }
-            }
-            if (key != null && value != null) out(key) = value
-          } else features.skip(w)
-        }
-      } else ex.skip(wt)
-    }
-    out.toMap
-  }
-
-  private def fromInt64(l: Long, dt: DataType): Any = dt match {
-    case ByteType    => l.toByte
-    case ShortType   => l.toShort
-    case IntegerType => l.toInt
-    case LongType    => l
-    case BooleanType => l != 0L
-    case TimestampType =>
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(l, 1000000L), Math.floorMod(l, 1000000L) * 1000))
-    case TimestampNTZType =>
-      // Spark's external row type for TimestampNTZ is LocalDateTime,
-      // not java.sql.Timestamp — returning Timestamp here would make
-      // createDataFrame on an NTZ schema fail / misconvert
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(l, 1000000L),
-        (Math.floorMod(l, 1000000L) * 1000).toInt,
-        java.time.ZoneOffset.UTC)
-    case other =>
-      throw new IllegalArgumentException(
-        s"Found a mismatch between the provided schema and an example:" +
-        s" int64 feature cannot decode to $other")
-  }
+  def encode(row: Row): Array[Byte] =
+    kernel.encode(toCatalyst(row).asInstanceOf[InternalRow], scratch.get)
 
   /** Deserialize `tf.train.Example` bytes back to a Row of [[schema]].
     * Round-trip invariant: decode(encode(row)) == row for supported types
     * (pinned by SerializationSpec, mirroring integration_test.py:52-59).
     */
-  def decode(bytes: Array[Byte]): Row = {
-    val parsed = parseExample(bytes)
-    def build(prefix: Seq[String], st: StructType): Row = Row.fromSeq(
-      st.fields.toSeq.map { f =>
-        val p = prefix :+ f.name
-        f.dataType match {
-          case s: StructType => build(p, s)
-          case dt =>
-            val key = p.mkString("/")
-            val fv = parsed.getOrElse(key,
-              throw new IllegalArgumentException(
-                s"Found a mismatch between the provided schema and an example:" +
-                s" missing feature '$key'"))
-            (dt, fv) match {
-              case (ArrayType(et, _), v) => decodeValues(v, et)
-              case (dt, v) =>
-                val vs = decodeValues(v, dt)
-                if (vs.isEmpty) null else vs.head
-            }
-        }
-      })
-    build(Nil, schema)
+  def decode(bytes: Array[Byte]): Row =
+    toScala(kernel.decode(bytes, scratch.get)).asInstanceOf[Row]
+}
+
+/** Per-thread working memory of an [[ExampleKernel]]: the struct rows of
+  * the row being encoded, per-feature payload sizes, the wire cursor and
+  * the per-feature spans of the example being decoded. One scratch
+  * belongs to one task or thread. */
+final class ExampleScratch(nLeaves: Int, nStructs: Int) {
+  val rows = new Array[InternalRow](nStructs)
+  val sizes = new Array[Long](nLeaves)
+  var repairedStrings = false
+  val cursor = new Cursor()
+  // decode: the value list of the last entry seen per feature
+  val kind = new Array[Int](nLeaves)
+  val start = new Array[Int](nLeaves)
+  val end = new Array[Int](nLeaves)
+  val count = new Array[Int](nLeaves)
+}
+
+/** Schema-driven `tf.train.Example` kernel over Catalyst's internal rows.
+  *
+  * Encode sizes every nested message first (one pass over the values),
+  * then writes each byte once into an exact-size array: no intermediate
+  * buffers and no copies of nested messages into their parents. Decode
+  * validates and counts each feature's values while scanning the wire,
+  * remembers where the last entry of each feature lies, and builds the
+  * row straight from those spans.
+  *
+  * Semantics (pinned against the earlier Row codec by WireGoldenSpec):
+  *  - features are written in schema order, one map entry each; a null
+  *    value, a null array and a null enclosing struct are an empty list;
+  *  - a scalar with an empty list decodes to null, with several values
+  *    to the first; a missing feature is a schema mismatch;
+  *  - packed and unpacked lists are both read; when a key repeats, the
+  *    last entry wins; keys the schema does not name are ignored;
+  *  - strings are written and read as well-formed UTF-8: malformed bytes
+  *    become U+FFFD exactly as `new String(bytes, UTF_8)` decodes them.
+  *
+  * The kernel is immutable; all per-row state lives in an
+  * [[ExampleScratch]].
+  */
+final class ExampleKernel(schema: StructType) extends Serializable {
+  import ExampleKernel._
+
+  // struct nodes in pre-order; node 0 is the row itself
+  private val (structParent, structOrdinal, structWidth) = {
+    val parent, ordinal, width = Array.newBuilder[Int]
+    var n = 0
+    def walk(st: StructType, p: Int, o: Int): Unit = {
+      val me = n
+      n += 1
+      parent += p; ordinal += o; width += st.length
+      st.fields.zipWithIndex.foreach {
+        case (StructField(_, s: StructType, _, _), i) => walk(s, me, i)
+        case _ => ()
+      }
+    }
+    walk(schema, -1, -1)
+    (parent.result(), ordinal.result(), width.result())
   }
 
-  private def decodeValues(fv: FeatureValues, elem: DataType): Seq[Any] =
-    (elem, fv) match {
-      case (StringType, BytesValues(v)) => v.toSeq.map(new String(_, "UTF-8"))
-      case (BinaryType, BytesValues(v)) => v.toSeq
-      case (FloatType, FloatValues(v))  => v.toSeq
-      case (DoubleType, FloatValues(v)) => v.toSeq.map(_.toDouble)
-      case (dt, Int64Values(v))         => v.toSeq.map(fromInt64(_, dt))
-      case (dt, other) =>
-        throw new IllegalArgumentException(
-          s"feature/schema type mismatch: $dt vs $other")
+  private case class Leaf(node: Int, ordinal: Int, path: String,
+                          elem: DataType, isArray: Boolean)
+
+  // feature leaves in schema order (the order features are written)
+  private val leaves: Array[Leaf] = {
+    val out = Array.newBuilder[Leaf]
+    var node = 0
+    def walk(st: StructType, prefix: String): Unit = {
+      val me = node
+      st.fields.zipWithIndex.foreach { case (f, i) =>
+        val path = prefix + f.name
+        f.dataType match {
+          case s: StructType => node += 1; walk(s, path + "/")
+          case ArrayType(et, _) => out += Leaf(me, i, path, et, isArray = true)
+          case dt => out += Leaf(me, i, path, dt, isArray = false)
+        }
+      }
     }
+    walk(schema, "")
+    out.result()
+  }
+
+  private val nLeaves = leaves.length
+  private val leafNode = leaves.map(_.node)
+  private val leafOrdinal = leaves.map(_.ordinal)
+  private val leafArray = leaves.map(_.isArray)
+  private val leafKind = leaves.map(l => kindOf(l.elem))
+  private val keyBytes = leaves.map(_.path.getBytes("UTF-8"))
+  // map entry key field, written verbatim: tag, length, UTF-8 key
+  private val keyField = keyBytes.map { k =>
+    val out = new Array[Byte](fieldSize(k.length).toInt)
+    System.arraycopy(k, 0, out, putHeader(out, 0, T1, k.length), k.length)
+    out
+  }
+  // leaves sharing a path share one feature (the first leaf's slot)
+  private val slotOf = keyBytes.map(k => keyBytes.indexWhere(java.util.Arrays.equals(_, k)))
+  private val firstUnsupported = leafKind.indexOf(Unsupported)
+
+  def newScratch(): ExampleScratch = new ExampleScratch(nLeaves, structWidth.length)
+
+  // ---------------------------------------------------------------- encode
+
+  /** Serialize one internal row of [[schema]] to `tf.train.Example` bytes. */
+  def encode(row: InternalRow, sc: ExampleScratch): Array[Byte] = {
+    if (firstUnsupported >= 0) {
+      val l = leaves(firstUnsupported)
+      throw new UnsupportedOperationException(
+        s"TFExampleCodec: unsupported leaf type ${l.elem} at ${l.path}")
+    }
+    val rows = sc.rows
+    rows(0) = row
+    var s = 1
+    while (s < rows.length) {
+      val p = rows(structParent(s))
+      val o = structOrdinal(s)
+      rows(s) = if (p == null || p.isNullAt(o)) null else p.getStruct(o, structWidth(s))
+      s += 1
+    }
+    sc.repairedStrings = false
+    var features = 0L
+    var l = 0
+    while (l < nLeaves) {
+      val r = rows(leafNode(l))
+      val o = leafOrdinal(l)
+      val size = if (r == null || r.isNullAt(o)) 0L else payloadSize(l, r, o, sc)
+      sc.sizes(l) = size
+      features += fieldSize(keyField(l).length + fieldSize(fieldSize(listSize(l, size))))
+      l += 1
+    }
+    val out = ProtoWire.allocate(fieldSize(features))
+    var p = putHeader(out, 0, T1, features) // Example.features = 1
+    l = 0
+    while (l < nLeaves) {
+      val size = sc.sizes(l)
+      val list = listSize(l, size)
+      val feature = fieldSize(list)
+      val key = keyField(l)
+      p = putHeader(out, p, T1, key.length + fieldSize(feature)) // map entry
+      System.arraycopy(key, 0, out, p, key.length)
+      p = putHeader(out, p + key.length, T2, feature) // entry value
+      p = putHeader(out, p, ListTag(leafKind(l)), list) // Feature.*_list
+      if (!isBytes(leafKind(l))) p = putHeader(out, p, T1, size) // packed
+      val r = rows(leafNode(l))
+      val o = leafOrdinal(l)
+      if (r != null && !r.isNullAt(o)) p = writePayload(l, r, o, out, p, sc)
+      l += 1
+    }
+    out
+  }
+
+  /** Bytes of a leaf's value list given its payload size: the values
+    * themselves for bytes_list, one packed field for the numeric lists. */
+  private def listSize(l: Int, size: Long): Long =
+    if (isBytes(leafKind(l))) size else fieldSize(size)
+
+  /** Payload bytes of a non-null leaf: its value, or every element. */
+  private def payloadSize(l: Int, r: InternalRow, o: Int, sc: ExampleScratch): Long = {
+    val kind = leafKind(l)
+    if (!leafArray(l)) return valueSize(kind, r, o, sc)
+    val a = r.getArray(o)
+    val n = a.numElements()
+    // float lists read a null element as 0, as the Row codec always did
+    if (isFloat(kind)) return 4L * n
+    var size = 0L
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i))
+        throw new IllegalArgumentException(
+          s"TFExampleCodec: null element in array feature '${leaves(l).path}'")
+      size += valueSize(kind, a, i, sc)
+      i += 1
+    }
+    size
+  }
+
+  private def valueSize(kind: Int, g: SpecializedGetters, i: Int, sc: ExampleScratch): Long =
+    (kind: @annotation.switch) match {
+      case Str => fieldSize(utf8Size(g.getUTF8String(i), sc))
+      case Bin => fieldSize(g.getBinary(i).length)
+      case F32 | F64 => 4L
+      case I8  => varintSize(g.getByte(i).toLong)
+      case I16 => varintSize(g.getShort(i).toLong)
+      case I32 => varintSize(g.getInt(i).toLong)
+      case I64 => varintSize(g.getLong(i))
+      case _   => 1L
+    }
+
+  private def writePayload(l: Int, r: InternalRow, o: Int, out: Array[Byte],
+                           pos: Int, sc: ExampleScratch): Int = {
+    val kind = leafKind(l)
+    if (!leafArray(l)) return writeValue(kind, r, o, out, pos, sc)
+    val a = r.getArray(o)
+    var p = pos
+    var i = 0
+    while (i < a.numElements()) {
+      p = writeValue(kind, a, i, out, p, sc)
+      i += 1
+    }
+    p
+  }
+
+  private def writeValue(kind: Int, g: SpecializedGetters, i: Int, out: Array[Byte],
+                         pos: Int, sc: ExampleScratch): Int =
+    (kind: @annotation.switch) match {
+      case Str =>
+        val s = g.getUTF8String(i)
+        val t = if (sc.repairedStrings) repaired(s) else s
+        val p = putHeader(out, pos, T1, t.numBytes)
+        t.writeToMemory(out, Platform.BYTE_ARRAY_OFFSET + p)
+        p + t.numBytes
+      case Bin =>
+        val b = g.getBinary(i)
+        val p = putHeader(out, pos, T1, b.length)
+        System.arraycopy(b, 0, out, p, b.length)
+        p + b.length
+      case F32 => putFloat(out, pos, g.getFloat(i))
+      case F64 => putFloat(out, pos, g.getDouble(i).toFloat)
+      case I8  => putVarint(out, pos, g.getByte(i).toLong)
+      case I16 => putVarint(out, pos, g.getShort(i).toLong)
+      case I32 => putVarint(out, pos, g.getInt(i).toLong)
+      case I64 => putVarint(out, pos, g.getLong(i))
+      case _   => putVarint(out, pos, if (g.getBoolean(i)) 1L else 0L)
+    }
+
+  private def utf8Size(s: UTF8String, sc: ExampleScratch): Int =
+    if (s.isValid) s.numBytes
+    else { sc.repairedStrings = true; repaired(s).numBytes }
+
+  // ---------------------------------------------------------------- decode
+
+  /** Deserialize `tf.train.Example` bytes to an internal row of [[schema]]. */
+  def decode(bytes: Array[Byte], sc: ExampleScratch): InternalRow = {
+    java.util.Arrays.fill(sc.kind, Absent)
+    val c = sc.cursor
+    c.reset(bytes)
+    var hint = 0
+    while (c.hasNext) {
+      val t = c.readTag()
+      if (isField(t, 1, ProtoWire.WtLenDelim)) { // Example.features
+        val outer = c.enter()
+        while (c.hasNext) {
+          val ft = c.readTag()
+          if (isField(ft, 1, ProtoWire.WtLenDelim)) { // map entry
+            val outer = c.enter()
+            var keyStart, keyLen = -1
+            var kind = Absent
+            var start, end, count = 0
+            while (c.hasNext) {
+              val et = c.readTag()
+              (et >>> 3).toInt match {
+                case 1 =>
+                  keyLen = c.readLength()
+                  keyStart = c.pos
+                  c.pos += keyLen
+                case 2 => // Feature: the last list of any kind wins
+                  val outer = c.enter()
+                  kind = NoList
+                  start = 0; end = 0; count = 0
+                  while (c.hasNext) {
+                    val lt = c.readTag()
+                    val field = (lt >>> 3).toInt
+                    if (field >= BytesList && field <= Int64List) {
+                      val outer = c.enter()
+                      kind = field
+                      start = c.pos
+                      end = c.limit
+                      count = countValues(c, field)
+                      c.exit(outer)
+                    } else c.skip((lt & 7).toInt)
+                  }
+                  c.exit(outer)
+                case _ => c.skip((et & 7).toInt)
+              }
+            }
+            if (keyStart >= 0 && kind != Absent) {
+              val l = findLeaf(bytes, keyStart, keyLen, hint)
+              if (l >= 0) {
+                val slot = slotOf(l)
+                sc.kind(slot) = kind
+                sc.start(slot) = start
+                sc.end(slot) = end
+                sc.count(slot) = count
+                hint = l + 1
+              }
+            }
+            c.exit(outer)
+          } else c.skip((ft & 7).toInt)
+        }
+        c.exit(outer)
+      } else c.skip((t & 7).toInt)
+    }
+    build(sc)
+  }
+
+  /** Validate one value list and count its values. */
+  private def countValues(c: Cursor, list: Int): Int = {
+    var n = 0
+    while (c.hasNext) {
+      val t = c.readTag()
+      if ((t >>> 3).toInt != 1) c.skip((t & 7).toInt)
+      else ((t & 7).toInt, list) match {
+        case (ProtoWire.WtLenDelim, BytesList) => c.skip(ProtoWire.WtLenDelim); n += 1
+        case (ProtoWire.WtLenDelim, FloatList) =>
+          val outer = c.enter()
+          val len = c.limit - c.pos
+          n += len / 4
+          c.pos += len - len % 4
+          if (c.hasNext) c.readFixed32() // fails: truncated fixed32
+          c.exit(outer)
+        case (ProtoWire.WtFixed32, FloatList) => c.readFixed32(); n += 1
+        case (ProtoWire.WtLenDelim, Int64List) =>
+          val outer = c.enter()
+          while (c.hasNext) { c.readVarint(); n += 1 }
+          c.exit(outer)
+        case (ProtoWire.WtVarint, Int64List) => c.readVarint(); n += 1
+        case (wt, _) => c.skip(wt)
+      }
+    }
+    n
+  }
+
+  private def findLeaf(buf: Array[Byte], off: Int, len: Int, hint: Int): Int = {
+    var l = if (hint < nLeaves) hint else 0
+    var tried = 0
+    while (tried < nLeaves) {
+      val k = keyBytes(l)
+      if (k.length == len && java.util.Arrays.equals(k, 0, len, buf, off, off + len))
+        return l
+      l = if (l + 1 == nLeaves) 0 else l + 1
+      tried += 1
+    }
+    -1
+  }
+
+  private def mismatch(msg: String): Nothing =
+    throw new IllegalArgumentException(
+      s"Found a mismatch between the provided schema and an example: $msg")
+
+  private def build(sc: ExampleScratch): InternalRow = {
+    val values = structWidth.map(w => new Array[Any](w))
+    var s = structWidth.length - 1
+    while (s > 0) {
+      values(structParent(s))(structOrdinal(s)) = new GenericInternalRow(values(s))
+      s -= 1
+    }
+    var l = 0
+    while (l < nLeaves) {
+      val slot = slotOf(l)
+      val found = sc.kind(slot)
+      if (found == Absent) mismatch(s"missing feature '${leaves(l).path}'")
+      val list = if (found == NoList) BytesList else found
+      val n = sc.count(slot)
+      val want = ListOf(leafKind(l))
+      values(leafNode(l))(leafOrdinal(l)) =
+        if (list == want || n == 0 && list == Int64List) {
+          if (n == 0) { if (leafArray(l)) new GenericArrayData(Array.empty[Any]) else null }
+          else {
+            val c = sc.cursor
+            c.within(sc.start(slot), sc.end(slot))
+            if (leafArray(l)) readArray(l, c, n) else readFirst(l, c)
+          }
+        } else if (list == Int64List) {
+          mismatch(s"int64 feature cannot decode to ${leaves(l).elem}")
+        } else {
+          mismatch(s"${ListName(list)} feature cannot decode to ${leaves(l).elem}")
+        }
+      l += 1
+    }
+    new GenericInternalRow(values(0))
+  }
+
+  private def string(buf: Array[Byte], off: Int, len: Int): UTF8String =
+    repaired(UTF8String.fromBytes(buf, off, len))
+
+  /** The first value of a (validated, non-empty) list. */
+  private def readFirst(l: Int, c: Cursor): Any = {
+    val kind = leafKind(l)
+    while (true) {
+      val t = c.readTag()
+      if ((t >>> 3).toInt != 1) c.skip((t & 7).toInt)
+      else ((t & 7).toInt, ListOf(kind)) match {
+        case (ProtoWire.WtLenDelim, BytesList) =>
+          val len = c.readLength()
+          return if (kind == Str) string(c.buf, c.pos, len)
+                 else java.util.Arrays.copyOfRange(c.buf, c.pos, c.pos + len)
+        case (ProtoWire.WtLenDelim, FloatList) =>
+          if (c.readLength() > 0) return fromFloat(kind, c.readFixed32())
+        case (ProtoWire.WtFixed32, FloatList) => return fromFloat(kind, c.readFixed32())
+        case (ProtoWire.WtLenDelim, Int64List) =>
+          if (c.readLength() > 0) return fromInt64(kind, c.readVarint())
+        case (ProtoWire.WtVarint, Int64List) => return fromInt64(kind, c.readVarint())
+        case (wt, _) => c.skip(wt)
+      }
+    }
+    null
+  }
+
+  /** All `n` values of a (validated) list. */
+  private def readArray(l: Int, c: Cursor, n: Int): ArrayData = {
+    val kind = leafKind(l)
+    if (isBytes(kind)) {
+      val out = new Array[Any](n)
+      var i = 0
+      while (c.hasNext) {
+        val t = c.readTag()
+        if (isField(t, 1, ProtoWire.WtLenDelim)) {
+          val len = c.readLength()
+          out(i) = if (kind == Str) string(c.buf, c.pos, len)
+                   else java.util.Arrays.copyOfRange(c.buf, c.pos, c.pos + len)
+          c.pos += len
+          i += 1
+        } else c.skip((t & 7).toInt)
+      }
+      new GenericArrayData(out)
+    } else {
+      val out = UnsafeArrayData.createFreshArray(n, ElemSize(kind))
+      var i = 0
+      def put(v: Long): Unit = {
+        (kind: @annotation.switch) match {
+          case F32  => out.setFloat(i, java.lang.Float.intBitsToFloat(v.toInt))
+          case F64  => out.setDouble(i, java.lang.Float.intBitsToFloat(v.toInt).toDouble)
+          case I8   => out.setByte(i, v.toByte)
+          case I16  => out.setShort(i, v.toShort)
+          case I32  => out.setInt(i, v.toInt)
+          case I64  => out.setLong(i, v)
+          case _    => out.setBoolean(i, v != 0L)
+        }
+        i += 1
+      }
+      val float = isFloat(kind)
+      while (c.hasNext) {
+        val t = c.readTag()
+        if ((t >>> 3).toInt != 1) c.skip((t & 7).toInt)
+        else (t & 7).toInt match {
+          case ProtoWire.WtLenDelim =>
+            val outer = c.enter()
+            if (float) while (c.hasNext) put(c.readFixed32().toLong)
+            else while (c.hasNext) put(c.readVarint())
+            c.exit(outer)
+          case ProtoWire.WtFixed32 if float => put(c.readFixed32().toLong)
+          case ProtoWire.WtVarint if !float => put(c.readVarint())
+          case wt => c.skip(wt)
+        }
+      }
+      out
+    }
+  }
+}
+
+object ExampleKernel {
+  // leaf kinds
+  private final val Str = 0
+  private final val Bin = 1
+  private final val F32 = 2
+  private final val F64 = 3
+  private final val I8 = 4
+  private final val I16 = 5
+  private final val I32 = 6
+  private final val I64 = 7
+  private final val Bool = 8
+  private final val Unsupported = 9
+
+  // Feature value lists (their field numbers in tf.train.Feature)
+  private final val BytesList = 1
+  private final val FloatList = 2
+  private final val Int64List = 3
+  private final val NoList = 0 // a Feature with no list reads as empty bytes
+  private final val Absent = -1
+
+  private val ListOf = Array(BytesList, BytesList, FloatList, FloatList,
+    Int64List, Int64List, Int64List, Int64List, Int64List, -2)
+  private val ListName = Array("", "bytes_list", "float_list", "int64_list")
+  private val ListTag = ListOf.map(f => if (f > 0) lenDelimTag(f) else 0.toByte)
+  private val ElemSize = Array(0, 0, 4, 8, 1, 2, 4, 8, 1, 0)
+
+  private val T1 = lenDelimTag(1)
+  private val T2 = lenDelimTag(2)
+
+  private def kindOf(dt: DataType): Int = dt match {
+    case StringType => Str
+    case BinaryType => Bin
+    case FloatType => F32
+    case DoubleType => F64
+    case ByteType => I8
+    case ShortType => I16
+    case IntegerType => I32
+    case LongType | TimestampType | TimestampNTZType => I64
+    case BooleanType => Bool
+    case _ => Unsupported
+  }
+
+  @inline private def isBytes(kind: Int) = kind == Str || kind == Bin
+  @inline private def isFloat(kind: Int) = kind == F32 || kind == F64
+
+  @inline private def isField(tag: Long, field: Int, wireType: Int) =
+    (tag >>> 3).toInt == field && (tag & 7).toInt == wireType
+
+  private def fromFloat(kind: Int, bits: Int): Any = {
+    val f = java.lang.Float.intBitsToFloat(bits)
+    if (kind == F32) f else f.toDouble
+  }
+
+  private def fromInt64(kind: Int, v: Long): Any = (kind: @annotation.switch) match {
+    case I8 => v.toByte
+    case I16 => v.toShort
+    case I32 => v.toInt
+    case I64 => v
+    case _ => v != 0L
+  }
+
+  private def putFloat(out: Array[Byte], pos: Int, f: Float): Int = {
+    val bits = java.lang.Float.floatToRawIntBits(f)
+    out(pos) = bits.toByte
+    out(pos + 1) = (bits >>> 8).toByte
+    out(pos + 2) = (bits >>> 16).toByte
+    out(pos + 3) = (bits >>> 24).toByte
+    pos + 4
+  }
+
+  /** `s` as a JDK decode and re-encode leaves it: malformed sequences
+    * become U+FFFD. Strings that are not well-formed UTF-8 (`isValid`
+    * is false exactly when the JDK decoder would replace something) are
+    * the only ones it changes. */
+  private def repaired(s: UTF8String): UTF8String =
+    if (s.isValid) s else UTF8String.fromString(s.toString)
 }

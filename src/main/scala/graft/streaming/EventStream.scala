@@ -544,11 +544,8 @@ object EventStream {
     val slices = sliceCounts.map(_._1)
     val p = math.max(1L, math.min(filesPerSlice.toLong,
       sliceCounts.map(_._2).min)).toInt
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val jobs = slices.zipWithIndex.map { case (sl, i) => Future {
+    graft.DriverJobs.runAll(spark.sparkContext)(
+      slices.toSeq.zipWithIndex.map { case (sl, i) => () => {
         val sliceDf = staged.filter(col("__slice") === sl)
           .select(payloadNames.map(col): _*)
         val spread = sliceDf.rdd.zipWithIndex()
@@ -558,9 +555,7 @@ object EventStream {
         spark.createDataFrame(spread, sliceDf.schema)
           .write.mode("overwrite")
           .parquet(f"$scratch/s$i%04d")
-      }}
-      Await.result(Future.sequence(jobs.toSeq), Duration.Inf)
-    }
+      }})
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val files = fs.globStatus(

@@ -10,4 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSql {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** [[expression]] converted now rather than at analysis, so an
+    * expression built on it prints its input (`f('s)`) instead of a
+    * lazy placeholder. */
+  def converted(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 }

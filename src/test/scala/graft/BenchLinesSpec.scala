@@ -31,4 +31,15 @@ class BenchLinesSpec extends AnyFunSuite with Matchers {
       Bench.priorQueries(f.toString) shouldBe results
     } finally Files.delete(f)
   }
+
+  test("mass failure: all 258 queries fail, the short line names a few and stays under 1,000 chars") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    names.size shouldBe 258
+    val lines = Bench.resultLines(names.map(_ -> 0.5).toMap, names, Map.empty, 4, "/data/sf0.1")
+    lines.last.length should be < 1000
+    val short = parse(lines.last)
+    short \ "failed_n" shouldBe JInt(258)
+    short \ "failed" shouldBe JArray(names.take(Bench.ShortFailedNames).map(JString(_)).toList)
+    (parse(lines.head) \ "failed").children.size shouldBe 258
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{functions, Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -78,5 +78,28 @@ class SizeStatsSpec extends SparkSpec {
       sum(ByteSize.exprFor(df.schema)).as("b"),
       sum(WordCount.exprFor(df.schema)).as("w")).head()
     (r.getLong(0), r.getLong(1), r.getLong(2)) shouldBe ((3L, 21L, 6L))
+  }
+
+  // The composition WordCount.expr replaced, kept as the reference model.
+  private def regexWordCount(c: Column): Column =
+    when(c.isNull, 0L).otherwise(
+      functions.size(split(regexp_replace(c, "^\\s+|\\s+$", ""), " ", -1)).cast(LongType))
+
+  test("word count kernel == regex composition, row by row, on seeded random strings") {
+    val alphabet = Seq(" ", "\t", "\n", "\u000B", "\f", "\r", "\u00A0", "\u0085",
+      "\u2028", "\u2029", "a", "bc", "é", "日本", "😀")
+    val rng = new scala.util.Random(20261017L)
+    def draw(n: Int) = Seq.fill(n)(alphabet(rng.nextInt(alphabet.size))).mkString
+    val fixed = Seq(null, "", " ", "  ", "\t\n\u000B\f\r ", "a \u0085", "a \u2028",
+      "a \u2029", " \u0085", "\u0085", "a \u0085 ", "a\r\n", "a \r\n", "\u00A0a b\u00A0")
+    val random = Seq.fill(4000)(draw(rng.nextInt(10))) ++
+      Seq.fill(1000)(draw(rng.nextInt(6)) + Seq("\u0085", "\u2028", "\u2029")(rng.nextInt(3)))
+    val rows = (fixed ++ random).toDF("s")
+      .select(col("s"), regexWordCount(col("s")), WordCount.expr(col("s")))
+      .collect()
+    rows.length shouldBe fixed.length + random.length
+    val diff = rows.filter(r => r.getLong(1) != r.getLong(2))
+      .map(r => (Option(r.getString(0)).map(_.flatMap(ch => f"\\u${ch.toInt}%04x")), r.getLong(1), r.getLong(2)))
+    diff shouldBe empty
   }
 }
