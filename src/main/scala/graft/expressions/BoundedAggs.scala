@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * compaction discipline, same orderings including the
   * `Ordering.by(-score)` negated-double and NaN placement, same
   * integer estimate arithmetic), so every declared result is
-  * bit-identical; the legacy Aggregators stay for differential specs.
+  * bit-identical; the legacy Aggregators live in test scope as the
+  * differential specs' reference.
   */
 private[graft] object BoundedAggs {
   /** Growable primitive long buffer. */
@@ -47,9 +48,9 @@ private[graft] object BoundedAggs {
   * Input: u32 hash as LONG, negative = the callers' null sentinel
   * (skipped — `count(DISTINCT)` null semantics); null input skipped
   * the same way. `emitSketch = false` finishes to the integer
-  * estimate ([[graft.functions.Kmv.KmvAggregator.finish]] arithmetic,
-  * exact below k); `true` finishes to the sorted k-smallest-distinct
-  * sketch ([[graft.functions.Kmv.KmvSketchAggregator]]). Compaction:
+  * estimate (n below k, else (k-1)*2^32 DIV h_k — the arithmetic of
+  * [[graft.functions.Kmv.estFromSketch]]); `true` finishes to the
+  * sorted k-smallest-distinct sketch. Compaction:
   * dedupe+sort+truncate to k when the buffer passes 4k — identical
   * lossless semilattice discipline, so estimates and sketches equal
   * the Aggregator's bit-for-bit. */
@@ -149,12 +150,12 @@ case class KmvAgg(child: Expression, k: Int, emitSketch: Boolean,
 }
 
 object KmvAgg {
-  /** Integer-estimate form (replaces `udaf(new Kmv.KmvAggregator(k))`). */
+  /** Integer-estimate form. */
   def estimate(c: Column, k: Int): Column =
     GraftSql.column(KmvAgg(GraftSql.expression(c), k, emitSketch = false)
       .toAggregateExpression())
 
-  /** Sketch form (replaces `udaf(new Kmv.KmvSketchAggregator(k))`). */
+  /** Sketch form. */
   def sketch(c: Column, k: Int): Column =
     GraftSql.column(KmvAgg(GraftSql.expression(c), k, emitSketch = true)
       .toAggregateExpression())
@@ -255,7 +256,7 @@ private[graft] abstract class BoundedTopKLike
         "top-k aggregate")
 }
 
-/** [[graft.functions.TopK.TopKAggregator]] native twin: bounded
+/** Native aggregate behind [[graft.functions.TopK.perQuery]]: bounded
   * per-group top-k of (neighbor_id LONG, score DOUBLE), ordered
   * score DESC then id ASC via the SAME negated-double comparator
   * (NaN scores order last, -0.0/0.0 kept distinct like
@@ -338,7 +339,7 @@ object TopKAgg {
       GraftSql.expression(score), k).toAggregateExpression())
 }
 
-/** [[graft.functions.TopK.TopTermsAggregator]] native twin:
+/** Native aggregate behind [[graft.functions.TopK.perGroupTerms]]:
   * (term STRING, score DOUBLE), score DESC then term ASC —
   * java.lang.String ordering, exactly the legacy `Ordering.by`. */
 case class TopTermsAgg(term: Expression, score: Expression, k: Int,
@@ -434,8 +435,8 @@ object TopTermsAgg {
       GraftSql.expression(score), k).toAggregateExpression())
 }
 
-/** [[graft.functions.TopK.MinKAggregator]] native twin: the k SMALLEST
-  * (sort_key, id) string pairs per group with a long payload —
+/** Native aggregate behind [[graft.functions.TopK.perGroupMinK]]: the
+  * k SMALLEST (sort_key, id) string pairs per group with a long payload —
   * lexicographic java.lang.String ordering, exactly the legacy
   * `Ordering.by((e.sort_key, e.id))`. */
 case class MinKAgg(sortKey: Expression, id: Expression,

@@ -1,9 +1,6 @@
 package graft.functions
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** K-minimum-values (KMV) distinct-count sketch — the bounded-state
@@ -50,87 +47,11 @@ object Kmv {
     when(r.isNotNull, pmod(xxhash64(r), lit(4294967296L)))
   }
 
-  /** Bounded min-k-distinct buffer with the TopK compaction discipline:
-    * appends are O(1), the buffer is deduped+sorted+truncated to k only
-    * when it grows past 4k — amortized O(log k) per row, O(k) state at
-    * every stage. Truncation is lossless for this semilattice: the k
-    * smallest distinct values of a stream are always a subset of the
-    * union of per-partition k-smallest-distinct sets. */
-  final class KmvAggregator(k: Int)
-      extends Aggregator[Long, ArrayBuffer[Long], Long] {
-    require(k > 1, "k must be > 1")
-    private val cap = 4 * k
-
-    private def compact(b: ArrayBuffer[Long]): ArrayBuffer[Long] = {
-      if (b.length > k) {
-        val kept = b.distinct.sorted.take(k)
-        b.clear()
-        b ++= kept
-      }
-      b
-    }
-
-    override def zero: ArrayBuffer[Long] = ArrayBuffer.empty[Long]
-
-    override def reduce(b: ArrayBuffer[Long], h: Long): ArrayBuffer[Long] = {
-      // negative input is the NULL sentinel (hashes live in [0, 2^32)):
-      // callers feed coalesce(u32(...), -1) so the whole profile can run
-      // as ONE multi-column agg pass — a per-column null filter would
-      // force the melted two-pass shape back
-      if (h < 0) return b
-      b += h
-      if (b.length >= cap) compact(b) else b
-    }
-
-    override def merge(a: ArrayBuffer[Long], b: ArrayBuffer[Long]): ArrayBuffer[Long] =
-      compact(a ++= b)
-
-    override def finish(b: ArrayBuffer[Long]): Long = {
-      val mins = b.distinct.sorted.take(k)
-      if (mins.length < k) mins.length.toLong
-      // (k-1)*2^32 < 2^63 for any sane k; h_k >= 1 guarded (h_k = 0
-      // needs all of the k smallest hashes to collide into 0)
-      else ((k - 1).toLong * 4294967296L) / math.max(mins(k - 1), 1L)
-    }
-
-    override def bufferEncoder: Encoder[ArrayBuffer[Long]] =
-      implicitly[Encoder[ArrayBuffer[Long]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-
-    override def outputEncoder: Encoder[Long] =
-      implicitly[Encoder[Long]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-  }
-
-  /** [[KmvAggregator]] that finishes to the SKETCH itself (the sorted
-    * k smallest distinct hashes) instead of the estimate — the
-    * mergeable-summary form: sketches of two corpus versions (or two
-    * shards, or yesterday and today) union by "k smallest distinct of
-    * the concatenation" WITHOUT rescanning either input, which is what
-    * makes incremental / federated profiling possible at 100 TB. */
-  final class KmvSketchAggregator(k: Int)
-      extends Aggregator[Long, ArrayBuffer[Long], Seq[Long]] {
-    private val inner = new KmvAggregator(k)
-    override def zero: ArrayBuffer[Long] = inner.zero
-    override def reduce(b: ArrayBuffer[Long], h: Long): ArrayBuffer[Long] =
-      inner.reduce(b, h)
-    override def merge(a: ArrayBuffer[Long], b: ArrayBuffer[Long]): ArrayBuffer[Long] =
-      inner.merge(a, b)
-    override def finish(b: ArrayBuffer[Long]): Seq[Long] =
-      b.distinct.sorted.take(k).toSeq
-    override def bufferEncoder: Encoder[ArrayBuffer[Long]] =
-      implicitly[Encoder[ArrayBuffer[Long]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-    override def outputEncoder: Encoder[Seq[Long]] =
-      implicitly[Encoder[Seq[Long]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-  }
-
   /** KMV estimate from a finished sketch ATTRIBUTE (named column,
     * sorted ascending, <= k entries): exact below k, else
-    * (k-1)*2^32 div h_k — the same integer arithmetic as
-    * [[KmvAggregator.finish]], expressed over columns so MERGED
-    * sketches can be estimated in-plan. */
+    * (k-1)*2^32 div h_k — the same integer arithmetic as the
+    * [[graft.expressions.KmvAgg]] estimate, expressed over columns so
+    * MERGED sketches can be estimated in-plan. */
   def estFromSketch(sketchName: String, k: Int): Column =
     when(size(col(sketchName)) < k, size(col(sketchName)).cast("long"))
       .otherwise(

@@ -1,9 +1,6 @@
 package graft.functions
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bounded per-group top-k as a real AGGREGATE, not a window.
@@ -11,8 +8,9 @@ import org.apache.spark.sql.functions._
   * `Window.partitionBy(query_id) + row_number + filter(rank <= k)` is the
   * obvious formulation, but it shuffles EVERY scored candidate to one
   * reducer per query and sorts |candidates| rows there — at 100 TB the
-  * per-query reducer sees the whole corpus. An Aggregator is planned as
-  * an ObjectHashAggregate with map-side partial aggregation: each input
+  * per-query reducer sees the whole corpus. The bounded aggregates of
+  * [[graft.expressions.BoundedAggs]] are planned as an
+  * ObjectHashAggregate with map-side partial aggregation: each input
   * partition reduces its candidates to at most k locally, the shuffle
   * carries one <=k-entry buffer per (partition, query), and the final
   * merge is a k-way list merge — bounded state everywhere.
@@ -23,99 +21,14 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
-  /** One scored candidate. */
-  final case class Entry(neighbor_id: Long, score: Double)
-
-  private val ord: Ordering[Entry] =
-    Ordering.by((e: Entry) => (-e.score, e.neighbor_id))
-
-  /** Size-k buffer aggregator. The buffer is kept UNSORTED between
-    * compactions and compacted (sort + truncate to k) only when it grows
-    * past 4k — amortized O(log k) per row without a per-row heap
-    * allocation, O(k) state at every stage. */
-  final class TopKAggregator(k: Int)
-      extends Aggregator[Entry, ArrayBuffer[Entry], Seq[Entry]] {
-    require(k > 0, "k must be positive")
-    private val cap = 4 * k
-
-    private def compact(b: ArrayBuffer[Entry]): ArrayBuffer[Entry] = {
-      if (b.length > k) {
-        val kept = b.sorted(ord).take(k)
-        b.clear()
-        b ++= kept
-      }
-      b
-    }
-
-    override def zero: ArrayBuffer[Entry] = ArrayBuffer.empty[Entry]
-
-    override def reduce(b: ArrayBuffer[Entry], e: Entry): ArrayBuffer[Entry] = {
-      b += e
-      if (b.length >= cap) compact(b) else b
-    }
-
-    override def merge(a: ArrayBuffer[Entry], b: ArrayBuffer[Entry]): ArrayBuffer[Entry] =
-      compact(a ++= b)
-
-    override def finish(b: ArrayBuffer[Entry]): Seq[Entry] =
-      b.sorted(ord).take(k).toSeq
-
-    override def bufferEncoder: Encoder[ArrayBuffer[Entry]] =
-      implicitly[Encoder[ArrayBuffer[Entry]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-
-    override def outputEncoder: Encoder[Seq[Entry]] =
-      implicitly[Encoder[Seq[Entry]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-  }
-
-  /** String-keyed twin of [[TopKAggregator]] (terms instead of neighbor
-    * ids) — same compaction discipline, ties by key ASC. */
-  final case class TermEntry(term: String, score: Double)
-
-  private val termOrd: Ordering[TermEntry] =
-    Ordering.by((e: TermEntry) => (-e.score, e.term))
-
-  final class TopTermsAggregator(k: Int)
-      extends Aggregator[TermEntry, ArrayBuffer[TermEntry], Seq[TermEntry]] {
-    require(k > 0, "k must be positive")
-    private val cap = 4 * k
-
-    private def compact(b: ArrayBuffer[TermEntry]): ArrayBuffer[TermEntry] = {
-      if (b.length > k) {
-        val kept = b.sorted(termOrd).take(k)
-        b.clear()
-        b ++= kept
-      }
-      b
-    }
-
-    override def zero: ArrayBuffer[TermEntry] = ArrayBuffer.empty[TermEntry]
-    override def reduce(b: ArrayBuffer[TermEntry], e: TermEntry): ArrayBuffer[TermEntry] = {
-      b += e
-      if (b.length >= cap) compact(b) else b
-    }
-    override def merge(a: ArrayBuffer[TermEntry], b: ArrayBuffer[TermEntry]): ArrayBuffer[TermEntry] =
-      compact(a ++= b)
-    override def finish(b: ArrayBuffer[TermEntry]): Seq[TermEntry] =
-      b.sorted(termOrd).take(k).toSeq
-    override def bufferEncoder: Encoder[ArrayBuffer[TermEntry]] =
-      implicitly[Encoder[ArrayBuffer[TermEntry]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-    override def outputEncoder: Encoder[Seq[TermEntry]] =
-      implicitly[Encoder[Seq[TermEntry]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-  }
-
   /** Top-k (term, score) rows per group with map-side partials — same
     * shape as [[perQuery]] for string-keyed payloads. Input columns:
     * group, term, score; output (group, term, rank, score). */
   def perGroupTerms(scored: DataFrame, k: Int): DataFrame = {
     scored
       .groupBy(col("group"))
-      // native typed-imperative twin (r11): same ordering/compaction
-      // bit-for-bit, no per-row encoder boxing (VERDICT item 3); the
-      // Aggregator stays for the differential spec
+      // native typed-imperative aggregate: no per-row encoder boxing;
+      // a test-scope Aggregator is its differential reference
       .agg(graft.expressions.TopTermsAgg(
         col("term"), col("score"), k).as("top"))
       .select(col("group"), posexplode(col("top")))
@@ -126,54 +39,13 @@ object TopK {
         col("col.score").as("score"))
   }
 
-  /** Ascending string-key twin: the k entries with the SMALLEST
-    * (sort_key, id) per group — the roster-draw shape (rank by a hash,
-    * keep the first k) without a per-group window sort. Same bounded
-    * compaction discipline as [[TopKAggregator]]: map-side partials
-    * reduce each input partition to <= k entries before the shuffle, so
-    * a million-group roster never sorts |roster| rows per round. */
-  final case class KeyedEntry(sort_key: String, id: String, payload: Long)
-
-  private val keyedOrd: Ordering[KeyedEntry] =
-    Ordering.by((e: KeyedEntry) => (e.sort_key, e.id))
-
-  final class MinKAggregator(k: Int)
-      extends Aggregator[KeyedEntry, ArrayBuffer[KeyedEntry], Seq[KeyedEntry]] {
-    require(k > 0, "k must be positive")
-    private val cap = 4 * k
-
-    private def compact(b: ArrayBuffer[KeyedEntry]): ArrayBuffer[KeyedEntry] = {
-      if (b.length > k) {
-        val kept = b.sorted(keyedOrd).take(k)
-        b.clear()
-        b ++= kept
-      }
-      b
-    }
-
-    override def zero: ArrayBuffer[KeyedEntry] = ArrayBuffer.empty[KeyedEntry]
-    override def reduce(b: ArrayBuffer[KeyedEntry], e: KeyedEntry): ArrayBuffer[KeyedEntry] = {
-      b += e
-      if (b.length >= cap) compact(b) else b
-    }
-    override def merge(a: ArrayBuffer[KeyedEntry], b: ArrayBuffer[KeyedEntry]): ArrayBuffer[KeyedEntry] =
-      compact(a ++= b)
-    override def finish(b: ArrayBuffer[KeyedEntry]): Seq[KeyedEntry] =
-      b.sorted(keyedOrd).take(k).toSeq
-    override def bufferEncoder: Encoder[ArrayBuffer[KeyedEntry]] =
-      implicitly[Encoder[ArrayBuffer[KeyedEntry]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-    override def outputEncoder: Encoder[Seq[KeyedEntry]] =
-      implicitly[Encoder[Seq[KeyedEntry]]](
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder())
-  }
-
   /** The k smallest (sort_key, id) rows per group, with the payload
-    * carried through. Input columns: group, sort_key, id, payload;
-    * output (group, id, payload).
+    * carried through: the roster-draw shape (rank by a hash, keep the
+    * first k) without a per-group window sort. Input columns: group,
+    * sort_key, id, payload; output (group, id, payload).
     *
     * STRING-TYPED CONTRACT: sort_key and id ride through String
-    * fields of [[KeyedEntry]], so ordering is lexicographic and the
+    * fields of [[graft.expressions.MinKAgg]], so ordering is lexicographic and the
     * output id column is a string. A numeric id would be silently
     * upcast and re-ordered — callers must pre-format numeric keys
     * (zero-pad) or cast explicitly; enforced below rather than

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the ranking operates on the GROUP ROSTER (one row per
   * group), never corpus rows, and the per-round draw is a BOUNDED
-  * min-k aggregation ([[graft.functions.TopK.MinKAggregator]]) rather
+  * min-k aggregation ([[graft.functions.TopK.perGroupMinK]]) rather
   * than a window sort — map-side partials reduce each partition's
   * roster slice to <= cohortSize candidates before the shuffle, so a
   * 15M-group roster x many rounds never sorts |roster| rows per round.

@@ -28,11 +28,6 @@ object Multimodal {
       media_id: Long, kind: String, n_bytes: Long,
       lane_sums: Array[Long], features: Array[Float])
 
-  /** Media metadata as a typed struct column (what a real ingest would
-    * parse from container headers). */
-  def metaStruct(width: Column, height: Column, format: Column): Column =
-    struct(width.as("width"), height.as("height"), format.as("format"))
-
   /** Synthesize a deterministic media table from any table with an id
     * and a text column — stands in for real binary ingestion so the
     * plumbing is exercised end-to-end on driver data. */

@@ -470,7 +470,7 @@ object Splits {
     * that window shuffles and fully sorts every row of every domain on
     * one reducer per domain (the skewed-domain worst case is the whole
     * point of capping). Instead the `cap` smallest keys per source are
-    * found with the bounded [[graft.functions.TopK.TopTermsAggregator]]
+    * found with the bounded [[graft.functions.TopK.perGroupTerms]]
     * (map-side partials, O(cap) state at every stage), reduced to ONE
     * threshold key per source, broadcast back, and applied as a filter —
     * the corpus itself never sorts and never shuffles. Drop the

@@ -1,6 +1,6 @@
 package graft.serialization
 
-import java.io.{DataInputStream, EOFException, InputStream, OutputStream}
+import java.io.{DataInputStream, EOFException, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32C
 
@@ -54,10 +54,5 @@ object TFRecordCodec {
     val b = new Array[Byte](4)
     in.readFully(b)
     ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt
-  }
-
-  def readAll(in: InputStream): Iterator[Array[Byte]] = {
-    val din = new DataInputStream(in)
-    Iterator.continually(readRecord(din)).takeWhile(_.isDefined).map(_.get)
   }
 }

@@ -5,8 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -89,12 +87,9 @@ object AvroIO {
   def write(df: DataFrame, dir: String, prefix: String = "part"): Seq[String] = {
     val sparkSchema = df.schema
     val avroJson = toAvroSchema(sparkSchema).toString
-    df.rdd.mapPartitionsWithIndex { (idx, it) =>
+    HadoopFiles.writeEach(df.sparkSession, df.rdd, dir)(
+      idx => f"$prefix-$idx%05d.avro") { (out, it) =>
       val schema = new Schema.Parser().parse(avroJson)
-      val conf = new Configuration()
-      val path = new Path(dir, f"$prefix-$idx%05d.avro")
-      val fs = path.getFileSystem(conf)
-      val out = fs.create(path, true)
       val writer = new DataFileWriter(
         new GenericDatumWriter[GenericRecord](schema))
       writer.create(schema, out) // takes ownership of `out`
@@ -109,51 +104,26 @@ object AvroIO {
           writer.append(rec)
         }
       } finally writer.close()
-      Iterator.single(path.toString)
-    }.collect().toSeq
+    }
   }
 
   /** Read Avro container files matching `pattern` with a caller-pinned
     * Spark schema (reader-schema projection: fields are fetched by
     * NAME from each record, so column order and pruning follow
     * `sparkSchema`, not the file). One read task per file; records are
-    * streamed lazily and the stream closes on exhaustion. */
+    * streamed lazily. */
   def read(spark: SparkSession, pattern: String,
            sparkSchema: StructType): DataFrame = {
-    val conf = new Configuration()
-    val globPath = new Path(pattern)
-    val fs = globPath.getFileSystem(conf)
-    val files = Option(fs.globStatus(globPath)).getOrElse(Array.empty)
-      .filter(_.isFile).map(_.getPath.toString).sorted.toSeq
+    val files = HadoopFiles.glob(spark, pattern)
     require(files.nonEmpty, s"AvroIO.read: no files match $pattern")
-    val fieldTypes = sparkSchema.fields.map(f => (f.name, f.dataType))
-    val rows = spark.sparkContext
-      .parallelize(files, files.length)
-      .mapPartitions { it =>
-        val conf = new Configuration()
-        it.flatMap { f =>
-          val p = new Path(f)
-          val in = p.getFileSystem(conf).open(p)
-          val reader = new DataFileStream(
-            in, new GenericDatumReader[GenericRecord]())
-          new Iterator[Row] {
-            private def advance(): Boolean = {
-              val more = reader.hasNext
-              if (!more) reader.close()
-              more
-            }
-            private var more = advance()
-            override def hasNext: Boolean = more
-            override def next(): Row = {
-              val rec = reader.next()
-              more = advance()
-              Row.fromSeq(fieldTypes.toSeq.map { case (n, dt) =>
-                fromAvroValue(rec.get(n), dt)
-              })
-            }
-          }
-        }
+    val fieldTypes = sparkSchema.fields.map(f => (f.name, f.dataType)).toSeq
+    val rows = HadoopFiles.readEach(spark, files) { (_, in) =>
+      new DataFileStream(in, new GenericDatumReader[GenericRecord]())
+    } { (_, reader) =>
+      (reader: java.util.Iterator[GenericRecord]).asScala.map { rec =>
+        Row.fromSeq(fieldTypes.map { case (n, dt) => fromAvroValue(rec.get(n), dt) })
       }
+    }
     spark.createDataFrame(rows, sparkSchema)
   }
 }

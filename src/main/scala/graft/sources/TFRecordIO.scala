@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.DataInputStream
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.serialization.TFRecordCodec
@@ -25,71 +26,36 @@ object TFRecordIO {
   def write(records: Dataset[Array[Byte]], dir: String,
             prefix: String = "groups.tfrecord", suffix: String = ""): Seq[String] = {
     val numShards = records.rdd.getNumPartitions
-    val written = records.rdd.mapPartitionsWithIndex { (idx, it) =>
-      val conf = new Configuration()
-      val shard = f"$prefix-$idx%05d-of-$numShards%05d$suffix"
-      val path = new Path(dir, shard)
-      val fs = path.getFileSystem(conf)
-      val raw = fs.create(path, true)
-      val out: java.io.OutputStream =
-        if (shard.endsWith(".gz")) new java.util.zip.GZIPOutputStream(raw)
-        else raw
+    val gzip = suffix.endsWith(".gz")
+    HadoopFiles.writeEach(records.sparkSession, records.rdd, dir)(
+      idx => f"$prefix-$idx%05d-of-$numShards%05d$suffix") { (raw, it) =>
+      val out = if (gzip) new GZIPOutputStream(raw) else raw
       try it.foreach(TFRecordCodec.writeRecord(out, _))
       finally out.close()
-      Iterator.single(path.toString)
-    }.collect()
-    written.toSeq
+    }
   }
 
   /** Read TFRecord files matching `pattern` into a DataFrame of
-    * (file string, record binary), one read task per file.
-    * `shuffleSeed` reproduces the loader's seeded file-order shuffle
-    * (tf.data list_files(shuffle, seed), data_loaders.py:98-100). */
+    * (file string, record binary), one read task per file, one record
+    * in memory at a time (a record can be a ~2GB packed group).
+    * Decompression is AUTO by file name, mirroring the write side (and
+    * tf.data's compression_type="GZIP"). `shuffleSeed` reproduces the
+    * loader's seeded file-order shuffle (tf.data list_files(shuffle,
+    * seed), data_loaders.py:98-100). */
   def read(spark: SparkSession, pattern: String,
            shuffleSeed: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val conf = new Configuration()
-    val globPath = new Path(pattern)
-    val fs = globPath.getFileSystem(conf)
-    val sortedFiles = Option(fs.globStatus(globPath)).getOrElse(Array.empty)
-      .filter(_.isFile).map(_.getPath.toString).sorted.toSeq
+    val sortedFiles = HadoopFiles.glob(spark, pattern)
     val files = shuffleSeed match {
       case Some(seed) => new scala.util.Random(seed).shuffle(sortedFiles)
       case None => sortedFiles
     }
     require(files.nonEmpty, s"TFRecordIO.read: no files match $pattern")
-    spark.sparkContext
-      .parallelize(files, files.length)
-      .mapPartitions { it =>
-        val conf = new Configuration()
-        it.flatMap { f =>
-          val p = new Path(f)
-          val in = p.getFileSystem(conf).open(p)
-          // lazy record iterator, one record in memory at a time (a
-          // record can be a ~2GB packed group — eager materialization
-          // would need the whole shard on heap); the stream closes on
-          // exhaustion. AUTO decompression by file name, mirroring the
-          // write side (and tf.data's compression_type="GZIP").
-          val base: java.io.InputStream =
-            if (f.endsWith(".gz")) new java.util.zip.GZIPInputStream(in)
-            else in
-          val din = new java.io.DataInputStream(base)
-          new Iterator[(String, Array[Byte])] {
-            private var nextRec = advance()
-            private def advance(): Option[Array[Byte]] = {
-              val r = TFRecordCodec.readRecord(din)
-              if (r.isEmpty) din.close()
-              r
-            }
-            override def hasNext: Boolean = nextRec.isDefined
-            override def next(): (String, Array[Byte]) = {
-              val r = nextRec.get
-              nextRec = advance()
-              (f, r)
-            }
-          }
-        }
-      }
-      .toDF("file", "record")
+    HadoopFiles.readEach(spark, files) { (f, in) =>
+      new DataInputStream(if (f.endsWith(".gz")) new GZIPInputStream(in) else in)
+    } { (f, din) =>
+      Iterator.continually(TFRecordCodec.readRecord(din))
+        .takeWhile(_.isDefined).map(r => (f, r.get))
+    }.toDF("file", "record")
   }
 }

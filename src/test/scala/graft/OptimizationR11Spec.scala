@@ -115,8 +115,8 @@ class OptimizationR11Spec extends SparkSpec {
         col("l_partkey").cast("string").as("l_comment"))
       .repartition(7) // force partial buffers + merges
     for (k <- Seq(2, 16, 1024)) {
-      val legacyEst = udaf(new graft.functions.Kmv.KmvAggregator(k))
-      val legacySk = udaf(new graft.functions.Kmv.KmvSketchAggregator(k))
+      val legacyEst = udaf(new LegacyAggregators.KmvAggregator(k))
+      val legacySk = udaf(new LegacyAggregators.KmvSketchAggregator(k))
       val h = coalesce(
         graft.functions.Kmv.u32(col("l_comment")), lit(-1L))
       val oldDf = li.groupBy(col("l_suppkey") % 5)
@@ -159,7 +159,7 @@ class OptimizationR11Spec extends SparkSpec {
     }
     val df = rows.toDF("query_id", "neighbor_id", "score").repartition(9)
     for (k <- Seq(1, 3, 10)) {
-      val legacy = udaf(new graft.functions.TopK.TopKAggregator(k))
+      val legacy = udaf(new LegacyAggregators.TopKAggregator(k))
       val oldDf = df.groupBy(col("query_id"))
         .agg(legacy(col("neighbor_id"), col("score")).as("top"))
       val newDf = df.groupBy(col("query_id"))
@@ -177,7 +177,7 @@ class OptimizationR11Spec extends SparkSpec {
       val t = Seq("alpha", "βeta", "", "Ünïco", "zz", "a b")(i % 6) + (i % 17)
       (i % 7, t, (i % 23).toDouble / 3.0)
     }.toDF("group", "term", "score").repartition(5)
-    val legacyT = udaf(new graft.functions.TopK.TopTermsAggregator(4))
+    val legacyT = udaf(new LegacyAggregators.TopTermsAggregator(4))
     val oT = terms.groupBy(col("group"))
       .agg(legacyT(col("term"), col("score")).as("top"))
     val nT = terms.groupBy(col("group"))
@@ -190,7 +190,7 @@ class OptimizationR11Spec extends SparkSpec {
     val keyed = (1 to 2000).map { i =>
       (i % 5, f"k${i % 97}%03d", f"id${i % 31}%04d", i.toLong)
     }.toDF("group", "sort_key", "id", "payload").repartition(5)
-    val legacyM = udaf(new graft.functions.TopK.MinKAggregator(6))
+    val legacyM = udaf(new LegacyAggregators.MinKAggregator(6))
     val oM = keyed.groupBy(col("group"))
       .agg(legacyM(col("sort_key"), col("id"), col("payload")).as("top"))
     val nM = keyed.groupBy(col("group"))
@@ -211,7 +211,7 @@ class OptimizationR11Spec extends SparkSpec {
       ((i % 1500).toLong, (i % 37).toLong, ((i * 31) % 101).toDouble / 7.0)
     }
     val df = rows.toDF("query_id", "neighbor_id", "score").repartition(3)
-    val legacy = udaf(new graft.functions.TopK.TopKAggregator(5))
+    val legacy = udaf(new LegacyAggregators.TopKAggregator(5))
     val o = df.groupBy(col("query_id"))
       .agg(legacy(col("neighbor_id"), col("score")).as("top"))
       .collect().sortBy(_.getLong(0)).map(_.toString).toSeq

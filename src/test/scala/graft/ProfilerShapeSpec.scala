@@ -86,7 +86,7 @@ class ProfilerShapeSpec extends SparkSpec {
   }
 
   test("per-group KMV: exact below k, within estimator error above") {
-    val kmv = udaf(new graft.functions.Kmv.KmvAggregator(16))
+    val kmv = udaf(new LegacyAggregators.KmvAggregator(16))
     val tiny = Seq(("a", 1L), ("a", 2L), ("a", 2L), ("b", 9L))
       .toDF("g", "u")
     val t = tiny.groupBy($"g")
