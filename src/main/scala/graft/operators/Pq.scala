@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TopK, Vectors}
+import graft.expressions.{AdcLookup, PqDistances}
+import graft.functions.Vectors
 
 /** Product quantization (PQ) — the embedding-compression layer of a
   * 100 TB similarity index (Jegou et al. 2011, the IVF-PQ family every
@@ -42,23 +43,21 @@ import graft.functions.{TopK, Vectors}
 object Pq {
 
   /** books(j)(i) = lanes of centroid i in subspace j (m x k x d/m). */
-  type Codebook = IndexedSeq[IndexedSeq[IndexedSeq[Double]]]
+  type Books[T] = IndexedSeq[IndexedSeq[IndexedSeq[T]]]
+  type Codebook = Books[Double]
 
   /** Anchored codebook: subvectors of the first `k` corpus rows by id.
     * Bounded driver collect (k rows), `limit` short-circuits the scan. */
   def fitAnchored(corpus: DataFrame, id: Column, vec: Column,
                   m: Int, k: Int): Codebook = {
-    val rows = corpus
-      .select(id.cast("long").as("id"), vec.cast("array<double>").as("v"))
-      .orderBy(col("id")).limit(k)
-      .collect()
-    require(rows.length == k, s"corpus has fewer than $k rows to anchor on")
-    val vs = rows.map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
+    val vs = Similarity.firstById(corpus, id, vec, k)
+    require(vs.length == k, s"corpus has fewer than $k rows to anchor on")
     val d = vs.head.length
     require(d % m == 0, s"dim $d is not divisible by m=$m subspaces")
     val sub = d / m
     IndexedSeq.tabulate(m) { j =>
-      IndexedSeq.tabulate(k)(i => vs(i).slice(j * sub, (j + 1) * sub))
+      IndexedSeq.tabulate(k)(i =>
+        vs(i).slice(j * sub, (j + 1) * sub).toIndexedSeq)
     }
   }
 
@@ -71,8 +70,8 @@ object Pq {
     * left-to-right — the same IEEE op sequence as the oracle's
     * `list_sum`, so every distance double is bit-identical
     * cross-engine. */
-  // kept (unused in queries since the r11 PqLut swap) for the
-  // battery-vs-loop differential spec, like Dedup.shinglesHof
+  // kept (unused in queries since the LUT became one PqDistances loop)
+  // for the battery-vs-loop differential spec, like Dedup.shinglesHof
   private[graft] def subDists(vec: Column, j: Int,
                               cents: IndexedSeq[IndexedSeq[Double]]): Seq[Column] = {
     val sub = cents.head.length
@@ -84,7 +83,7 @@ object Pq {
     }
   }
 
-  /** Every flat subspace-major layout (PqBest batteries, AdcLookup
+  /** Every flat subspace-major layout (PqDistances inputs, AdcLookup
     * LUTs) assumes a UNIFORM per-subspace centroid count: a ragged
     * codebook whose total happens to divide evenly would silently
     * read the wrong entries (ADVICE r9). The in-repo fitters always
@@ -95,54 +94,46 @@ object Pq {
       s"ragged codebook (per-subspace centroid counts ${ks.mkString(",")}) " +
         "— flat subspace-major layouts need uniform k")
 
-  /** Flat PqBest inputs for a FLOAT codebook: the subspace-major lane
-    * array ((j*k + i)*sub + l) and the per-centroid squared norms
-    * (j*k + i, folded left-to-right like [[subDists]]' `cc`). */
-  private def flatBooks(books: Codebook): (Column, Column) = {
+  /** How a codebook's lanes reach the [[PqDistances]] kernel: as
+    * doubles, and whether the vector is floor(x*2^20)-quantized first.
+    * The lane type decides both. An [[IntCodebook]] holds quantized
+    * integers, so its vectors are quantized too and every distance is
+    * an exact integer (ranked unrounded, emitted as BIGINT); a
+    * [[Codebook]] keeps the raw lanes and rounds distances to 6 places. */
+  private[graft] sealed abstract class Lanes[T](val quantized: Boolean,
+                                                val toDouble: T => Double)
+  private[graft] object Lanes {
+    implicit val float: Lanes[Double] = new Lanes[Double](false, x => x) {}
+    implicit val int: Lanes[Long] = new Lanes[Long](true, _.toDouble) {}
+  }
+
+  /** One [[PqDistances]] output over a codebook of either lane type,
+    * passed flat: the subspace-major lane array ((j*k + i)*sub + l) and
+    * the per-centroid squared norms (j*k + i, folded left-to-right like
+    * [[subDists]]' `cc`; integer lanes convert to exact-integer-valued
+    * doubles first, like [[subDistsInt]]). */
+  private[graft] def pqDistances[T](vec: Column, books: Books[T],
+                                    out: PqDistances.Out)(
+      implicit lanes: Lanes[T]): Column = {
     requireUniform(books.map(_.length))
-    (typedLit(books.flatMap(_.flatMap(identity))),
-      typedLit(books.flatMap(_.map(_.foldLeft(0.0)((a, x) => a + x * x)))))
+    val flat = books.map(_.map(_.map(lanes.toDouble)))
+    PqDistances(vec.cast("array<double>"),
+      typedLit(flat.flatMap(_.flatMap(identity))),
+      typedLit(flat.flatMap(_.map(_.foldLeft(0.0)((a, x) => a + x * x)))),
+      books.length, lanes.quantized, out)
   }
 
-  /** [[flatBooks]] for an INT codebook — lanes and norms converted to
-    * exact-integer-valued doubles exactly like [[subDistsInt]]. */
-  private def flatBooksInt(books: IntCodebook): (Column, Column) = {
-    requireUniform(books.map(_.length))
-    (typedLit(books.flatMap(_.flatMap(_.map(_.toDouble)))),
-      typedLit(books.flatMap(_.map(
-        _.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)))))
-  }
+  /** Per-subspace nearest-centroid codes as ONE generated loop — replaces
+    * the m*k `least(struct(dist, i))` expression battery (same
+    * distances, same ties-to-lower-index argmin, bit-identical codes;
+    * the AdcLookup lesson applied to the encode side). */
+  private def codesOf[T: Lanes](vec: Column, books: Books[T]): Column =
+    pqDistances(vec, books, PqDistances.Codes)
 
-  /** Per-subspace nearest-centroid codes as ONE generated loop
-    * ([[graft.expressions.PqBest]]) — replaces the m*k
-    * `least(struct(dist, i))` expression battery (same distances, same
-    * ties-to-lower-index argmin, bit-identical codes; the AdcLookup
-    * lesson applied to the encode side). */
-  private def codesOf(vec: Column, books: Codebook): Column = {
-    val (fb, fc) = flatBooks(books)
-    graft.expressions.PqBest.codes(vec.cast("array<double>"), fb, fc,
-      books.length, quantize = false)
-  }
-
-  private def codesOfInt(vec: Column, books: IntCodebook): Column = {
-    val (fb, fc) = flatBooksInt(books)
-    graft.expressions.PqBest.codes(vec.cast("array<double>"), fb, fc,
-      books.length, quantize = true)
-  }
-
-  /** Query-side flat ADC LUT as one generated loop (r11 PqLut; the
-    * subDists battery twin, bit-identical per entry). */
-  private[graft] def lutOf(vec: Column, books: Codebook): Column = {
-    val (fb, fc) = flatBooks(books)
-    graft.expressions.PqLut(vec.cast("array<double>"), fb, fc,
-      books.length, quantize = false)
-  }
-
-  private[graft] def lutOfInt(vec: Column, books: IntCodebook): Column = {
-    val (fb, fc) = flatBooksInt(books)
-    graft.expressions.PqLut(vec.cast("array<double>"), fb, fc,
-      books.length, quantize = true)
-  }
+  /** Query-side flat ADC LUT as one generated loop (the subDists
+    * battery twin, bit-identical per entry). */
+  private[graft] def lutOf[T: Lanes](vec: Column, books: Books[T]): Column =
+    pqDistances(vec, books, PqDistances.Table)
 
   /** (vec_id, codes array<int>, qerrs array<double>): per-subspace
     * nearest-centroid index and round-6 quantization error. One
@@ -155,29 +146,17 @@ object Pq {
   def encode(df: DataFrame, id: Column, vec: Column,
              books: Codebook): DataFrame = {
     val m = books.length
-    val (fb, fc) = flatBooks(books)
     df.select(id.as("vec_id"),
         codesOf(vec, books).as("codes"),
-        graft.expressions.PqBest.dists(vec.cast("array<double>"), fb, fc,
-          m, quantize = false).as("__d"))
+        pqDistances(vec, books, PqDistances.Best).as("__d"))
       .select(col("vec_id"), col("codes"),
         array((0 until m).map(j =>
           round(element_at(col("__d"), j + 1), 6)): _*).as("qerrs"))
   }
 
-  /** Lane quantization (floor(x * 2^20), kept as exact-integer-valued
-    * DOUBLEs so the codegen'd dot kernels apply) — the
-    * Similarity.quantized idiom; <2^-20 perturbation, and every
-    * arithmetic result below stays under 2^53, so int-codebook
-    * distances are BIT-EXACT across engines (DuckDB computes the same
-    * values in BIGINT). */
-  private def quantizedD(vec: Column): Column =
-    transform(vec, x => floor(x.cast("double") * lit(1048576.0))
-      .cast("double"))
-
   /** Integer codebook: books(j)(i) = quantized lanes of centroid i of
     * subspace j. */
-  type IntCodebook = IndexedSeq[IndexedSeq[IndexedSeq[Long]]]
+  type IntCodebook = Books[Long]
 
   /** LLOYD-REFINED integer codebook — [[fitAnchored]]'s k-means
     * upgrade, [[graft.operators.Similarity.lloydRefinedCentroids]]'
@@ -194,42 +173,13 @@ object Pq {
   def fitLloydQuantized(corpus: DataFrame, id: Column, vec: Column,
                         m: Int, k: Int, trainN: Int = 256,
                         iters: Int = 2): IntCodebook = {
-    val rows = corpus
-      .select(id.cast("long").as("id"), vec.cast("array<double>").as("v"))
-      .orderBy(col("id")).limit(trainN)
-      .collect()
-    require(rows.length >= k, s"train slice has ${rows.length} rows < k=$k")
-    val train: Array[Array[Long]] = rows.map(
-      _.getSeq[Double](1).map(d => math.floor(d * 1048576.0).toLong).toArray)
+    val train = Similarity.quantizedFirstById(corpus, id, vec, trainN)
+    require(train.length >= k, s"train slice has ${train.length} rows < k=$k")
     val d = train(0).length
     require(d % m == 0, s"dim $d is not divisible by m=$m subspaces")
     val sub = d / m
     IndexedSeq.tabulate(m) { j =>
-      val tj = train.map(t => t.slice(j * sub, (j + 1) * sub))
-      var cents = Array.tabulate(k)(i => tj(i).clone())
-      (0 until iters).foreach { _ =>
-        val sums = Array.fill(k)(new Array[Long](sub))
-        val counts = new Array[Long](k)
-        tj.foreach { t =>
-          var best = 0; var bestD = Long.MaxValue; var c = 0
-          while (c < k) {
-            var dd = 0L; var i = 0
-            while (i < sub) { val x = t(i) - cents(c)(i); dd += x * x; i += 1 }
-            if (dd < bestD) { bestD = dd; best = c } // ties to lower
-            c += 1
-          }
-          counts(best) += 1
-          var i = 0
-          while (i < sub) { sums(best)(i) += t(i); i += 1 }
-        }
-        cents = Array.tabulate(k) { c =>
-          if (counts(c) > 0)
-            Array.tabulate(sub)(i =>
-              math.floor(sums(c)(i).toDouble / counts(c)).toLong)
-          else cents(c)
-        }
-      }
-      cents.map(_.toIndexedSeq).toIndexedSeq
+      Similarity.lloydInt(train.map(_.slice(j * sub, (j + 1) * sub)), k, iters)
     }
   }
 
@@ -237,18 +187,10 @@ object Pq {
     * integer centroids, same decomposition — every term an
     * exact-integer-valued double (< 2^48), so the value equals
     * DuckDB's direct BIGINT Σ(x-c)^2 bit-for-bit. */
-  // kept for the battery-vs-loop differential spec (r11 PqLut swap)
+  // kept for the battery-vs-loop differential spec, like subDists
   private[graft] def subDistsInt(vec: Column, j: Int,
-                                 cents: IndexedSeq[IndexedSeq[Long]]): Seq[Column] = {
-    val sub = cents.head.length
-    val xs = slice(quantizedD(vec), j * sub + 1, sub)
-    val xx = Vectors.dot(xs, xs)
-    cents.map { c =>
-      val cc = c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-      (xx - lit(2.0) * Vectors.dot(xs, typedLit(c.map(_.toDouble)))) +
-        lit(cc)
-    }
-  }
+                                 cents: IndexedSeq[IndexedSeq[Long]]): Seq[Column] =
+    subDists(Similarity.quantized(vec), j, cents.map(_.map(_.toDouble)))
 
   /** [[ivfAdcTopK]] with the Lloyd-refined INT codebook: same plan
     * shape (one corpus scan fusing cell + code batteries, one cell
@@ -258,43 +200,29 @@ object Pq {
                     books: IntCodebook, k: Int, qId: Column, qVec: Column,
                     cId: Column, cVec: Column,
                     nCells: Int = 16, nProbe: Int = 4,
-                    excludeSelf: Boolean = true): DataFrame = {
-    val m = books.length
-    requireUniform(books.map(_.length))
-    val cents = Similarity.anchoredUnitCentroids(corpus, cId, cVec, nCells)
-    val codes = corpus
-      .select(
-        coalesce(element_at(Similarity.cellsByAffinity(cents, cVec), 1),
-          lit(-1)).as("cell"),
-        cId.as("neighbor_id"),
-        codesOfInt(cVec, books).as("codes"))
-      .repartition(col("cell"))
-    // FLAT subspace-major LUT (j*k + code): the nested element_at
-    // chain's two indirections per subspace per PAIR were the measured
-    // ADC hot-path limiter (STRESS_HYBRID_r09.txt); AdcLookup is one
-    // codegen'd primitive loop over this layout. The LUT itself is ONE
-    // generated loop too (r11: PqLut replaces the m*k subDistsInt
-    // expression forest — same IEEE op order, bit-identical doubles)
-    val lut = lutOfInt(qVec, books)
-    val q = queries
-      .select(qId.as("query_id"), lut.as("lut"),
-        slice(Similarity.cellsByAffinity(cents, qVec), 1, nProbe)
-          .as("cells"))
-      .repartition(col("query_id"))
-      .select(col("query_id"), col("lut"), explode(col("cells")).as("cell"))
-      .select(col("query_id"), col("lut"),
-        coalesce(col("cell"), lit(-2)).as("cell"))
-    val adc =
-      graft.expressions.AdcLookup(col("codes"), col("lut")) // same
-      // ascending-j summation order as the chain it replaces
-    val scored0 = codes.join(broadcast(q), Seq("cell"))
-      .withColumn("score", -adc) // exact integers: no rounding needed
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    TopK.perQuery(scored, k)
+                    excludeSelf: Boolean = true): DataFrame =
+    ivfAdc(queries, corpus, books, k, qId, qVec, cId, cVec, nCells, nProbe,
+      excludeSelf)
+
+  /** The ranking tail of every ADC search: score each joined (codes,
+    * lut) pair by [[AdcLookup]] — one codegen'd primitive loop over the
+    * FLAT subspace-major LUT (j*k + code), summing in the same
+    * ascending-j order as the nested element_at chain it replaced, whose
+    * two indirections per subspace per PAIR were the measured ADC
+    * hot-path limiter (STRESS_HYBRID_r09.txt) — and keep the top k per
+    * query as (query_id, neighbor_id, rank, adc_dist). The score is the
+    * NEGATED distance, so TopK's score-DESC contract ranks ascending
+    * distance and ties fall to its neighbor_id-ASC tiebreak; float
+    * distances negate AFTER rounding (exact), int distances are exact
+    * integers already (no rounding, emitted as BIGINT). */
+  private def adcTopKOf(joined: DataFrame, lanes: Lanes[_], k: Int,
+                        excludeSelf: Boolean): DataFrame = {
+    val adc = AdcLookup(col("codes"), col("lut"))
+    val dist = -col("score")
+    Similarity.rankTopK(joined, if (lanes.quantized) -adc else -round(adc, 6),
+        k, excludeSelf)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
-        (-col("score")).cast("long").as("adc_dist"))
+        (if (lanes.quantized) dist.cast("long") else dist).as("adc_dist"))
   }
 
   /** ADC top-k: rank `corpusCodes` (neighbor_id, codes — the
@@ -307,17 +235,11 @@ object Pq {
   def adcTopK(queries: DataFrame, corpusCodes: DataFrame, books: Codebook,
               k: Int, qId: Column, qVec: Column,
               excludeSelf: Boolean = true): DataFrame = {
-    val m = books.length
-    requireUniform(books.map(_.length))
-    // flat subspace-major LUT as ONE generated loop (r11 PqLut; was an
-    // m*k subDists expression forest — bit-identical doubles)
-    val lut = lutOf(qVec, books)
+    // flat subspace-major LUT as ONE generated loop (was an m*k subDists
+    // expression forest — bit-identical doubles)
     val q = queries
-      .select(qId.as("query_id"), lut.as("lut"))
+      .select(qId.as("query_id"), lutOf(qVec, books).as("lut"))
       .repartition(col("query_id"))
-    val adc =
-      graft.expressions.AdcLookup(col("codes"), col("lut")) // same
-      // ascending-j summation order as the chain it replaces
     // exchange barrier between the caller's encode battery and the
     // join: fused, the per-corpus-row code battery + the per-PAIR ADC
     // sum share one generated method, which blows Janino's limit and
@@ -326,16 +248,7 @@ object Pq {
     // the 8-byte code rows, exactly what PQ compressed them for.
     // (ivfAdcTopK's repartition(cell) is this same barrier.)
     val codes = corpusCodes.repartition(col("neighbor_id"))
-    // negate AFTER rounding (exact) so TopK's score-DESC contract ranks
-    // ascending distance; ties fall to its neighbor_id-ASC tiebreak
-    val scored0 = codes.crossJoin(broadcast(q))
-      .withColumn("score", -round(adc, 6))
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        (-col("score")).as("adc_dist"))
+    adcTopKOf(codes.crossJoin(broadcast(q)), Lanes.float, k, excludeSelf)
   }
 
   /** IVF-PQ — the full large-scale ANN index (Jegou et al. 2011): the
@@ -362,8 +275,17 @@ object Pq {
                  k: Int, qId: Column, qVec: Column,
                  cId: Column, cVec: Column,
                  nCells: Int = 16, nProbe: Int = 4,
-                 excludeSelf: Boolean = true): DataFrame = {
-    val m = books.length
+                 excludeSelf: Boolean = true): DataFrame =
+    ivfAdc(queries, corpus, books, k, qId, qVec, cId, cVec, nCells, nProbe,
+      excludeSelf)
+
+  /** The body of [[ivfAdcTopK]] and [[ivfAdcTopKInt]]; the lane type
+    * picks the quantization, the rounding and the adc_dist type. */
+  private def ivfAdc[T](queries: DataFrame, corpus: DataFrame,
+                        books: Books[T], k: Int,
+                        qId: Column, qVec: Column, cId: Column, cVec: Column,
+                        nCells: Int, nProbe: Int, excludeSelf: Boolean)(
+      implicit lanes: Lanes[T]): DataFrame = {
     requireUniform(books.map(_.length))
     val cents = Similarity.anchoredUnitCentroids(corpus, cId, cVec, nCells)
     val codes = corpus
@@ -373,34 +295,19 @@ object Pq {
         cId.as("neighbor_id"),
         codesOf(cVec, books).as("codes"))
       .repartition(col("cell"))
-    // flat subspace-major LUT as ONE generated loop (r11 PqLut; was an
-    // m*k subDists expression forest — bit-identical doubles)
-    val lut = lutOf(qVec, books)
     // exchange barrier before the explode: CollapseProject would
-    // otherwise re-inline the LUT battery per probe row (the adcTopK
+    // otherwise re-inline the LUT loop per probe row (the adcTopK
     // rationale); explode AFTER it so each probe row reuses the
     // materialized lut attribute
     val q = queries
-      .select(qId.as("query_id"), lut.as("lut"),
+      .select(qId.as("query_id"), lutOf(qVec, books).as("lut"),
         slice(Similarity.cellsByAffinity(cents, qVec), 1, nProbe)
           .as("cells"))
       .repartition(col("query_id"))
       .select(col("query_id"), col("lut"), explode(col("cells")).as("cell"))
       .select(col("query_id"), col("lut"),
         coalesce(col("cell"), lit(-2)).as("cell"))
-    val adc =
-      graft.expressions.AdcLookup(col("codes"), col("lut")) // same
-      // ascending-j summation order as the chain it replaces
-    // negate AFTER rounding (exact) so TopK's score-DESC contract ranks
-    // ascending distance; ties fall to its neighbor_id-ASC tiebreak
-    val scored0 = codes.join(broadcast(q), Seq("cell"))
-      .withColumn("score", -round(adc, 6))
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        (-col("score")).as("adc_dist"))
+    adcTopKOf(codes.join(broadcast(q), Seq("cell")), lanes, k, excludeSelf)
   }
 
   /** [[encode]] over the INT codebook: (vec_id, codes array<int>) —
@@ -408,7 +315,7 @@ object Pq {
     * the maintenance path keeps valid. */
   def encodeInt(df: DataFrame, id: Column, vec: Column,
                 books: IntCodebook): DataFrame =
-    df.select(id.as("vec_id"), codesOfInt(vec, books).as("codes"))
+    df.select(id.as("vec_id"), codesOf(vec, books).as("codes"))
 
   /** Integer centroid drift between two codebooks, per subspace:
     * sum over centroids of squared L2 between old and new lanes —
@@ -450,7 +357,7 @@ object Pq {
         vec.as("__v"))
       .unionByName(delta.select(lit("delta").as("side"), id.as("vec_id"),
         vec.as("__v")))
-    // both code batteries as ONE generated loop each (PqBest), staged
+    // both code batteries as ONE generated loop each, staged
     // as array attributes below the Generate — the per-subspace change
     // flags then compare two ints instead of re-evaluating 2*k
     // distance expressions per subspace
@@ -459,8 +366,8 @@ object Pq {
         .cast("long")
     }
     val drift = codebookDrift(oldBooks, newBooks)
-    all.select(col("side"), codesOfInt(col("__v"), oldBooks).as("__oc"),
-        codesOfInt(col("__v"), newBooks).as("__nc"))
+    all.select(col("side"), codesOf(col("__v"), oldBooks).as("__oc"),
+        codesOf(col("__v"), newBooks).as("__nc"))
       .select(col("side"), posexplode(array(changed: _*)))
       .groupBy(col("pos").cast("int").as("subspace"))
       .agg(

@@ -72,16 +72,21 @@ object Relational {
 
   /** Semi/anti join coverage: per nation, customers with vs without
     * orders. Broadcast the distinct custkey set of orders?  No — it can
-    * be large; Catalyst picks the join side. */
+    * be large; Catalyst picks the join side. The per-nation counts (one
+    * row per nation at most) are the broadcast build side of the two
+    * nation-preserving outer joins: a left outer join can only build
+    * its right side. */
   def customerOrderCoverage(s: SparkSession, dir: String): DataFrame = {
     val c = Tables(s, dir, "customer")
     val o = Tables(s, dir, "orders")
     val n = Tables(s, dir, "nation")
-    val withOrders = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-      .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_with_orders"))
-    val withoutOrders = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-      .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_without_orders"))
-    broadcast(n)
+    val withOrders = broadcast(
+      c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
+        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_with_orders")))
+    val withoutOrders = broadcast(
+      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
+        .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_without_orders")))
+    n
       .join(withOrders, n("n_nationkey") === withOrders("c_nationkey"), "left")
       .drop("c_nationkey")
       .join(withoutOrders, n("n_nationkey") === withoutOrders("c_nationkey"), "left")

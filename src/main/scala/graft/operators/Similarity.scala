@@ -26,26 +26,63 @@ import graft.functions.{TopK, Vectors}
 object Similarity {
 
   /** Rows with the vector replaced by its L2-normalized double form,
-    * materialized via an exchange so downstream joins reuse it. The norm
-    * is projected into its own column first — referencing norm(vec)
-    * inside the per-element lambda would re-evaluate the O(dim) dot
-    * product per element (O(dim^2) per row; transform lambdas get no
-    * common-subexpression elimination). */
+    * materialized via an exchange so downstream joins reuse it: `df`
+    * projected to `front`, the raw vector `__v`, its norm `__nrm`, then
+    * `back` (the extra key columns: cell, bucket, probe cells);
+    * repartitioned on `key`; then projected to `out` of the normalized
+    * vector. The norm is projected into its own column first —
+    * referencing norm(vec) inside the per-element lambda would
+    * re-evaluate the O(dim) dot product per element (O(dim^2) per row;
+    * transform lambdas get no common-subexpression elimination) — and
+    * the exchange sits BETWEEN norm and the division: post-shuffle the
+    * lambda reads __nrm as a materialized attribute (CollapseProject
+    * would otherwise inline the norm into the lambda body ->
+    * per-element). */
+  private def unitBehindExchange(df: DataFrame, front: Seq[Column],
+                                 vec: Column, back: Seq[Column],
+                                 key: String)(
+      out: Column => Seq[Column]): DataFrame =
+    df.select(front ++ Seq(vec.as("__v"), Vectors.norm(vec).as("__nrm")) ++
+        back: _*)
+      .repartition(col(key))
+      .select(out(
+        transform(col("__v"), x => x.cast("double") / col("__nrm"))): _*)
+
   /** Public (id, vec) projection of the normalized form for composition
     * operators (e.g. [[Dedup.semanticKeepCentral]]). */
   def normalizedVectors(df: DataFrame, id: Column, vec: Column): DataFrame =
     normalized(df, id, vec, "id", "vec")
 
+  // `vec` is projected on its own first, so the norm reads it as an
+  // attribute: a non-cheap vec (a caller's slice) is evaluated once
   private def normalized(df: DataFrame, id: Column, vec: Column,
                          idName: String, vecName: String): DataFrame =
-    df.select(id.as(idName), vec.as("__v"))
-      .withColumn("__nrm", Vectors.norm(col("__v")))
-      // exchange BETWEEN norm and the division: post-shuffle the lambda
-      // reads __nrm as a materialized attribute (CollapseProject would
-      // otherwise inline the norm into the lambda body -> per-element)
-      .repartition(col(idName))
-      .select(col(idName),
-        transform(col("__v"), x => x.cast("double") / col("__nrm")).as(vecName))
+    unitBehindExchange(df.select(id.as(idName), vec.as("__v")),
+      Seq(col(idName)), col("__v"), Nil, idName)(
+      v => Seq(col(idName), v.as(vecName)))
+
+  /** The ranking tail every search path shares: `score` the joined
+    * (query_id, neighbor_id) candidates, drop self-matches when asked,
+    * and keep the top k per query (score desc, neighbor id) as
+    * (query_id, neighbor_id, rank, score). A bounded top-k AGGREGATE,
+    * not a window: map-side partials reduce each partition to <=k rows
+    * per query before the shuffle (a row_number window would drag every
+    * scored candidate onto one reducer per query — |corpus| rows on a
+    * single task at scale). */
+  private[operators] def rankTopK(joined: DataFrame, score: Column, k: Int,
+                                  excludeSelf: Boolean): DataFrame = {
+    val scored = joined.withColumn("score", score)
+    TopK.perQuery(
+      if (excludeSelf) scored.filter(col("query_id") =!= col("neighbor_id"))
+      else scored, k)
+  }
+
+  /** [[rankTopK]] by exact cosine: the round-6 dot of the normalized
+    * query (`qv`) and corpus (`cv`) vectors. */
+  private def cosineTopK(joined: DataFrame, k: Int,
+                         excludeSelf: Boolean): DataFrame =
+    rankTopK(joined, round(Vectors.dot(col("qv"), col("cv")), 6), k,
+      excludeSelf)
 
   /** Exact top-k neighbors per query row. `queries` must be small enough
     * to broadcast (it is hinted); ranking is (cosine desc, neighbor id)
@@ -55,18 +92,7 @@ object Similarity {
                      excludeSelf: Boolean = true): DataFrame = {
     val q = normalized(queries, qId, qVec, "query_id", "qv")
     val c = normalized(corpus, cId, cVec, "neighbor_id", "cv")
-    val joined = c.crossJoin(broadcast(q))
-    val scored0 = joined.withColumn("score",
-      round(Vectors.dot(col("qv"), col("cv")), 6))
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    // bounded top-k AGGREGATE, not a window: map-side partials reduce
-    // each partition to <=k rows per query before the shuffle (a
-    // row_number window would drag every scored candidate onto one
-    // reducer per query — |corpus| rows on a single task at scale)
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+    cosineTopK(c.crossJoin(broadcast(q)), k, excludeSelf)
   }
 
   /** All corpus pairs with cosine >= threshold (embedding near-dup
@@ -136,7 +162,7 @@ object Similarity {
     * sign(dot(v/|v|,h))), and the <2^-20 quantization perturbation only
     * nudges near-zero sign tests — candidates are verified by exact
     * cosine regardless. */
-  private def quantized(vec: Column): Column =
+  private[operators] def quantized(vec: Column): Column =
     transform(vec, x => floor(x.cast("double") * lit(1048576.0)).cast("double"))
 
   /** Shared tail of the LSH pair topology: `v` is the normalized corpus
@@ -147,25 +173,38 @@ object Similarity {
   private def pairsFromBuckets(v: DataFrame, bucketedRaw: DataFrame,
                                threshold: Double,
                                maxBucketSize: Int): DataFrame = {
-    val hot = bucketedRaw.groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") > maxBucketSize)
-      .select(col("tbl"), col("bucket"))
-    val bucketed = bucketedRaw
-      .join(broadcast(hot), Seq("tbl", "bucket"), "left_anti")
+    val bucketed = bucketedRaw.join(
+      broadcast(hotBuckets(bucketedRaw, maxBucketSize)), Seq("tbl", "bucket"),
+      "left_anti")
     val candidates = bucketed.as("a")
       .join(bucketed.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
+    verifiedPairs(candidates, v, threshold)
+  }
+
+  /** The (tbl, bucket) keys holding more than `maxBucketSize` rows —
+    * GUARANTEED tiny by pigeonhole (see [[cosinePairsLsh]]). */
+  private def hotBuckets(bucketed: DataFrame,
+                         maxBucketSize: Int): DataFrame =
+    bucketed.groupBy(col("tbl"), col("bucket"))
+      .agg(count(lit(1)).as("__bsz"))
+      .filter(col("__bsz") > maxBucketSize)
+      .select(col("tbl"), col("bucket"))
+
+  /** Candidate (id_a, id_b) pairs verified by exact cosine against the
+    * normalized corpus `v` (id, vec): (id_a, id_b, cosine) with
+    * cosine >= threshold. */
+  private def verifiedPairs(candidates: DataFrame, v: DataFrame,
+                            threshold: Double): DataFrame =
     candidates
       .join(v.select(col("id").as("id_a"), col("vec").as("va")), "id_a")
       .join(v.select(col("id").as("id_b"), col("vec").as("vb")), "id_b")
       .withColumn("cosine", round(Vectors.dot(col("va"), col("vb")), 6))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
-  }
 
   /** [[cosinePairsLsh]] with md5-anchored sign planes and integer
     * quantization: the same bucketed linear topology, but every step —
@@ -178,14 +217,23 @@ object Similarity {
                              nTables: Int = 8,
                              maxBucketSize: Int = 100000): DataFrame = {
     val v = normalized(df, idCol, vecCol, "id", "vec")
-    val bucketArr = array((0 until nTables).map { t =>
+    val bucketedRaw =
+      anchoredCodes(df, idCol, vecCol, dim, nBits, nTables, "bucket")
+        .repartition(col("tbl"), col("bucket"))
+    pairsFromBuckets(v, bucketedRaw, threshold, maxBucketSize)
+  }
+
+  /** (id, tbl, `code`): one row per table of the md5-anchored sign code
+    * of the quantized raw vector, every table's code computed in one
+    * projection. */
+  private def anchoredCodes(df: DataFrame, idCol: Column, vecCol: Column,
+                            dim: Int, nBits: Int, nTables: Int,
+                            code: String): DataFrame = {
+    val codeArr = array((0 until nTables).map { t =>
       bucketExpr(col("__q"), md5SignPlanes(nBits, dim, t))
     }: _*)
-    val bucketedRaw = df
-      .select(idCol.as("id"), quantized(vecCol).as("__q"))
-      .select(col("id"), posexplode(bucketArr).as(Seq("tbl", "bucket")))
-      .repartition(col("tbl"), col("bucket"))
-    pairsFromBuckets(v, bucketedRaw, threshold, maxBucketSize)
+    df.select(idCol.as("id"), quantized(vecCol).as("__q"))
+      .select(col("id"), posexplode(codeArr).as(Seq("tbl", code)))
   }
 
   /** MULTI-PROBE anchored LSH pairs (Lv et al., VLDB 2007, adapted
@@ -223,9 +271,6 @@ object Similarity {
     require(probeHamming == 1 || probeHamming == 2,
       s"probeHamming must be 1 or 2, got $probeHamming")
     val v = normalized(df, idCol, vecCol, "id", "vec")
-    val codeArr = array((0 until nTables).map { t =>
-      bucketExpr(col("__q"), md5SignPlanes(nBits, dim, t))
-    }: _*)
     // one projection computes every table's code; the probe generator
     // then emits home + the one-bit flips (+ two-bit flips at
     // probeHamming=2 — nBits(nBits-1)/2 extra SHORT rows per vector,
@@ -235,8 +280,7 @@ object Similarity {
     // probe fan-out itself is cheap XOR literals recomputed on the
     // fly — materializing the exploded probe stream filled the disk
     // at 1M vectors x H2 (137 probes/vector/table) for no gain.
-    val coded = df.select(idCol.as("id"), quantized(vecCol).as("__q"))
-      .select(col("id"), posexplode(codeArr).as(Seq("tbl", "code")))
+    val coded = anchoredCodes(df, idCol, vecCol, dim, nBits, nTables, "code")
       .localCheckpoint()
     val flips1 = (0 until nBits).map(1L << _)
     val flips2 =
@@ -250,10 +294,7 @@ object Similarity {
     val index = coded
       .select(col("id"), col("tbl"), col("code").as("bucket"))
       .repartition(col("tbl"), col("bucket"))
-    val hot = index.groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("__bsz"))
-      .filter(col("__bsz") > maxBucketSize)
-      .select(col("tbl"), col("bucket"))
+    val hot = hotBuckets(index, maxBucketSize)
     val idxOk = index.join(broadcast(hot), Seq("tbl", "bucket"),
       "left_anti")
     val prbOk = coded
@@ -266,12 +307,7 @@ object Similarity {
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    candidates
-      .join(v.select(col("id").as("id_a"), col("vec").as("va")), "id_a")
-      .join(v.select(col("id").as("id_b"), col("vec").as("vb")), "id_b")
-      .withColumn("cosine", round(Vectors.dot(col("va"), col("vb")), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    verifiedPairs(candidates, v, threshold)
   }
 
   /** Approximate embedding NEAR-DUP pairs at scale: corpus rows bucket
@@ -368,27 +404,6 @@ object Similarity {
     cents.map(_.toIndexedSeq).toIndexedSeq
   }
 
-  /** IVF (inverted-file) approximate top-k: k-means centroids partition
-    * the corpus into cells; each query scores only the `nProbe` cells
-    * whose centroids are closest — the classic large-corpus ANN layout
-    * (centroids are tiny and broadcast; the corpus is scanned once to
-    * assign cells, then queries touch ~nProbe/nCells of it).
-    *
-    * Plan-shape notes (each was a measured multi-second trap at driver
-    * scale and a corpus-pass multiplier at 100 TB):
-    *  - Cells are ranked from the RAW vector: argsort of dot(v, c) equals
-    *    argsort of cosine (||v|| is a positive per-row constant), so the
-    *    normalization lambda stays OUT of the cell expression. With
-    *    normalized input, the join's inferred isnotnull(cell) predicate
-    *    was pushed into the parquet scan with the whole expression
-    *    inlined — including the norm re-expanded PER ELEMENT of the
-    *    divide lambda (dim^2 * nCells multiplies per row, interpreted).
-    *  - The join key is wrapped non-nullable (coalesce) so no isnotnull
-    *    filter is inferred at all.
-    *  - One corpus exchange total: assignment happens scan-side (nCells
-    *    cheap codegen dots), the shuffle is on cell, and the normalized
-    *    vector is materialized post-exchange where the norm is a plain
-    *    attribute. */
   /** A built IVF index: the cell-partitioned normalized corpus plus the
     * centroids that define the cells. `assigned` has columns
     * (cell, neighbor_id, cv) and is partitioned by cell — persist it
@@ -442,43 +457,33 @@ object Similarity {
   def ivfQuery(index: IvfIndex, queries: DataFrame, k: Int,
                qId: Column, qVec: Column,
                excludeSelf: Boolean = true): DataFrame = {
-    val q = queries
-      .select(qId.as("query_id"), qVec.as("__v"),
-        Vectors.norm(qVec).as("__nrm"),
-        slice(cellsByAffinity(index.centroids, qVec), 1, index.nProbe)
-          .as("cells"))
-      // exchange barrier: without it the two projections collapse and
-      // the norm re-inlines per element of the divide lambda
-      .repartition(col("query_id"))
-      .select(col("query_id"),
-        transform(col("__v"), x => x.cast("double") / col("__nrm")).as("qv"),
-        explode(col("cells")).as("cell"))
+    val q = probeRows(queries, qId, qVec,
+      slice(cellsByAffinity(index.centroids, qVec), 1, index.nProbe))
+    cosineTopK(index.assigned.join(broadcast(q), Seq("cell")), k, excludeSelf)
+  }
+
+  /** Query rows for a cell-probed search: (query_id, qv, cell), one row
+    * per probed cell of `cells`, the normalized vector materialized
+    * behind the query_id exchange (without it the projections collapse
+    * and the norm re-inlines per element of the divide lambda). The
+    * cell is wrapped non-nullable so the join infers no isnotnull. */
+  private def probeRows(queries: DataFrame, qId: Column, qVec: Column,
+                        cells: Column): DataFrame =
+    unitBehindExchange(queries, Seq(qId.as("query_id")), qVec,
+        Seq(cells.as("cells")), "query_id")(
+        v => Seq(col("query_id"), v.as("qv"), explode(col("cells")).as("cell")))
       .select(col("query_id"), col("qv"),
         coalesce(col("cell"), lit(-2)).as("cell"))
-    val joined = index.assigned.join(broadcast(q), Seq("cell"))
-    val scored0 = joined.withColumn("score",
-      round(Vectors.dot(col("qv"), col("cv")), 6))
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    // bounded top-k aggregate (see bruteForceTopK note)
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
-  }
 
   /** Cell assignment shared by the k-means and anchored index builds:
     * one corpus pass, cells ranked from the RAW vector (see [[ivfTopK]]
     * plan notes), one shuffle on cell, normalization post-exchange. */
   private def assignCells(corpus: DataFrame, cId: Column, cVec: Column,
                           cents: IndexedSeq[IndexedSeq[Double]]): DataFrame =
-    corpus
-      .select(cId.as("neighbor_id"), cVec.as("__v"),
-        Vectors.norm(cVec).as("__nrm"),
-        coalesce(element_at(cellsByAffinity(cents, cVec), 1), lit(-1))
-          .as("cell"))
-      .repartition(col("cell"))
-      .select(col("cell"), col("neighbor_id"),
-        transform(col("__v"), x => x.cast("double") / col("__nrm")).as("cv"))
+    unitBehindExchange(corpus, Seq(cId.as("neighbor_id")), cVec,
+      Seq(coalesce(element_at(cellsByAffinity(cents, cVec), 1), lit(-1))
+        .as("cell")), "cell")(
+      v => Seq(col("cell"), col("neighbor_id"), v.as("cv")))
 
   /** IVF with a DETERMINISTIC seed-vector coarse quantizer: centroids
     * are the first `nCells` corpus vectors by id (L2-normalized), so
@@ -496,25 +501,71 @@ object Similarity {
     ivfQuery(index, queries, k, qId, qVec, excludeSelf)
   }
 
-  /** L2-normalized anchor centroids: the first `n` corpus vectors by
-    * id. Bounded driver collect (`limit` short-circuits the scan);
-    * shared by the anchored IVF build and [[Pq.ivfAdcTopK]]. */
-  private[operators] def anchoredUnitCentroids(
-      corpus: DataFrame, id: Column, vec: Column,
-      n: Int): IndexedSeq[IndexedSeq[Double]] = {
-    val cents = corpus
+  /** The vectors of the first `n` corpus rows by id, as doubles — the
+    * deterministic slice every SQL-replayable quantizer anchors or
+    * trains on. Bounded driver collect (`limit` short-circuits the
+    * scan). */
+  private[operators] def firstById(corpus: DataFrame, id: Column,
+                                   vec: Column, n: Int): Array[Array[Double]] =
+    corpus
       .select(id.cast("long").as("id"), vec.cast("array<double>").as("v"))
       .orderBy(col("id")).limit(n)
       .collect()
-      .map { r =>
-        val v = r.getSeq[Double](1).toArray
-        val nrm = math.sqrt(v.map(x => x * x).sum)
-        (if (nrm == 0.0) v else v.map(_ / nrm)).toIndexedSeq
-      }.toIndexedSeq
+      .map(_.getSeq[Double](1).toArray)
+
+  /** L2-normalized anchor centroids: the first `n` corpus vectors by
+    * id; shared by the anchored IVF build and [[Pq.ivfAdcTopK]]. */
+  private[operators] def anchoredUnitCentroids(
+      corpus: DataFrame, id: Column, vec: Column,
+      n: Int): IndexedSeq[IndexedSeq[Double]] = {
+    val cents = firstById(corpus, id, vec, n).map { v =>
+      val nrm = math.sqrt(v.map(x => x * x).sum)
+      (if (nrm == 0.0) v else v.map(_ / nrm)).toIndexedSeq
+    }.toIndexedSeq
     require(cents.length == n,
       s"corpus has fewer than $n rows to seed cells from")
     cents
   }
+
+  /** Integer Lloyd k-means over quantized lanes: init = the first `k`
+    * train rows, then `iters` rounds of BIGINT squared-L2 assignment
+    * (strict <, so ties go to the lower centroid) and floor-mean update
+    * (an empty centroid keeps its previous position). */
+  private[operators] def lloydInt(train: Array[Array[Long]], k: Int,
+                                  iters: Int): IndexedSeq[IndexedSeq[Long]] = {
+    val dim = train(0).length
+    var cents = Array.tabulate(k)(i => train(i).clone())
+    (0 until iters).foreach { _ =>
+      val sums = Array.fill(k)(new Array[Long](dim))
+      val counts = new Array[Long](k)
+      train.foreach { t =>
+        var best = 0; var bestD = Long.MaxValue; var c = 0
+        while (c < k) {
+          var d = 0L; var j = 0
+          while (j < dim) { val x = t(j) - cents(c)(j); d += x * x; j += 1 }
+          if (d < bestD) { bestD = d; best = c }
+          c += 1
+        }
+        counts(best) += 1
+        var j = 0
+        while (j < dim) { sums(best)(j) += t(j); j += 1 }
+      }
+      cents = Array.tabulate(k) { c =>
+        if (counts(c) > 0)
+          Array.tabulate(dim)(j =>
+            math.floor(sums(c)(j).toDouble / counts(c)).toLong)
+        else cents(c)
+      }
+    }
+    cents.map(_.toIndexedSeq).toIndexedSeq
+  }
+
+  /** The first `n` rows by id, lanes floor-quantized to 2^-20 integers. */
+  private[operators] def quantizedFirstById(
+      corpus: DataFrame, id: Column, vec: Column,
+      n: Int): Array[Array[Long]] =
+    firstById(corpus, id, vec, n)
+      .map(_.map(d => math.floor(d * 1048576.0).toLong))
 
   /** INTEGER-EXACT Lloyd refinement of the coarse quantizer: k-means
     * over the QUANTIZED lanes (floor(x * 2^20) — exact 21-bit integers)
@@ -537,39 +588,10 @@ object Similarity {
   def lloydRefinedCentroids(corpus: DataFrame, id: Column, vec: Column,
                             nCells: Int, trainN: Int = 128,
                             iters: Int = 2): IndexedSeq[IndexedSeq[Long]] = {
-    val rows = corpus
-      .select(id.cast("long").as("id"), vec.cast("array<double>").as("v"))
-      .orderBy(col("id")).limit(trainN)
-      .collect()
-    require(rows.length >= nCells,
-      s"train slice has ${rows.length} rows < nCells=$nCells")
-    val train: Array[Array[Long]] = rows.map(
-      _.getSeq[Double](1).map(d => math.floor(d * 1048576.0).toLong).toArray)
-    val dim = train(0).length
-    var cents = Array.tabulate(nCells)(i => train(i).clone())
-    (0 until iters).foreach { _ =>
-      val sums = Array.fill(nCells)(new Array[Long](dim))
-      val counts = new Array[Long](nCells)
-      train.foreach { t =>
-        var best = 0; var bestD = Long.MaxValue; var c = 0
-        while (c < nCells) {
-          var d = 0L; var j = 0
-          while (j < dim) { val x = t(j) - cents(c)(j); d += x * x; j += 1 }
-          if (d < bestD) { bestD = d; best = c } // strict < == ties to lower
-          c += 1
-        }
-        counts(best) += 1
-        var j = 0
-        while (j < dim) { sums(best)(j) += t(j); j += 1 }
-      }
-      cents = Array.tabulate(nCells) { c =>
-        if (counts(c) > 0)
-          Array.tabulate(dim)(j =>
-            math.floor(sums(c)(j).toDouble / counts(c)).toLong)
-        else cents(c) // empty cell keeps its previous centroid
-      }
-    }
-    cents.map(_.toIndexedSeq).toIndexedSeq
+    val train = quantizedFirstById(corpus, id, vec, trainN)
+    require(train.length >= nCells,
+      s"train slice has ${train.length} rows < nCells=$nCells")
+    lloydInt(train, nCells, iters)
   }
 
   /** Cells ranked by ascending integer squared-L2 distance from the
@@ -603,33 +625,14 @@ object Similarity {
                    nCells: Int = 8, nProbe: Int = 3, trainN: Int = 128,
                    iters: Int = 2, excludeSelf: Boolean = true): DataFrame = {
     val cents = lloydRefinedCentroids(corpus, cId, cVec, nCells, trainN, iters)
-    val assigned = corpus
-      .select(
-        coalesce(element_at(cellsByIntDistance(cents, cVec), 1), lit(-1))
-          .as("cell"),
-        cId.as("neighbor_id"), cVec.as("__v"), Vectors.norm(cVec).as("__nrm"))
-      .repartition(col("cell"))
-      .select(col("cell"), col("neighbor_id"),
-        transform(col("__v"), x => x.cast("double") / col("__nrm")).as("cv"))
-    val q = queries
-      .select(qId.as("query_id"), qVec.as("__v"), Vectors.norm(qVec).as("__nrm"),
-        slice(cellsByIntDistance(cents, qVec), 1, nProbe).as("cells"))
-      // exchange barrier: keeps the divide lambda reading __nrm as a
-      // materialized attribute and the probe-cell battery un-inlined
-      .repartition(col("query_id"))
-      .select(col("query_id"),
-        transform(col("__v"), x => x.cast("double") / col("__nrm")).as("qv"),
-        explode(col("cells")).as("cell"))
-      .select(col("query_id"), col("qv"),
-        coalesce(col("cell"), lit(-2)).as("cell"))
-    val joined = assigned.join(broadcast(q), Seq("cell"))
-    val scored0 = joined.withColumn("score",
-      round(Vectors.dot(col("qv"), col("cv")), 6))
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+    val assigned = unitBehindExchange(corpus,
+      Seq(coalesce(element_at(cellsByIntDistance(cents, cVec), 1), lit(-1))
+        .as("cell"), cId.as("neighbor_id")), cVec, Nil, "cell")(
+      v => Seq(col("cell"), col("neighbor_id"), v.as("cv")))
+    // the query_id exchange also keeps the probe-cell battery un-inlined
+    val q = probeRows(queries, qId, qVec,
+      slice(cellsByIntDistance(cents, qVec), 1, nProbe))
+    cosineTopK(assigned.join(broadcast(q), Seq("cell")), k, excludeSelf)
   }
 
   /** CONTRASTIVE TRIPLET mining — the training-data assembly step for
@@ -970,10 +973,27 @@ object Similarity {
     IvfIndex(assigned, cents, nProbe)
   }
 
-  /** One-shot IVF top-k = [[ivfIndex]] + [[ivfQuery]]. For repeated
-    * query batches build the index once and persist `assigned` instead:
-    * the per-call corpus pass here costs about as much as brute force
-    * (measured at 1M vectors) — IVF pays off when the build amortizes. */
+  /** IVF (inverted-file) approximate top-k: k-means centroids partition
+    * the corpus into cells; each query scores only the `nProbe` cells
+    * whose centroids are closest — the classic large-corpus ANN layout
+    * (centroids are tiny and broadcast; the corpus is scanned once to
+    * assign cells, then queries touch ~nProbe/nCells of it).
+    *
+    * Plan-shape notes (each was a measured multi-second trap at driver
+    * scale and a corpus-pass multiplier at 100 TB):
+    *  - Cells are ranked from the RAW vector: argsort of dot(v, c) equals
+    *    argsort of cosine (||v|| is a positive per-row constant), so the
+    *    normalization lambda stays OUT of the cell expression. With
+    *    normalized input, the join's inferred isnotnull(cell) predicate
+    *    was pushed into the parquet scan with the whole expression
+    *    inlined — including the norm re-expanded PER ELEMENT of the
+    *    divide lambda (dim^2 * nCells multiplies per row, interpreted).
+    *  - The join key is wrapped non-nullable (coalesce) so no isnotnull
+    *    filter is inferred at all.
+    *  - One corpus exchange total: assignment happens scan-side (nCells
+    *    cheap codegen dots), the shuffle is on cell, and the normalized
+    *    vector is materialized post-exchange where the norm is a plain
+    *    attribute. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               qId: Column, qVec: Column, cId: Column, cVec: Column,
               nCells: Int = 16, nProbe: Int = 4, seed: Long = 42L,
@@ -983,11 +1003,6 @@ object Similarity {
       ivfIndex(corpus, cId, cVec, nCells, nProbe, seed, maxTrainRows),
       queries, k, qId, qVec, excludeSelf)
 
-  /** Approximate top-k via sign-bucket LSH: corpus rows hash to one of
-    * 2^nBits buckets; each query probes buckets within Hamming distance
-    * <= probeHamming of its own (multi-probe improves recall at small
-    * fan-out cost). Output shape matches [[bruteForceTopK]]; recall is
-    * checked against it in SimilaritySpec. */
   /** [[lshTopK]] with md5-anchored sign planes: buckets come from an
     * integer sign test over the QUANTIZED raw vector (computed
     * scan-side, before the one exchange — the ivfIndex pattern), so the
@@ -1000,32 +1015,23 @@ object Similarity {
     val planes = md5SignPlanes(nBits, dim, table = 0)
     // bucket + norm projected scan-side from the raw vector; the
     // exchange barrier keeps the divide lambda reading __nrm as a
-    // materialized attribute (see normalized())
-    val c = corpus
-      .select(cId.as("neighbor_id"), cVec.as("__v"),
-        Vectors.norm(cVec).as("__nrm"),
-        bucketExpr(quantized(cVec), planes).as("bucket"))
-      .repartition(col("bucket"))
-      .select(col("neighbor_id"), col("bucket"),
-        transform(col("__v"), x => x.cast("double") / col("__nrm")).as("cv"))
-    val q = queries
-      .select(qId.as("query_id"), qVec.as("__v"),
-        Vectors.norm(qVec).as("__nrm"),
-        bucketExpr(quantized(qVec), planes).as("qbucket"))
-      .repartition(col("query_id"))
-      .select(col("query_id"), col("qbucket"),
-        transform(col("__v"), x => x.cast("double") / col("__nrm")).as("qv"))
-    val joined = c.join(broadcast(q),
-      bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= probeHamming)
-    val scored0 = joined.withColumn("score",
-      round(Vectors.dot(col("qv"), col("cv")), 6))
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+    // materialized attribute (see unitBehindExchange)
+    val c = unitBehindExchange(corpus, Seq(cId.as("neighbor_id")), cVec,
+      Seq(bucketExpr(quantized(cVec), planes).as("bucket")), "bucket")(
+      v => Seq(col("neighbor_id"), col("bucket"), v.as("cv")))
+    val q = unitBehindExchange(queries, Seq(qId.as("query_id")), qVec,
+      Seq(bucketExpr(quantized(qVec), planes).as("qbucket")), "query_id")(
+      v => Seq(col("query_id"), col("qbucket"), v.as("qv")))
+    cosineTopK(c.join(broadcast(q),
+      bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= probeHamming),
+      k, excludeSelf)
   }
 
+  /** Approximate top-k via sign-bucket LSH: corpus rows hash to one of
+    * 2^nBits buckets; each query probes buckets within Hamming distance
+    * <= probeHamming of its own (multi-probe improves recall at small
+    * fan-out cost). Output shape matches [[bruteForceTopK]]; recall is
+    * checked against it in SimilaritySpec. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               qId: Column, qVec: Column, cId: Column, cVec: Column,
               dim: Int, nBits: Int = 8, probeHamming: Int = 2,
@@ -1036,15 +1042,8 @@ object Similarity {
       .repartition(col("bucket"))
     val q = normalized(queries, qId, qVec, "query_id", "qv")
       .withColumn("qbucket", bucketExpr(col("qv"), planes))
-    val joined = c.join(broadcast(q),
-      bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= probeHamming)
-    val scored0 = joined.withColumn("score",
-      round(Vectors.dot(col("qv"), col("cv")), 6))
-    val scored =
-      if (excludeSelf) scored0.filter(col("query_id") =!= col("neighbor_id"))
-      else scored0
-    // bounded top-k aggregate (see bruteForceTopK note)
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("score"))
+    cosineTopK(c.join(broadcast(q),
+      bit_count(col("bucket").bitwiseXOR(col("qbucket"))) <= probeHamming),
+      k, excludeSelf)
   }
 }

@@ -39,17 +39,10 @@ object TFRecordIO {
     * (file string, record binary), one read task per file, one record
     * in memory at a time (a record can be a ~2GB packed group).
     * Decompression is AUTO by file name, mirroring the write side (and
-    * tf.data's compression_type="GZIP"). `shuffleSeed` reproduces the
-    * loader's seeded file-order shuffle (tf.data list_files(shuffle,
-    * seed), data_loaders.py:98-100). */
-  def read(spark: SparkSession, pattern: String,
-           shuffleSeed: Option[Long] = None): DataFrame = {
+    * tf.data's compression_type="GZIP"). */
+  def read(spark: SparkSession, pattern: String): DataFrame = {
     import spark.implicits._
-    val sortedFiles = HadoopFiles.glob(spark, pattern)
-    val files = shuffleSeed match {
-      case Some(seed) => new scala.util.Random(seed).shuffle(sortedFiles)
-      case None => sortedFiles
-    }
+    val files = HadoopFiles.glob(spark, pattern)
     require(files.nonEmpty, s"TFRecordIO.read: no files match $pattern")
     HadoopFiles.readEach(spark, files) { (f, in) =>
       new DataInputStream(if (f.endsWith(".gz")) new GZIPInputStream(in) else in)

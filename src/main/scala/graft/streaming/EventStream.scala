@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSql}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -262,10 +262,12 @@ object EventStream {
     q.awaitTermination()
   }
 
+  /** The FileSystem of `dir`'s own scheme, opened with the session's
+    * Hadoop conf (the `spark.hadoop.*` and session SQL settings Spark's
+    * file sources honour). */
   private def fs(spark: org.apache.spark.sql.SparkSession,
                  dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(GraftSql.hadoopConf(spark))
 
   /** Apply one micro-batch to the keyed table (see protocol above).
     * Package-visible so specs can drive crash/replay cases directly. */
@@ -556,9 +558,8 @@ object EventStream {
           .write.mode("overwrite")
           .parquet(f"$scratch/s$i%04d")
       }})
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(
+    val hfs = fs(spark, scratch)
+    val files = hfs.globStatus(
         new org.apache.hadoop.fs.Path(s"$scratch/s*/part-*.parquet"))
       .sortBy(_.getPath.toString)
     // batching-contract check, loud not silent: exactly P files per
@@ -571,7 +572,7 @@ object EventStream {
         s"(maxFilesPerTrigger=$p batches straddle slices otherwise); " +
         s"off: $offDirs of ${perDir.size}/${slices.length} dirs")
     files.zipWithIndex.foreach { case (st, i) =>
-      fs.setTimes(st.getPath, 1700000000000L + i * 60000L, -1)
+      hfs.setTimes(st.getPath, 1700000000000L + i * 60000L, -1)
     }
     val phys = spark.read.parquet(s"$scratch/s0000").schema
     val src = spark.readStream.schema(phys)

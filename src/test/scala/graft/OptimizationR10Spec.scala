@@ -11,78 +11,6 @@ import org.apache.spark.sql.functions._
 class OptimizationR10Spec extends SparkSpec {
   import org.apache.spark.sql.DataFrame
 
-  // ---------------------------------------------------------- PqBest
-
-  /** Driver-side reference replay of the old least(struct) battery:
-    * same decomposition (xx - 2*dot) + cc, left-to-right folds, strict
-    * argmin with ties to the lower index. */
-  private def refCodes(v: Array[Double], books: Pq2, quantize: Boolean)
-      : Array[Int] = {
-    val m = books.length
-    val k = books.head.length
-    val sub = books.head.head.length
-    Array.tabulate(m) { j =>
-      val xs = Array.tabulate(sub) { l =>
-        val x = v(j * sub + l)
-        if (quantize) math.floor(x * 1048576.0) else x
-      }
-      val xx = xs.foldLeft(0.0)((a, x) => a + x * x)
-      var best = 0
-      var bestD = Double.NaN
-      for (i <- 0 until k) {
-        val c = books(j)(i)
-        val cc = c.foldLeft(0.0)((a, x) => a + x * x)
-        var dot = 0.0
-        for (l <- 0 until sub) dot += xs(l) * c(l)
-        val d = (xx - 2.0 * dot) + cc
-        if (if (bestD.isNaN) !d.isNaN else d < bestD) { bestD = d; best = i }
-      }
-      best
-    }
-  }
-  private type Pq2 = IndexedSeq[IndexedSeq[IndexedSeq[Double]]]
-
-  test("PqBest codes match the expression-battery reference (float + int)") {
-    val emb = Tables(spark, sf001, "embeddings")
-    val books = graft.operators.Pq.fitAnchored(
-      emb, col("vec_id"), col("embedding"), m = 8, k = 16)
-    val got = graft.operators.Pq.encode(
-        emb, col("vec_id"), col("embedding"), books)
-      .select(col("vec_id"), col("codes")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
-    val raw = emb.select(col("vec_id"),
-      col("embedding").cast("array<double>")).collect()
-    raw.foreach { r =>
-      val ref = refCodes(r.getSeq[Double](1).toArray, books, quantize = false)
-      assert(got(r.getLong(0)).sameElements(ref),
-        s"codes diverge for vec ${r.getLong(0)}")
-    }
-    // int path: quantized codebook, inline 2^20 quantization
-    val ibooks = graft.operators.Pq.fitLloydQuantized(
-      emb, col("vec_id"), col("embedding"), m = 8, k = 16,
-      trainN = 128, iters = 1)
-    val fbooks: Pq2 = ibooks.map(_.map(_.map(_.toDouble)))
-    val gotI = graft.operators.Pq.encodeInt(
-        emb, col("vec_id"), col("embedding"), ibooks)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
-    raw.foreach { r =>
-      val ref = refCodes(r.getSeq[Double](1).toArray, fbooks, quantize = true)
-      assert(gotI(r.getLong(0)).sameElements(ref),
-        s"int codes diverge for vec ${r.getLong(0)}")
-    }
-  }
-
-  test("PqBest rejects ragged codebooks loudly") {
-    val emb = Tables(spark, sf001, "embeddings")
-    val books = graft.operators.Pq.fitAnchored(
-      emb, col("vec_id"), col("embedding"), m = 8, k = 16)
-    val ragged = books.updated(3, books(3).drop(1))
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Pq.encode(emb, col("vec_id"), col("embedding"), ragged)
-    }
-    assert(e.getMessage.contains("ragged"))
-  }
-
   // ------------------------------------------- Pca persisted chain
 
   test("persisted deflation chain replays the recomputed reference") {

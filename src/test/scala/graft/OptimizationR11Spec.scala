@@ -222,50 +222,6 @@ class OptimizationR11Spec extends SparkSpec {
     assert(o == n)
   }
 
-  // ------------------------------------ PqLut vs the subDists battery
-
-  test("PqLut equals the m*k subDists expression battery bit-for-bit") {
-    val emb = Tables(spark, sf001, "embeddings")
-    val books = graft.operators.Pq.fitAnchored(
-      emb, col("vec_id"), col("embedding"), m = 8, k = 16)
-    val battery = array(books.indices.flatMap { j =>
-      graft.operators.Pq.subDists(col("embedding"), j, books(j))
-    }: _*)
-    val both = emb.select(col("vec_id"), battery.as("old"),
-      graft.operators.Pq.lutOf(col("embedding"), books).as("nw"))
-      .collect()
-    both.foreach { r =>
-      val o = r.getSeq[Double](1)
-      val n = r.getSeq[Double](2)
-      assert(o.length == n.length)
-      o.indices.foreach { i =>
-        assert(java.lang.Double.doubleToRawLongBits(o(i)) ==
-          java.lang.Double.doubleToRawLongBits(n(i)),
-          s"vec ${r.getLong(0)} entry $i: ${o(i)} vs ${n(i)}")
-      }
-    }
-    // int path: quantized codebook, inline 2^20 quantization
-    val ibooks = graft.operators.Pq.fitLloydQuantized(
-      emb, col("vec_id"), col("embedding"), m = 8, k = 16,
-      trainN = 128, iters = 1)
-    val batteryI = array(ibooks.indices.flatMap { j =>
-      graft.operators.Pq.subDistsInt(col("embedding"), j, ibooks(j))
-    }: _*)
-    val bothI = emb.select(col("vec_id"), batteryI.as("old"),
-      graft.operators.Pq.lutOfInt(col("embedding"), ibooks).as("nw"))
-      .collect()
-    bothI.foreach { r =>
-      val o = r.getSeq[Double](1)
-      val n = r.getSeq[Double](2)
-      assert(o.length == n.length)
-      o.indices.foreach { i =>
-        assert(java.lang.Double.doubleToRawLongBits(o(i)) ==
-          java.lang.Double.doubleToRawLongBits(n(i)),
-          s"int vec ${r.getLong(0)} entry $i: ${o(i)} vs ${n(i)}")
-      }
-    }
-  }
-
   // --------------------------- entity_match single-eval levenshtein
 
   test("blockedPairs evaluates the banded levenshtein exactly once per row") {

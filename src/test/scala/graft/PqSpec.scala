@@ -239,4 +239,203 @@ class PqSpec extends SparkSpec {
     (0 until 8).foreach(j => report(j)._3 shouldBe drift(j))
     drift.sum should be > 0L
   }
+
+  // ----------------------------------------------------- PqDistances
+
+  /** Driver-side reference replay of the old least(struct) battery:
+    * same decomposition (xx - 2*dot) + cc, left-to-right folds, strict
+    * argmin with ties to the lower index. */
+  private def refCodes(v: Array[Double], books: Pq2, quantize: Boolean)
+      : Array[Int] = {
+    val m = books.length
+    val k = books.head.length
+    val sub = books.head.head.length
+    Array.tabulate(m) { j =>
+      val xs = Array.tabulate(sub) { l =>
+        val x = v(j * sub + l)
+        if (quantize) math.floor(x * 1048576.0) else x
+      }
+      val xx = xs.foldLeft(0.0)((a, x) => a + x * x)
+      var best = 0
+      var bestD = Double.NaN
+      for (i <- 0 until k) {
+        val c = books(j)(i)
+        val cc = c.foldLeft(0.0)((a, x) => a + x * x)
+        var dot = 0.0
+        for (l <- 0 until sub) dot += xs(l) * c(l)
+        val d = (xx - 2.0 * dot) + cc
+        if (if (bestD.isNaN) !d.isNaN else d < bestD) { bestD = d; best = i }
+      }
+      best
+    }
+  }
+  private type Pq2 = IndexedSeq[IndexedSeq[IndexedSeq[Double]]]
+
+  test("PqDistances codes match the expression-battery reference (float + int)") {
+    val emb = Tables(spark, sf001, "embeddings")
+    val books = graft.operators.Pq.fitAnchored(
+      emb, col("vec_id"), col("embedding"), m = 8, k = 16)
+    val got = graft.operators.Pq.encode(
+        emb, col("vec_id"), col("embedding"), books)
+      .select(col("vec_id"), col("codes")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
+    val raw = emb.select(col("vec_id"),
+      col("embedding").cast("array<double>")).collect()
+    raw.foreach { r =>
+      val ref = refCodes(r.getSeq[Double](1).toArray, books, quantize = false)
+      assert(got(r.getLong(0)).sameElements(ref),
+        s"codes diverge for vec ${r.getLong(0)}")
+    }
+    // int path: quantized codebook, inline 2^20 quantization
+    val ibooks = graft.operators.Pq.fitLloydQuantized(
+      emb, col("vec_id"), col("embedding"), m = 8, k = 16,
+      trainN = 128, iters = 1)
+    val fbooks: Pq2 = ibooks.map(_.map(_.map(_.toDouble)))
+    val gotI = graft.operators.Pq.encodeInt(
+        emb, col("vec_id"), col("embedding"), ibooks)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
+    raw.foreach { r =>
+      val ref = refCodes(r.getSeq[Double](1).toArray, fbooks, quantize = true)
+      assert(gotI(r.getLong(0)).sameElements(ref),
+        s"int codes diverge for vec ${r.getLong(0)}")
+    }
+  }
+
+  test("PqDistances rejects ragged codebooks loudly") {
+    val emb = Tables(spark, sf001, "embeddings")
+    val books = graft.operators.Pq.fitAnchored(
+      emb, col("vec_id"), col("embedding"), m = 8, k = 16)
+    val ragged = books.updated(3, books(3).drop(1))
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Pq.encode(emb, col("vec_id"), col("embedding"), ragged)
+    }
+    assert(e.getMessage.contains("ragged"))
+  }
+
+  // ------------------------- PqDistances table vs the subDists battery
+
+  test("PqDistances table equals the m*k subDists expression battery bit-for-bit") {
+    val emb = Tables(spark, sf001, "embeddings")
+    val books = graft.operators.Pq.fitAnchored(
+      emb, col("vec_id"), col("embedding"), m = 8, k = 16)
+    val battery = array(books.indices.flatMap { j =>
+      graft.operators.Pq.subDists(col("embedding"), j, books(j))
+    }: _*)
+    val both = emb.select(col("vec_id"), battery.as("old"),
+      graft.operators.Pq.lutOf(col("embedding"), books).as("nw"))
+      .collect()
+    both.foreach { r =>
+      val o = r.getSeq[Double](1)
+      val n = r.getSeq[Double](2)
+      assert(o.length == n.length)
+      o.indices.foreach { i =>
+        assert(java.lang.Double.doubleToRawLongBits(o(i)) ==
+          java.lang.Double.doubleToRawLongBits(n(i)),
+          s"vec ${r.getLong(0)} entry $i: ${o(i)} vs ${n(i)}")
+      }
+    }
+    // int path: quantized codebook, inline 2^20 quantization
+    val ibooks = graft.operators.Pq.fitLloydQuantized(
+      emb, col("vec_id"), col("embedding"), m = 8, k = 16,
+      trainN = 128, iters = 1)
+    val batteryI = array(ibooks.indices.flatMap { j =>
+      graft.operators.Pq.subDistsInt(col("embedding"), j, ibooks(j))
+    }: _*)
+    val bothI = emb.select(col("vec_id"), batteryI.as("old"),
+      graft.operators.Pq.lutOf(col("embedding"), ibooks).as("nw"))
+      .collect()
+    bothI.foreach { r =>
+      val o = r.getSeq[Double](1)
+      val n = r.getSeq[Double](2)
+      assert(o.length == n.length)
+      o.indices.foreach { i =>
+        assert(java.lang.Double.doubleToRawLongBits(o(i)) ==
+          java.lang.Double.doubleToRawLongBits(n(i)),
+          s"int vec ${r.getLong(0)} entry $i: ${o(i)} vs ${n(i)}")
+      }
+    }
+  }
+
+  // ------------------------------- encode qerrs vs the subDists battery
+
+  test("encode qerrs equal the round-6 min of the subDists battery (float + int)") {
+    val emb = Tables(spark, sf001, "embeddings")
+    def bitsEqual(o: Seq[Double], n: Seq[Double], what: String): Unit = {
+      assert(o.length == n.length)
+      o.indices.foreach { j =>
+        assert(java.lang.Double.doubleToRawLongBits(o(j)) ==
+          java.lang.Double.doubleToRawLongBits(n(j)),
+          s"$what subspace $j: ${o(j)} vs ${n(j)}")
+      }
+    }
+    val books = Pq.fitAnchored(emb, col("vec_id"), col("embedding"),
+      m = 8, k = 16)
+    val mins = array(books.indices.map { j =>
+      round(least(Pq.subDists(col("embedding"), j, books(j)): _*), 6)
+    }: _*)
+    val got = Pq.encode(emb, col("vec_id"), col("embedding"), books)
+      .select(col("vec_id"), col("qerrs"))
+      .join(emb.select(col("vec_id"), mins.as("ref")), "vec_id")
+      .collect()
+    got.length shouldBe emb.count()
+    got.foreach(r => bitsEqual(r.getSeq[Double](2), r.getSeq[Double](1),
+      s"vec ${r.getLong(0)}"))
+    // int codebook: the kernel's best-distance output over the
+    // quantized vector against the subDistsInt battery
+    val ibooks = Pq.fitLloydQuantized(emb, col("vec_id"), col("embedding"),
+      m = 8, k = 16, trainN = 128, iters = 1)
+    val minsI = array(ibooks.indices.map { j =>
+      round(least(Pq.subDistsInt(col("embedding"), j, ibooks(j)): _*), 6)
+    }: _*)
+    val best = transform(Pq.pqDistances(col("embedding"), ibooks,
+      graft.expressions.PqDistances.Best), d => round(d, 6))
+    val gotI = emb.select(col("vec_id"), minsI.as("ref"), best.as("nw"))
+      .collect()
+    gotI.foreach(r => bitsEqual(r.getSeq[Double](1), r.getSeq[Double](2),
+      s"int vec ${r.getLong(0)}"))
+  }
+
+  test("PqDistances outputs are bit-identical with codegen on and under NO_CODEGEN") {
+    import graft.expressions.PqDistances.{Best, Codes, Table}
+    val emb = Tables(spark, sf001, "embeddings")
+    val books = Pq.fitAnchored(emb, col("vec_id"), col("embedding"),
+      m = 8, k = 16)
+    val ibooks = Pq.fitLloydQuantized(emb, col("vec_id"), col("embedding"),
+      m = 8, k = 16, trainN = 128, iters = 1)
+    val outs = Seq(Codes, Best, Table).flatMap { out =>
+      Seq(Pq.pqDistances(col("embedding"), books, out).as(s"f_$out"),
+        Pq.pqDistances(col("embedding"), ibooks, out).as(s"i_$out"))
+    }
+    // one row per vector, every output as raw bits (codes widen to long)
+    def run(confs: (String, String)*): Map[Long, Seq[Seq[Long]]] = {
+      val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        emb.select(col("vec_id") +: outs: _*).collect().map { r =>
+          r.getLong(0) -> (1 to outs.length).map { i =>
+            r.getSeq[Any](i).map {
+              case d: Double => java.lang.Double.doubleToRawLongBits(d)
+              case c: Int => c.toLong
+            }
+          }
+        }.toMap
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val generated = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    generated.size shouldBe emb.count()
+    generated.keys.foreach { id =>
+      generated(id).zip(interpreted(id)).zipWithIndex.foreach {
+        case ((g, n), i) =>
+          assert(g == n, s"vec $id output ${outs(i)}: $g vs $n")
+      }
+    }
+    // the Table output holds every distance the other two reduce
+    generated.values.foreach(_(4).length shouldBe 8 * 16)
+  }
 }

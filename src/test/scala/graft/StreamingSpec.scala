@@ -327,6 +327,41 @@ class StreamingSpec extends SparkSpec {
     after shouldBe once.map(_.getAs[Long]("n_events")).sum + 5
   }
 
+  test("upsert table and slice staging use the path's FileSystem and the session conf") {
+    // counting:// is known to the session's SQL conf ONLY: neither the
+    // default FileSystem nor sparkContext.hadoopConfiguration has it
+    spark.conf.set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val local = java.nio.file.Files.createTempDirectory("graft-eventstream-fs")
+    try {
+      val dir = s"counting://$local"
+      val before = CountingFileSystem.total.get
+      val e = Tables(spark, sf0001, "events")
+        .select($"event_id", $"user_id", $"value")
+      EventStream.upsertBatch(e, batchId = 0L, s"$dir/table")
+      EventStream.upsertBatch(e.limit(5), batchId = 1L, s"$dir/table")
+      EventStream.latestSnapshot(spark, s"$dir/table").get
+        .agg(sum($"n_events")).as[Long].head() shouldBe e.count() + 5
+      // staging globs and re-stamps the slice files on the same scheme
+      val (_, nSlices) = EventStream.stageSlicedSource(
+        Tables(spark, sf0001, "events"), $"ts", Seq($"event_type"),
+        s"$dir/slices", sliceNs = 172800L * 1000000000L, filesPerSlice = 2)
+      nSlices should be > 1
+      val slice0 = new org.apache.hadoop.fs.Path(s"$dir/slices/s0000")
+      val stamped = slice0.getFileSystem(
+          org.apache.spark.sql.GraftSql.hadoopConf(spark))
+        .globStatus(new org.apache.hadoop.fs.Path(s"$slice0/part-*.parquet"))
+        .map(_.getModificationTime).sorted.toSeq
+      stamped.head shouldBe 1700000000000L
+      stamped.distinct shouldBe stamped
+      // the commit markers and snapshots went through counting://
+      CountingFileSystem.total.get - before should be >= 2
+      CountingFileSystem.open shouldBe empty
+    } finally {
+      spark.conf.unset("fs.counting.impl")
+      org.apache.commons.io.FileUtils.deleteDirectory(local.toFile)
+    }
+  }
+
   test("foreachBatch decay: micro-batched state is batching-invariant") {
     val h = 259200L * 1000000000L
     val e = Tables(spark, sf0001, "events")
