@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.expressions.{DotProduct, MinHashBands, MinHashSignature, SimHash64, TextStats}
+import graft.expressions.{DotProduct, MinHash, SimHash64, TextStats}
 
 /** SparkSessionExtensions hook registering graft's custom Catalyst
   * expressions as SQL functions, so the engine's hot-path primitives are
@@ -53,15 +53,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("minhash_signature"),
       info("minhash_signature",
         "minhash_signature(hashes, k, seed) - k-lane minhash signature"),
-      (args: Seq[Expression]) => MinHashSignature(args(0),
-        intArg(args(1), "k"), longArg(args(2), "seed"))))
+      (args: Seq[Expression]) => MinHash(args(0),
+        intArg(args(1), "k"), longArg(args(2), "seed"), MinHash.Signature)))
     ext.injectFunction((
       FunctionIdentifier("minhash_bands"),
       info("minhash_bands",
         "minhash_bands(hashes, k, bands, seed) - LSH band buckets"),
-      (args: Seq[Expression]) => MinHashBands(args(0),
-        intArg(args(1), "k"), intArg(args(2), "bands"),
-        longArg(args(3), "seed"))))
+      (args: Seq[Expression]) => MinHash(args(0),
+        intArg(args(1), "k"), longArg(args(3), "seed"),
+        MinHash.Bands(intArg(args(2), "bands")))))
     ext.injectFunction((
       FunctionIdentifier("text_stats"),
       info("text_stats",

@@ -61,10 +61,14 @@ object SparkEntry {
   private lazy val textTokens: String = TextAnalysis.Sql.tokens("text")
 
   /** CTE `name(vec_id, e)`: each embedding scaled to unit L2 norm;
-    * `where` filters the embeddings read. No line of it starts with a
-    * bar, so the caller's stripMargin leaves it as it is. */
-  private def unitVecsCte(name: String, where: String = ""): String =
-    s"""$name AS (SELECT vec_id,
+    * `where` filters the embeddings read. MATERIALIZED, so DuckDB
+    * normalizes once however often a CTE chain reads it, unless the
+    * caller's filters on it must push down into the scan
+    * (`materialized = false`). No line of it starts with a bar, so the
+    * caller's stripMargin leaves it as it is. */
+  private def unitVecsCte(name: String, where: String = "",
+                          materialized: Boolean = true): String =
+    s"""$name AS ${if (materialized) "MATERIALIZED " else ""}(SELECT vec_id,
        |  [CAST(x AS DOUBLE) / sqrt(list_sum([CAST(y AS DOUBLE) * y
        |    FOR y IN embedding])) FOR x IN embedding] AS e
        |  FROM embeddings$where)""".stripMargin
@@ -4231,7 +4235,7 @@ object SparkEntry {
       // identical inputs), score rounded to 6, survivor by
       // (score DESC, id ASC)
       s"""WITH RECURSIVE ${AnchoredSigCtes(nTables = 8, nBits = 6)},
-         |ok AS (
+         |ok AS MATERIALIZED (
          |  SELECT t, sig FROM sigs GROUP BY 1, 2 HAVING count(*) <= 100000),
          |cand AS (
          |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -4676,14 +4680,16 @@ object SparkEntry {
            |     AND c.vec_id NOT IN (SELECT id FROM s${t - 1})
            |    GROUP BY c.vec_id)
            |  ORDER BY ms, id LIMIT 1),
-           |s$t AS (SELECT id FROM s${t - 1} UNION ALL
+           |s$t AS MATERIALIZED (SELECT id FROM s${t - 1} UNION ALL
            |        SELECT id FROM p$t)""".stripMargin
       }.mkString(",\n")
-      s"""WITH ${unitVecsCte("v")},
+      // v stays plain: materialized, the `s.vec_id IN (...)` filters
+      // no longer reach its scan and every step joins the full v x v
+      s"""WITH ${unitVecsCte("v", materialized = false)},
          |p1 AS (SELECT 1 AS pick_rank, vec_id AS id,
          |         CAST(-1000000 AS BIGINT) AS max_sim_e6
          |       FROM v ORDER BY vec_id LIMIT 1),
-         |s1 AS (SELECT id FROM p1),
+         |s1 AS MATERIALIZED (SELECT id FROM p1),
          |$steps
          |${(1 to 8).map(t => s"SELECT * FROM p$t")
              .mkString("\nUNION ALL\n")}""".stripMargin
@@ -4745,7 +4751,7 @@ object SparkEntry {
           s"FOR i IN range(1, len($l.e) + 1)]), 6)"
       val steps = mmrStepsSql(5)
       s"""WITH ${unitVecsCte("v")},
-         |cand AS (
+         |cand AS MATERIALIZED (
          |  SELECT query_id, neighbor_id, rel_e6 FROM (
          |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          |      CAST(round(${dot("q", "c")} * 1000000) AS BIGINT)
@@ -4754,7 +4760,7 @@ object SparkEntry {
          |        ORDER BY ${dot("q", "c")} DESC, c.vec_id) AS rk
          |    FROM v q JOIN v c ON q.vec_id < 8 AND q.vec_id <> c.vec_id)
          |  WHERE rk <= 20),
-         |ps AS (
+         |ps AS MATERIALIZED (
          |  SELECT x.query_id, x.neighbor_id AS a, y.neighbor_id AS b,
          |    CAST(round(${dot("vx", "vy")} * 1000000) AS BIGINT)
          |      AS sim_e6
@@ -4766,7 +4772,7 @@ object SparkEntry {
          |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
          |          ORDER BY rel_e6 DESC, neighbor_id) AS rn FROM cand)
          |  WHERE rn = 1),
-         |p1 AS (SELECT * FROM s1),
+         |p1 AS MATERIALIZED (SELECT * FROM s1),
          |$steps
          |SELECT query_id, mmr_rank, neighbor_id, rel_e6 FROM p5"""
         .stripMargin
@@ -5086,7 +5092,7 @@ object SparkEntry {
          |          ORDER BY adc_dist ASC, neighbor_id) AS rk FROM adc)
          |  WHERE rk <= 20),
          |${unitVecsCte("v")},
-         |cand AS (
+         |cand AS MATERIALIZED (
          |  SELECT c.query_id, c.neighbor_id,
          |    CAST(round(round(list_sum([q.e[i] * n.e[i]
          |      FOR i IN range(1, len(q.e) + 1)]), 6) * 1000000)
@@ -5094,7 +5100,7 @@ object SparkEntry {
          |  FROM c20 c
          |  JOIN v q ON q.vec_id = c.query_id
          |  JOIN v n ON n.vec_id = c.neighbor_id),
-         |ps AS (
+         |ps AS MATERIALIZED (
          |  SELECT x.query_id, x.neighbor_id AS a, y.neighbor_id AS b,
          |    CAST(round(round(list_sum([vx.e[i] * vy.e[i]
          |      FOR i IN range(1, len(vx.e) + 1)]), 6) * 1000000)
@@ -5107,7 +5113,7 @@ object SparkEntry {
          |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
          |          ORDER BY rel_e6 DESC, neighbor_id) AS rn FROM cand)
          |  WHERE rn = 1),
-         |p1 AS (SELECT * FROM s1),
+         |p1 AS MATERIALIZED (SELECT * FROM s1),
          |${mmrStepsSql(5)}
          |SELECT query_id, mmr_rank, neighbor_id, rel_e6 FROM p5"""
         .stripMargin),
@@ -8103,7 +8109,7 @@ object SparkEntry {
     * subspace, centroid) squared-L2 distances — `embedding_pq_codes`
     * and `similarity_pq_adc` both build on these CTEs. */
   private lazy val pqDistsSql: String =
-    """WITH cb AS (
+    """WITH cb AS MATERIALIZED (
       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci,
       |    embedding AS ce
       |  FROM (SELECT vec_id, embedding FROM embeddings
@@ -8398,7 +8404,7 @@ object SparkEntry {
        |    [CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)
        |     FOR x IN embedding] AS q
        |  FROM embeddings),
-       |sigs AS (
+       |sigs AS MATERIALIZED (
        |  SELECT qv.vec_id, hp.t,
        |    CAST(sum(CASE WHEN list_sum([hp.s[i] * qv.q[i]
        |        FOR i IN range(1, 65)]) >= 0

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   */
 
 /** The shared MinHash universal-hash coefficient family: ONE derivation
-  * used by MinHashSignature, MinHashBands and Dedup.coeffs — these must
-  * stay bit-identical or the differential tests and the LSH == exact
-  * Jaccard equivalence silently break. */
+  * used by [[MinHash]] and Dedup.coeffs — these must stay bit-identical
+  * or the differential tests and the LSH == exact Jaccard equivalence
+  * silently break. */
 object MinHashCoeffs {
   val P: Long = 2147483647L // 2^31 - 1
   def apply(k: Int, seed: Long): (Array[Long], Array[Long]) = {
@@ -34,21 +34,37 @@ object MinHashCoeffs {
   }
 }
 
-/** MinHash signature: for base hashes x (already reduced mod p), emit
-  * sig[j] = min over x of (a_j * x + b_j) mod p, j < k. The (a, b)
-  * coefficient family is derived deterministically from `seed` exactly
-  * as graft.operators.Dedup.coeffs does. */
-case class MinHashSignature(child: Expression, k: Int, seed: Long)
+/** MinHash over base hashes x (already reduced mod p): the k-lane
+  * signature sig[j] = min over x of (a_j * x + b_j) mod p, j < k, with
+  * the (a, b) family of [[MinHashCoeffs]] for `seed`.
+  *
+  * `out` picks what the row returns, fixed when code is generated:
+  *  - [[MinHash.Signature]]: the k signature lanes (`minhash_signature`);
+  *  - [[MinHash.Bands]](n): each consecutive k/n lanes mixed into one
+  *    bucket hash (h = 31·h + lane, from 1125899906842597), so LSH
+  *    banding is a SINGLE expression evaluation per row
+  *    (`minhash_bands`). The slice-the-signature formulation
+  *    re-evaluates the whole signature once per band after projection
+  *    collapse. */
+case class MinHash(child: Expression, k: Int, seed: Long, out: MinHash.Out)
     extends UnaryExpression with Serializable {
+  import MinHash.{Bands, Signature}
 
   private val P = MinHashCoeffs.P
+  private val (nOut, rowsPerBand) = out match {
+    case Signature => (k, 1)
+    case Bands(n) =>
+      require(k % n == 0, "k must be divisible by bands")
+      (n, k / n)
+  }
 
   @transient private lazy val (as, bs) = MinHashCoeffs(k, seed)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_signature needs array<bigint>, got $other")
+    case other =>
+      val fn = if (out == Signature) "minhash_signature" else "minhash_bands"
+      TypeCheckResult.TypeCheckFailure(s"$fn needs array<bigint>, got $other")
   }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -68,7 +84,22 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
       }
       i += 1
     }
-    new GenericArrayData(sig)
+    if (out == Signature) new GenericArrayData(sig)
+    else {
+      val buckets = new Array[Long](nOut)
+      var b = 0
+      while (b < nOut) {
+        var h = 1125899906842597L
+        var r = 0
+        while (r < rowsPerBand) {
+          h = 31L * h + sig(b * rowsPerBand + r)
+          r += 1
+        }
+        buckets(b) = h
+        b += 1
+      }
+      new GenericArrayData(buckets)
+    }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -81,97 +112,21 @@ case class MinHashSignature(child: Expression, k: Int, seed: Long)
       val sig = ctx.freshName("sig")
       val x = ctx.freshName("x")
       val v = ctx.freshName("v")
-      s"""
-         |int $n = $xs.numElements();
-         |long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, ${P}L);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $x = $xs.getLong($i);
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $v = ($aRef[$j] * $x + $bRef[$j]) % ${P}L;
-         |    if ($v < $sig[$j]) $sig[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-object MinHashSignature {
-  def apply(baseHashes: Column, k: Int, seed: Long): Column =
-    GraftSql.column(MinHashSignature(GraftSql.expression(baseHashes), k, seed))
-}
-
-/** MinHash band buckets in one pass: computes the k-lane signature like
-  * [[MinHashSignature]], then mixes each consecutive `rowsPerBand` lanes
-  * into one bucket hash — so LSH banding is a SINGLE expression
-  * evaluation per row. (The slice-the-signature formulation re-evaluates
-  * the whole signature once per band after projection collapse.) */
-case class MinHashBands(child: Expression, k: Int, bands: Int, seed: Long)
-    extends UnaryExpression with Serializable {
-
-  require(k % bands == 0, "k must be divisible by bands")
-  private val P = MinHashCoeffs.P
-  private val rowsPerBand = k / bands
-
-  @transient private lazy val (as, bs) = MinHashCoeffs(k, seed)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands needs array<bigint>, got $other")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    val sig = Array.fill(k)(P)
-    var i = 0
-    while (i < n) {
-      val x = xs.getLong(i)
-      var j = 0
-      while (j < k) {
-        val v = (as(j) * x + bs(j)) % P
-        if (v < sig(j)) sig(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = 1125899906842597L
-      var r = 0
-      while (r < rowsPerBand) {
-        h = 31L * h + sig(b * rowsPerBand + r)
-        r += 1
-      }
-      out(b) = h
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", as, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, xs => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val sig = ctx.freshName("sig")
-      val x = ctx.freshName("x")
-      val v = ctx.freshName("v")
-      val out = ctx.freshName("out")
+      val o = ctx.freshName("out")
       val b = ctx.freshName("b")
       val r = ctx.freshName("r")
       val h = ctx.freshName("h")
+      // the output mode only selects which lines are generated
+      val result = if (out == Signature) sig else o
+      val mix = if (out == Signature) "" else
+        s"""long[] $o = new long[$nOut];
+           |for (int $b = 0; $b < $nOut; $b++) {
+           |  long $h = 1125899906842597L;
+           |  for (int $r = 0; $r < $rowsPerBand; $r++) {
+           |    $h = 31L * $h + $sig[$b * $rowsPerBand + $r];
+           |  }
+           |  $o[$b] = $h;
+           |}""".stripMargin
       s"""
          |int $n = $xs.numElements();
          |long[] $sig = new long[$k];
@@ -183,26 +138,29 @@ case class MinHashBands(child: Expression, k: Int, bands: Int, seed: Long)
          |    if ($v < $sig[$j]) $sig[$j] = $v;
          |  }
          |}
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $h = 1125899906842597L;
-         |  for (int $r = 0; $r < $rowsPerBand; $r++) {
-         |    $h = 31L * $h + $sig[$b * $rowsPerBand + $r];
-         |  }
-         |  $out[$b] = $h;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         |$mix
+         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($result);
        """.stripMargin
     })
   }
 
-  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
+  override protected def withNewChildInternal(newChild: Expression): MinHash =
     copy(child = newChild)
 }
 
-object MinHashBands {
-  def apply(baseHashes: Column, k: Int, bands: Int, seed: Long): Column =
-    GraftSql.column(MinHashBands(GraftSql.expression(baseHashes), k, bands, seed))
+object MinHash {
+  /** What a [[MinHash]] row returns. */
+  sealed trait Out
+  /** The k signature lanes. */
+  case object Signature extends Out
+  /** `n` LSH band buckets, k/n lanes each. */
+  final case class Bands(n: Int) extends Out
+
+  def signature(baseHashes: Column, k: Int, seed: Long): Column =
+    GraftSql.column(MinHash(GraftSql.expression(baseHashes), k, seed, Signature))
+
+  def bands(baseHashes: Column, k: Int, bands: Int, seed: Long): Column =
+    GraftSql.column(MinHash(GraftSql.expression(baseHashes), k, seed, Bands(bands)))
 }
 
 /** 64-bit SimHash from an array of 64-bit token hashes: per output bit

@@ -49,50 +49,8 @@ object Dedup {
     * join for differential testing. */
   def ngramJaccardPairs(df: DataFrame, textCol: Column, idCol: Column,
                         n: Int, threshold: Double): DataFrame = {
-    // shuffle the RAW rows first, then compute shingles post-exchange:
-    // a single-row-group parquet scan is ONE task, so computing the HOF
-    // in the scan stage serializes it; the exchange also doubles as the
-    // ReuseExchange barrier for every downstream join side
-    val sets = df.select(idCol.as("id"), textCol.as("__text"))
-      .repartition(col("id"))
-      // pre-filter on the cheap token count BEFORE the shingle expr: a
-      // post-projection size filter would collapse onto the projection
-      // and evaluate it twice per row
-      .filter(size(TextAnalysis.tokens(col("__text"))) >= n)
-      .select(col("id"), shingles(col("__text"), n).as("sh"))
-      // second (tiny) exchange AFTER the computation: every downstream
-      // consumer (freq, inverted index, both verification joins) reuses
-      // the materialized arrays instead of re-running the expression
-      .repartition(col("id"))
-    // global shingle frequencies -> per-doc rarest-first ordering.
-    // Only the f >= 2 tail joins back (guide §2.3/§2.4): a unique
-    // shingle's frequency is 1 BY DEFINITION, so the left-join +
-    // coalesce(f, 1) reproduces every frequency exactly while the
-    // join's right side shrinks from |distinct shingles| to the
-    // duplicated tail — small enough that AQE converts the join to
-    // broadcast at runtime, which also removes the g-exchange of the
-    // exploded stream AND (exploded stays partitioned by id from the
-    // sets barrier) the groupBy(id) exchange below (r10 VERDICT
-    // item 4, kept scale-adaptive: a huge duplicated tail just keeps
-    // the shuffled join).
-    val exploded = sets.select(col("id"), explode(col("sh")).as("g"))
-    val dupFreq = exploded.groupBy("g").agg(count(lit(1)).as("f"))
-      .filter(col("f") >= 2)
-    val ordered = exploded.join(dupFreq, Seq("g"), "left")
-      .select(col("id"), col("g"), coalesce(col("f"), lit(1L)).as("f"))
-      .groupBy(col("id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("f"), col("g")))),
-        x => x.getField("g")).as("osh"))
-      .withColumn("n_sh", size(col("osh")).cast("long"))
-      // prefix length floor((1-t)*|A|) + 1, with one extra slot of slack:
-      // t is not exactly representable in binary (e.g. 0.8), so the FP
-      // product can round the floor down at integer boundaries and lose
-      // a required candidate. Slack only adds candidates — the final
-      // intersection keeps the result exact. (A boundary pair at sf0.1,
-      // |B| = t*|A| exactly, caught this.)
-      .withColumn("plen",
-        (floor(size(col("osh")) * lit(1.0 - threshold) + lit(1e-9)) + 2).cast("int"))
+    val sets = shingleSets(df, textCol, idCol, n)
+    val ordered = rarestFirst(sets, threshold)
       .repartition(col("id"))
     val prefixes = ordered.select(col("id"), col("n_sh"),
       posexplode(slice(col("osh"), lit(1), col("plen"))).as(Seq("p0", "g")))
@@ -117,54 +75,19 @@ object Dedup {
               lit(threshold / (1.0 + threshold)) - lit(1e-6))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val withSets = candidates
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    withSets
-      .withColumn("n_inter",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard", round(
-        col("n_inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardVerified(candidates, setsAs(sets, "id_a", "sh_a"),
+      setsAs(sets, "id_b", "sh_b"), threshold)
   }
 
   /** Naive full inverted-index variant (kept for differential testing —
     * must produce exactly the same pairs as the prefix-filtered path). */
   private[graft] def ngramJaccardPairsFullIndex(
       df: DataFrame, textCol: Column, idCol: Column,
-      n: Int, threshold: Double,
-      maxShingleFreq: Option[Long] = None): DataFrame = {
-    // repartition barriers: materialize the HOF-heavy shingle projection
-    // once (ReuseExchange lets every join side read the same exchange
-    // instead of recomputing the expression subtree — measured 2-3x on
-    // these pipelines, see Similarity's perf note)
-    // barrier BEFORE the filter: Filter(size(sh)>0) collapsed onto the
-    // projection would evaluate the shingle HOF twice per row
-    // shuffle the RAW rows first, then compute shingles post-exchange:
-    // a single-row-group parquet scan is ONE task, so computing the HOF
-    // in the scan stage serializes it; the exchange also doubles as the
-    // ReuseExchange barrier for every downstream join side
-    val sets = df.select(idCol.as("id"), textCol.as("__text"))
-      .repartition(col("id"))
-      // pre-filter on the cheap token count BEFORE the shingle expr: a
-      // post-projection size filter would collapse onto the projection
-      // and evaluate it twice per row
-      .filter(size(TextAnalysis.tokens(col("__text"))) >= n)
-      .select(col("id"), shingles(col("__text"), n).as("sh"))
-      // second (tiny) exchange AFTER the computation: every downstream
-      // consumer (freq, inverted index, both verification joins) reuses
-      // the materialized arrays instead of re-running the expression
-      .repartition(col("id"))
+      n: Int, threshold: Double): DataFrame = {
+    val sets = shingleSets(df, textCol, idCol, n)
     val sizes = sets.select(col("id"), size(col("sh")).cast("long").as("n_sh"))
-    val exploded0 = sets.select(col("id"), explode(col("sh")).as("g"))
-    val exploded = (maxShingleFreq match {
-      case Some(maxF) =>
-        val freq = exploded0.groupBy("g").count().filter(col("count") <= maxF)
-        exploded0.join(freq.select("g"), Seq("g"))
-      case None => exploded0
-    }).repartition(col("g"))
+    val exploded = sets.select(col("id"), explode(col("sh")).as("g"))
+      .repartition(col("g"))
     val inter = exploded.as("a")
       .join(exploded.as("b"),
         col("a.g") === col("b.g") && col("a.id") < col("b.id"))
@@ -180,12 +103,90 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** (id, sh) shingle-set table — the exchange-bracketed shingle
+    * computation every n-gram and MinHash path starts from. Barrier
+    * rationale: shuffle the RAW rows first (a single-row-group parquet
+    * scan is ONE task, so computing the HOF in the scan stage
+    * serializes it); pre-filter on the cheap token count BEFORE the
+    * shingle expr (a post-projection size filter would collapse onto
+    * the projection and evaluate it twice per row); a second (tiny)
+    * exchange AFTER the computation so every downstream consumer
+    * (frequencies, inverted index, both verification joins) reuses the
+    * materialized arrays instead of re-running the expression. */
+  private[graft] def shingleSets(df: DataFrame, textCol: Column,
+                                 idCol: Column, n: Int): DataFrame =
+    df.select(idCol.as("id"), textCol.as("__text"))
+      .repartition(col("id"))
+      .filter(size(TextAnalysis.tokens(col("__text"))) >= n)
+      .select(col("id"), shingles(col("__text"), n).as("sh"))
+      .repartition(col("id"))
+
+  /** Keys of `df` that occur >= 2 times corpus-wide, with their count
+    * in `countCol` — the duplicated tail. A key missing from it occurs
+    * exactly once BY DEFINITION, so a left join back plus
+    * coalesce(count, 1) reproduces every count exactly, while the
+    * join's right side shrinks from every distinct key to the tail —
+    * small enough that AQE converts the join to broadcast at runtime,
+    * which also removes the key exchange of the joined stream (and,
+    * when that stream stays partitioned by id, the per-doc groupBy
+    * exchange after it). A huge tail just keeps the shuffled join. */
+  private def recurring(df: DataFrame, countCol: String,
+                        keys: String*): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(countCol))
+      .filter(col(countCol) >= 2)
+
+  /** Per-doc rarest-first shingle order — (id, osh, n_sh, plen): each
+    * doc's shingles sorted by (global frequency asc, shingle), the
+    * shared total order of the prefix filters, and the prefix length
+    * floor((1-t)*|A|) + 1 with one extra slot of slack: t is not
+    * exactly representable in binary (e.g. 0.8), so the FP product can
+    * round the floor down at integer boundaries and lose a required
+    * candidate. Slack only adds candidates — the final intersection
+    * keeps the result exact. (A boundary pair at sf0.1, |B| = t*|A|
+    * exactly, caught this.) */
+  private def rarestFirst(sets: DataFrame, threshold: Double): DataFrame = {
+    val exploded = sets.select(col("id"), explode(col("sh")).as("g"))
+    exploded.join(recurring(exploded, "f", "g"), Seq("g"), "left")
+      .select(col("id"), col("g"), coalesce(col("f"), lit(1L)).as("f"))
+      .groupBy(col("id"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("f"), col("g")))),
+        x => x.getField("g")).as("osh"))
+      .withColumn("n_sh", size(col("osh")).cast("long"))
+      .withColumn("plen",
+        (floor(size(col("osh")) * lit(1.0 - threshold) + lit(1e-9)) + 2).cast("int"))
+  }
+
+  /** `sets` as (idName, shName) — one side of a candidate verification. */
+  private def setsAs(sets: DataFrame, idName: String, shName: String): DataFrame =
+    sets.select(col("id").as(idName), col("sh").as(shName))
+
+  /** Candidate pairs with both shingle sets joined in: `a` and `b` are
+    * (id, set) tables from [[setsAs]], joined on their id names. */
+  private def withSets(candidates: DataFrame, a: DataFrame,
+                       b: DataFrame): DataFrame =
+    candidates.join(a, a.columns.head).join(b, b.columns.head)
+
+  /** Exact verification of candidate pairs: the round-6 Jaccard of the
+    * two shingle sets (one array intersection per candidate pair, never
+    * the full inverted index), keeping pairs at or above `threshold`.
+    * Output: the candidate columns (extra ones ride along) + jaccard. */
+  private def jaccardVerified(candidates: DataFrame, a: DataFrame,
+                              b: DataFrame, threshold: Double): DataFrame = {
+    val (sa, sb) = (col(a.columns(1)), col(b.columns(1)))
+    withSets(candidates, a, b)
+      .withColumn("n_inter", size(array_intersect(sa, sb)).cast("long"))
+      .withColumn("jaccard", round(
+        col("n_inter").cast("double") /
+          (size(sa) + size(sb) - col("n_inter")).cast("double"), 6))
+      .filter(col("jaccard") >= threshold)
+      .select(candidates.columns.map(col) :+ col("jaccard"): _*)
+  }
+
   // ------------------------------------------------------------- MinHash
 
-  private val MinhashPrime = 2147483647L // 2^31 - 1
-
   /** k permutation coefficients (a, b), fixed by seed — the SINGLE
-    * derivation shared with the codegen expressions (they must stay
+    * derivation shared with the codegen expression (they must stay
     * bit-identical for the differential tests and the LSH == exact
     * equivalence to hold). */
   private def coeffs(k: Int, seed: Long): Seq[(Long, Long)] = {
@@ -193,22 +194,44 @@ object Dedup {
     as.toSeq.zip(bs.toSeq)
   }
 
+  /** Shingle base hashes: xxhash64 reduced mod p. */
+  private def baseHashes(shingleSet: Column): Column =
+    transform(shingleSet, s => pmod(xxhash64(s), lit(graft.expressions.MinHashCoeffs.P)))
+
   /** MinHash signature (k minima over the shingle set, universal-hash
     * family over a 64-bit base hash) as an array column — computed by the
-    * codegen'd [[graft.expressions.MinHashSignature]] (the k-pass HOF
+    * codegen'd [[graft.expressions.MinHash]] (the k-pass HOF
     * formulation below is kept for differential testing). All arithmetic
     * stays below 2^63 (a,x < 2^31). */
   def minhashSignature(shingleSet: Column, k: Int, seed: Long): Column =
-    graft.expressions.MinHashSignature(
-      transform(shingleSet, s => pmod(xxhash64(s), lit(MinhashPrime))), k, seed)
+    graft.expressions.MinHash.signature(baseHashes(shingleSet), k, seed)
 
   private[graft] def minhashSignatureHof(shingleSet: Column, k: Int, seed: Long): Column = {
-    val base = transform(shingleSet, s => pmod(xxhash64(s), lit(MinhashPrime)))
+    val p = lit(graft.expressions.MinHashCoeffs.P)
     val sig = coeffs(k, seed).map { case (a, b) =>
-      array_min(transform(base, x => pmod(x * a + b, lit(MinhashPrime))))
+      array_min(transform(baseHashes(shingleSet), x => pmod(x * a + b, p)))
     }
     array(sig: _*)
   }
+
+  /** (id, band, bucket) LSH band table over shingle sets — one codegen
+    * pass per row straight to band buckets (slicing a sig column would
+    * re-evaluate the whole signature once per band after projection
+    * collapse), co-partitioned on the join key. */
+  private[graft] def bandTable(sets: DataFrame, k: Int, bands: Int,
+                               seed: Long): DataFrame =
+    sets.select(col("id"), posexplode(
+      graft.expressions.MinHash.bands(baseHashes(col("sh")), k, bands, seed)))
+      .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
+      .repartition(col("band"), col("bucket"))
+
+  /** Self-join of a band table: docs a < b that share a (band, bucket).
+    * Callers pick and name the `a.id` / `b.id` columns. */
+  private def bandCollisions(banded: DataFrame): DataFrame =
+    banded.as("a")
+      .join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+          col("a.id") < col("b.id"))
 
   /** MinHash-LSH near-dup pairs: signature -> band buckets -> bucket
     * self-join for candidates -> exact Jaccard verification on the
@@ -221,58 +244,16 @@ object Dedup {
     * dedup topology. The exact verification joins shingle SETS (array
     * intersection per candidate pair), not the full inverted index.
     */
-  /** (id, sh) shingle-set table — the exchange-bracketed shingle
-    * computation shared by the one-shot LSH pairs and the incremental
-    * index. Barrier rationale: shuffle the RAW rows first (a single-
-    * row-group parquet scan is ONE task, so computing the HOF in the
-    * scan stage serializes it); pre-filter on the cheap token count
-    * BEFORE the shingle expr (a post-projection size filter would
-    * collapse onto the projection and evaluate it twice per row); a
-    * second (tiny) exchange AFTER the computation so every downstream
-    * consumer reuses the materialized arrays. */
-  private[graft] def shingleSets(df: DataFrame, textCol: Column,
-                                 idCol: Column, n: Int): DataFrame =
-    df.select(idCol.as("id"), textCol.as("__text"))
-      .repartition(col("id"))
-      .filter(size(TextAnalysis.tokens(col("__text"))) >= n)
-      .select(col("id"), shingles(col("__text"), n).as("sh"))
-      .repartition(col("id"))
-
-  /** (id, band, bucket) LSH band table over shingle sets — one codegen
-    * pass per row straight to band buckets (slicing a sig column would
-    * re-evaluate the whole signature once per band after projection
-    * collapse), co-partitioned on the join key. */
-  private[graft] def bandTable(sets: DataFrame, k: Int, bands: Int,
-                               seed: Long): DataFrame =
-    sets.select(col("id"),
-      posexplode(graft.expressions.MinHashBands(
-        transform(col("sh"), x => pmod(xxhash64(x), lit(MinhashPrime))),
-        k, bands, seed)))
-      .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-      .repartition(col("band"), col("bucket"))
-
   def minhashLshPairs(df: DataFrame, textCol: Column, idCol: Column,
                       n: Int = 3, k: Int = 64, bands: Int = 16,
                       threshold: Double = 0.8, seed: Long = 42L): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val sets = shingleSets(df, textCol, idCol, n)
-    val banded = bandTable(sets, k, bands, seed)
-    val candidates = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
+    val candidates = bandCollisions(bandTable(sets, k, bands, seed))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    val withSets = candidates
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    withSets
-      .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("jaccard", round(
-        col("n_inter").cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - col("n_inter")).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardVerified(candidates, setsAs(sets, "id_a", "sh_a"),
+      setsAs(sets, "id_b", "sh_b"), threshold)
   }
 
   /** CONTAINMENT near-dup pairs: |A ∩ B| / |A| >= threshold — the
@@ -293,35 +274,17 @@ object Dedup {
   def ngramContainmentPairs(df: DataFrame, textCol: Column, idCol: Column,
                             n: Int, threshold: Double): DataFrame = {
     val sets = shingleSets(df, textCol, idCol, n)
-    val exploded = sets.select(col("id"), explode(col("sh")).as("g"))
-    // f >= 2 tail only + left join/coalesce(1) — identical frequencies,
-    // broadcast-sized right side (the ngramJaccardPairs rationale)
-    val dupFreq = exploded.groupBy("g").agg(count(lit(1)).as("f"))
-      .filter(col("f") >= 2)
-    val ordered = exploded.join(dupFreq, Seq("g"), "left")
-      .select(col("id"), col("g"), coalesce(col("f"), lit(1L)).as("f"))
-      .groupBy(col("id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("f"), col("g")))),
-        x => x.getField("g")).as("osh"))
-      // same FP-boundary slack as the Jaccard path
-      .withColumn("plen",
-        (floor(size(col("osh")) * lit(1.0 - threshold) + lit(1e-9)) + 2)
-          .cast("int"))
+    val probes = rarestFirst(sets, threshold)
       .repartition(col("id"))
-    val probes = ordered.select(col("id"),
-      explode(slice(col("osh"), lit(1), col("plen"))).as("g"))
-    val index = exploded
+      .select(col("id"), explode(slice(col("osh"), lit(1), col("plen"))).as("g"))
+    val index = sets.select(col("id"), explode(col("sh")).as("g"))
     val candidates = probes.as("a")
       .join(index.as("b"),
         col("a.g") === col("b.g") && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    candidates
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")),
-        "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")),
-        "id_b")
+    withSets(candidates, setsAs(sets, "id_a", "sh_a"),
+      setsAs(sets, "id_b", "sh_b"))
       .withColumn("containment", round(
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(col("sh_a")).cast("double"), 6))
@@ -369,29 +332,13 @@ object Dedup {
       .select(col("d.id").as("id_new"), col("b.id").as("id_matched"))
       .distinct()
       .withColumn("in_base", lit(true))
-    val candDelta = dbands.as("a")
-      .join(dbands.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
+    val candDelta = bandCollisions(dbands)
       .select(col("b.id").as("id_new"), col("a.id").as("id_matched"))
       .distinct()
       .withColumn("in_base", lit(false))
-    val matchedSets = dsets.union(index.sets)
-      .select(col("id").as("id_matched"), col("sh").as("sh_m"))
-    candBase.union(candDelta)
-      .join(dsets.select(col("id").as("id_new"), col("sh").as("sh_new")),
-        "id_new")
-      .join(matchedSets, "id_matched")
-      .withColumn("n_inter",
-        size(array_intersect(col("sh_new"), col("sh_m"))).cast("long"))
-      .withColumn("jaccard", round(
-        col("n_inter").cast("double") /
-          (size(col("sh_new")) + size(col("sh_m")) - col("n_inter"))
-            .cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_matched"), col("in_base"),
-        col("jaccard"))
+    jaccardVerified(candBase.union(candDelta),
+      setsAs(dsets, "id_new", "sh_new"),
+      setsAs(dsets.union(index.sets), "id_matched", "sh_m"), threshold)
   }
 
   // ------------------------------------------------------------- SimHash
@@ -580,6 +527,11 @@ object Dedup {
       labels = next
       it += 1
     }
+    // labels still moving are not yet the component minimum
+    if (changed > 0)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge within maxIter = $maxIter " +
+          s"rounds: $changed labels changed in the last round")
     labels.select(col("u").as("id"), col("l").as("cluster_id"))
   }
 
@@ -786,7 +738,7 @@ object Dedup {
           i => md5(array_join(slice(toks, i * chunkTokens + 1, lit(chunkTokens)), " "))))
     }
     // shuffle the raw rows before the HOF so chunking parallelizes past
-    // a single-row-group scan task (same rationale as ngramJaccardPairs)
+    // a single-row-group scan task (same rationale as shingleSets)
     val chunks = df.select(idCol.as("id"), textCol.as("__text"))
       .repartition(col("id"))
       .select(col("id"), explode(chunkFps(col("__text"))).as("fp"))
@@ -796,9 +748,7 @@ object Dedup {
     // tail, AQE broadcasts it, and both the fp-exchange of the chunk
     // stream and the groupBy(id) exchange disappear (chunks stay
     // partitioned by id). Values identical.
-    val counts = chunks.groupBy(col("fp")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-    chunks.join(counts, Seq("fp"), "left")
+    chunks.join(recurring(chunks, "c", "fp"), Seq("fp"), "left")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("c") >= 2, 1L).otherwise(0L)).as("n_dup_chunks"))
@@ -839,9 +789,7 @@ object Dedup {
     // duplicated tail only (the duplicatedSpans rationale); a chunk
     // missing from the tail had c = 1 exactly, so coalesce(c, 1)
     // reproduces every count and the kept-set is identical
-    val counts = chunks.groupBy(col("fp")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-    chunks.join(counts, Seq("fp"), "left")
+    chunks.join(recurring(chunks, "c", "fp"), Seq("fp"), "left")
       .withColumn("c", coalesce(col("c"), lit(1L)))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_chunks"),
@@ -881,15 +829,10 @@ object Dedup {
         coalesce(TextAnalysis.tokens(textCol), array()).as("__toks"))
       .repartition(col("id"))
       .localCheckpoint()
-    val wins = docs.select(col("id"), posexplode(
-        graft.expressions.RollingWindowHashes(
-          transform(col("__toks"), hashFn), windowTokens)))
-      .select(col("id"), col("pos"), col("col").as("fp"))
+    val wins = windowFps(docs, col("__toks"), windowTokens, hashFn)
     // inner join against the duplicated tail directly (same rows the
     // join+filter kept); AQE broadcasts the small tail
-    val dupFps = wins.groupBy(col("fp")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select(col("fp"))
-    val dupStarts = wins.join(dupFps, "fp")
+    val dupStarts = wins.join(recurring(wins, "c", "fp").drop("c"), "fp")
       .groupBy(col("id"))
       .agg(sort_array(collect_list(col("pos"))).as("__starts"))
     val kept = when(col("__starts").isNull, col("__toks"))
@@ -941,21 +884,15 @@ object Dedup {
                              windowTokens: Int = 16,
                              hashFn: Column => Column = spanTokenHashXx): DataFrame = {
     // shuffle raw rows before the heavy expression (single-row-group
-    // scan hazard, same rationale as ngramJaccardPairs); the exchange
+    // scan hazard, same rationale as shingleSets); the exchange
     // also lets both fingerprint consumers reuse one materialization
-    val wins = df.select(idCol.as("id"), textCol.as("__text"))
-      .repartition(col("id"))
-      .select(col("id"), posexplode(
-        graft.expressions.RollingWindowHashes(
-          transform(TextAnalysis.tokens(col("__text")), hashFn),
-          windowTokens)))
-      .select(col("id"), col("pos"), col("col").as("fp"))
+    val wins = windowFps(
+      df.select(idCol.as("id"), textCol.as("__text")).repartition(col("id")),
+      TextAnalysis.tokens(col("__text")), windowTokens, hashFn)
     // duplicated tail only: after the LEFT join, c is non-null exactly
     // when the window's fingerprint recurs (c >= 2 before), so `dup`
     // keeps identical true/false values row for row
-    val counts = wins.groupBy(col("fp")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-    val marked = wins.join(counts, Seq("fp"), "left")
+    val marked = wins.join(recurring(wins, "c", "fp"), Seq("fp"), "left")
       .select(col("id"), col("pos"), col("c").isNotNull.as("dup"))
     val tot = marked.groupBy(col("id"))
       .agg(count(lit(1)).as("n_windows"),
@@ -993,39 +930,13 @@ object Dedup {
                               hashFn: Column => Column = spanTokenHashXx): DataFrame = {
     require(windows.nonEmpty && windows.distinct.size == windows.size,
       s"windows must be distinct and non-empty: $windows")
-    // one tokenize, k window-resolution consumers: checkpoint so the
-    // tokenizer doesn't re-run per resolution (CollapseProject would
-    // otherwise inline it into every explode)
-    val toks = df.select(idCol.as("id"),
-        TextAnalysis.tokens(textCol).as("t"))
-      .repartition(col("id"))
-      .localCheckpoint()
-    val wins = windows.map { w =>
-      toks.filter(size(col("t")) >= w)
-        .select(col("id"), lit(w).as("w"), posexplode(
-          graft.expressions.RollingWindowHashes(
-            transform(col("t"), hashFn), w)))
-        .select(col("id"), col("w"), col("pos"), col("col").as("fp"))
-    }.reduce(_ unionByName _)
-    val dup = wins.groupBy(col("w"), col("fp"))
-      .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-      .select(col("w"), col("fp"))
-    val cov = wins.join(dup, Seq("w", "fp"))
-      .select(col("id"), col("w"),
-        explode(sequence(col("pos"), col("pos") + col("w") - 1)).as("p"))
+    val toks = tokenized(df, textCol, idCol)
+    val cov = dupCoverage(toks, windows, hashFn)
     val perW = windows.map { w =>
-      cov.filter(col("w") === w).select(col("id"), col("p")).distinct()
-        .groupBy(col("id")).agg(count(lit(1)).as(s"n_cov_w$w"))
+      s"n_cov_w$w" -> cov.filter(col("w") === w).select(col("id"), col("p")).distinct()
     }
-    val union = cov.select(col("id"), col("p")).distinct()
-      .groupBy(col("id")).agg(count(lit(1)).as("n_cov_union"))
-    val base = toks.select(col("id"),
-      size(col("t")).cast("long").as("n_tokens"))
-    val joined = (perW :+ union).foldLeft(base)(
-      (acc, d) => acc.join(d, Seq("id"), "left"))
-    joined.select(col("id") +: col("n_tokens") +:
-      (windows.map(w => coalesce(col(s"n_cov_w$w"), lit(0L)).as(s"n_cov_w$w")) :+
-        coalesce(col("n_cov_union"), lit(0L)).as("n_cov_union")): _*)
+    coverageCounts(toks,
+      perW :+ ("n_cov_union" -> cov.select(col("id"), col("p")).distinct()))
   }
 
   /** Recall harness for [[duplicatedSpansMultiRes]] — the exact twin
@@ -1040,50 +951,22 @@ object Dedup {
                            exactLen: Int = 4,
                            windows: Seq[Int] = Seq(4, 16)): DataFrame = {
     require(exactLen >= 1 && windows.nonEmpty && windows.min >= exactLen)
-    val toks = df.select(idCol.as("id"),
-        TextAnalysis.tokens(textCol).as("t"))
-      .repartition(col("id"))
-      .localCheckpoint()
+    // one tokenize, two consumers (literal windows / hash windows)
+    val toks = tokenized(df, textCol, idCol)
     val winsExact = toks.filter(size(col("t")) >= exactLen)
       .select(col("id"), posexplode(transform(
         sequence(lit(0), size(col("t")) - exactLen),
         i => array_join(slice(col("t"), i + 1, lit(exactLen)), " "))))
       .select(col("id"), col("pos"), col("col").as("key"))
-    val dupKeys = winsExact.groupBy(col("key"))
-      .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-      .select(col("key"))
-    val covExact = winsExact.join(dupKeys, "key")
+    val covExact = winsExact.join(recurring(winsExact, "c", "key").drop("c"), "key")
       .select(col("id"),
         explode(sequence(col("pos"), col("pos") + exactLen - 1)).as("p"))
       .distinct()
-    val winsScan = windows.map { w =>
-      toks.filter(size(col("t")) >= w)
-        .select(col("id"), lit(w).as("w"), posexplode(
-          graft.expressions.RollingWindowHashes(
-            transform(col("t"), spanTokenHashMd5 _), w)))
-        .select(col("id"), col("w"), col("pos"), col("col").as("fp"))
-    }.reduce(_ unionByName _)
-    val dupFps = winsScan.groupBy(col("w"), col("fp"))
-      .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-      .select(col("w"), col("fp"))
-    val covScan = winsScan.join(dupFps, Seq("w", "fp"))
-      .select(col("id"),
-        explode(sequence(col("pos"), col("pos") + col("w") - 1)).as("p"))
+    val covScan = dupCoverage(toks, windows, spanTokenHashMd5)
+      .select(col("id"), col("p"))
       .distinct()
-    val nE = covExact.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_cov_exact"))
-    val nS = covScan.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_cov_scan"))
-    val nB = covExact.join(covScan, Seq("id", "p"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_cov_both"))
-    toks.select(col("id"), size(col("t")).cast("long").as("n_tokens"))
-      .join(nE, Seq("id"), "left")
-      .join(nS, Seq("id"), "left")
-      .join(nB, Seq("id"), "left")
-      .select(col("id"), col("n_tokens"),
-        coalesce(col("n_cov_exact"), lit(0L)).as("n_cov_exact"),
-        coalesce(col("n_cov_scan"), lit(0L)).as("n_cov_scan"),
-        coalesce(col("n_cov_both"), lit(0L)).as("n_cov_both"))
+    coverageCounts(toks, Seq("n_cov_exact" -> covExact, "n_cov_scan" -> covScan,
+      "n_cov_both" -> covExact.join(covScan, Seq("id", "p"))))
   }
 
   /** EXACT-substring verification twin for the rolling span scan — the
@@ -1112,50 +995,55 @@ object Dedup {
     * the 100 TB corpus (the hashed rolling scan is the scale path). */
   def exactSpanRecallTwin(df: DataFrame, textCol: Column, idCol: Column,
                           exactLen: Int = 4,
-                          windowTokens: Int = 16): DataFrame = {
-    require(exactLen >= 1 && windowTokens >= exactLen)
-    // one tokenize, two consumers (literal windows / hash windows)
-    val toks = df.select(idCol.as("id"),
-        TextAnalysis.tokens(textCol).as("t"))
+                          windowTokens: Int = 16): DataFrame =
+    exactSpanRecallMulti(df, textCol, idCol, exactLen, Seq(windowTokens))
+      .withColumnRenamed("n_cov_scan", "n_cov_rolling")
+
+  /** (id, t) token arrays, shuffled by id and checkpointed: one
+    * tokenize for several consumers (CollapseProject would otherwise
+    * inline the tokenizer into every window explode). */
+  private def tokenized(df: DataFrame, textCol: Column, idCol: Column): DataFrame =
+    df.select(idCol.as("id"), TextAnalysis.tokens(textCol).as("t"))
       .repartition(col("id"))
       .localCheckpoint()
-    val winsExact = toks.filter(size(col("t")) >= exactLen)
-      .select(col("id"), posexplode(transform(
-        sequence(lit(0), size(col("t")) - exactLen),
-        i => array_join(slice(col("t"), i + 1, lit(exactLen)), " "))))
-      .select(col("id"), col("pos"), col("col").as("key"))
-    val dupKeys = winsExact.groupBy(col("key"))
-      .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-      .select(col("key"))
-    val covExact = winsExact.join(dupKeys, "key")
-      .select(col("id"),
-        explode(sequence(col("pos"), col("pos") + exactLen - 1)).as("p"))
-      .distinct()
-    val winsRoll = toks.filter(size(col("t")) >= windowTokens)
-      .select(col("id"), posexplode(
-        graft.expressions.RollingWindowHashes(
-          transform(col("t"), spanTokenHashMd5 _), windowTokens)))
-      .select(col("id"), col("pos"), col("col").as("fp"))
-    val dupFps = winsRoll.groupBy(col("fp"))
-      .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-      .select(col("fp"))
-    val covRoll = winsRoll.join(dupFps, "fp")
-      .select(col("id"),
-        explode(sequence(col("pos"), col("pos") + windowTokens - 1)).as("p"))
-      .distinct()
-    val nE = covExact.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_cov_exact"))
-    val nR = covRoll.groupBy(col("id"))
-      .agg(count(lit(1)).as("n_cov_rolling"))
-    val nB = covExact.join(covRoll, Seq("id", "p"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_cov_both"))
-    toks.select(col("id"), size(col("t")).cast("long").as("n_tokens"))
-      .join(nE, Seq("id"), "left")
-      .join(nR, Seq("id"), "left")
-      .join(nB, Seq("id"), "left")
-      .select(col("id"), col("n_tokens"),
-        coalesce(col("n_cov_exact"), lit(0L)).as("n_cov_exact"),
-        coalesce(col("n_cov_rolling"), lit(0L)).as("n_cov_rolling"),
-        coalesce(col("n_cov_both"), lit(0L)).as("n_cov_both"))
+
+  /** (id, n_tokens, <name>...): every tokenized doc with, per named
+    * (id, p) coverage table, its count of covered tokens (0 when the
+    * doc has none), each a per-doc count left-joined in order. */
+  private def coverageCounts(toks: DataFrame,
+                             covered: Seq[(String, DataFrame)]): DataFrame =
+    covered.foldLeft(toks.select(col("id"), size(col("t")).cast("long").as("n_tokens"))) {
+      case (acc, (name, cov)) =>
+        acc.join(cov.groupBy(col("id")).agg(count(lit(1)).as(name)), Seq("id"), "left")
+    }.select(col("id") +: col("n_tokens") +:
+      covered.map { case (name, _) => coalesce(col(name), lit(0L)).as(name) }: _*)
+
+  /** (id, [tag...], pos, fp): one row per w-token window of the `toks`
+    * array column of `docs`, fingerprinted by the Rabin-Karp
+    * [[graft.expressions.RollingWindowHashes]] over `hashFn` token
+    * hashes; `tag` columns ride along. */
+  private def windowFps(docs: DataFrame, toks: Column, w: Int,
+                        hashFn: Column => Column, tag: Column*): DataFrame =
+    docs.select((col("id") +: tag) :+ posexplode(
+        graft.expressions.RollingWindowHashes(transform(toks, hashFn), w)): _*)
+      .withColumnRenamed("col", "fp")
+
+  /** (id, w, p): token positions covered by a corpus-duplicated window,
+    * per resolution w — the windows of every resolution in one union,
+    * ONE fingerprint shuffle keyed (w, fp), one join back. */
+  private def dupCoverage(toks: DataFrame, windows: Seq[Int],
+                          hashFn: Column => Column): DataFrame = {
+    val wins = windows.map { w =>
+      windowFps(toks.filter(size(col("t")) >= w), col("t"), w, hashFn,
+        lit(w).as("w"))
+    }.reduce(_ unionByName _)
+    // a single resolution keys on fp alone: a constant w in the key
+    // hides from the static join-size estimate that the recurring table
+    // is distinct on it, and two broadcast joins downstream would plan
+    // as sort-merge joins
+    val keys = if (windows.size > 1) Seq("w", "fp") else Seq("fp")
+    wins.join(recurring(wins, "c", keys: _*).drop("c"), keys)
+      .select(col("id"), col("w"),
+        explode(sequence(col("pos"), col("pos") + col("w") - 1)).as("p"))
   }
 }

@@ -104,7 +104,7 @@ object Triangles {
          |und AS MATERIALIZED (
          |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
          |  FROM tr WHERE dst IS NOT NULL AND src <> dst),
-         |deg AS (
+         |deg AS MATERIALIZED (
          |  SELECT node, count(*) AS deg FROM (
          |    SELECT a AS node FROM und UNION ALL SELECT b FROM und)
          |  GROUP BY 1),

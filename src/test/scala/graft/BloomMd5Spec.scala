@@ -53,4 +53,19 @@ class BloomMd5Spec extends SparkSpec {
     marked.filter($"pos").count() shouldBe 1L
     marked.filter(!$"pos").count() shouldBe 0L
   }
+
+  test("Md5Hex equals the conv(substring(md5)) chain it replaced") {
+    import spark.implicits._
+    val vals = Seq("", "a", "0:term", "f:alpha beta", "w:1234",
+      "Ünïcodé ✓ tokens", "x" * 1000, null)
+    val df = vals.toDF("s")
+    Seq((1, 8), (1, 2), (3, 8), (5, 15)).foreach { case (pos, len) =>
+      val got = df.select(graft.expressions.Md5Hex(col("s"), pos, len))
+        .collect().map(r => if (r.isNullAt(0)) null else r.getLong(0))
+      val want = df.select(
+        conv(substring(md5(col("s")), pos, len), 16, 10).cast("long"))
+        .collect().map(r => if (r.isNullAt(0)) null else r.getLong(0))
+      assert(got.toSeq == want.toSeq, s"window ($pos,$len) diverges")
+    }
+  }
 }

@@ -42,6 +42,16 @@ class ClusterSpec extends SparkSpec {
     all(cc.map(_._2)) shouldBe 1L
   }
 
+  test("running out of rounds throws instead of returning unconverged labels") {
+    // depth 64 needs ~7 pointer-jump rounds; 2 leave labels changing
+    val pairs = pairsDf((1L until 64L).map(i => (i, i + 1)))
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(pairs, maxIter = 2, localEdgeThreshold = 0)
+    }
+    e.getMessage should include("maxIter = 2")
+    e.getMessage should include("changed")
+  }
+
   test("local union-find finish == distributed pointer jumping") {
     val rnd = new Random(13)
     val ps = Seq.fill(120) {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * `graft.expressions.BoundedAggs` (KmvAgg, TopKAgg, TopTermsAgg,
   * MinKAgg) replaced, moved here unchanged from `graft.functions.Kmv`
   * and `graft.functions.TopK`. They are the reference models of the
-  * differential specs (OptimizationR11Spec, ProfilerShapeSpec): each
+  * differential specs (ProfilerShapeSpec, SimilaritySpec): each
   * native aggregate must equal its Aggregator bit for bit, schema
   * included. */
 object LegacyAggregators {

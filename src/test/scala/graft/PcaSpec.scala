@@ -113,4 +113,111 @@ class PcaSpec extends SparkSpec {
     an[Exception] should be thrownBy
       Pca.topComponentInt(z, $"embedding", dim = 2)
   }
+
+  test("persisted deflation chain replays the recomputed reference") {
+    val emb = Tables(spark, sf001, "embeddings")
+    val dim = 64
+    // driver-side exact integer replay over the collected rows: the
+    // pre-persist semantics (quantize, center, iters x (dot, lane agg,
+    // truncating renorm), truncating deflation) in plain BigInt
+    val rows = emb.select(col("embedding").cast("array<double>"))
+      .collect().map(_.getSeq[Double](0).toArray)
+    val scale = 256
+    val q = rows.map(_.map(x => math.floor(x * scale).toLong))
+    val mean = Array.tabulate(dim)(j =>
+      q.map(_(j)).sum / q.length)
+    val c0 = q.map(r => Array.tabulate(dim)(j => r(j) - mean(j)))
+    def power(lanes: Array[Array[Long]], iters: Int): Array[Long] = {
+      var v = Array.fill(dim)(scale.toLong)
+      for (_ <- 1 to iters) {
+        val w = Array.fill(dim)(BigInt(0))
+        lanes.foreach { r =>
+          var d = BigInt(0)
+          for (j <- 0 until dim) d += BigInt(r(j)) * v(j)
+          for (j <- 0 until dim) w(j) += BigInt(r(j)) * d
+        }
+        val maxAbs = w.map(_.abs).max
+        v = w.map(x => ((x * scale) / maxAbs).toLong)
+      }
+      v
+    }
+    def deflate(lanes: Array[Array[Long]], v: Array[Long])
+        : Array[Array[Long]] = {
+      val vsq = v.map(x => x * x).sum
+      lanes.map { r =>
+        var d = 0L
+        for (j <- 0 until dim) d += r(j) * v(j)
+        Array.tabulate(dim) { j =>
+          val num = v(j) * d
+          r(j) - (num - (num % vsq)) / vsq
+        }
+      }
+    }
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val v1 = power(c0, 3)
+    val d1 = deflate(c0, v1)
+    val v2 = power(d1, 3)
+    val d2 = deflate(d1, v2)
+    val v3 = power(d2, 3)
+    val gotV1 = graft.functions.Pca.topComponentInt(
+      emb, col("embedding"), dim)
+    val gotV2 = graft.functions.Pca.secondComponentInt(
+      emb, col("embedding"), dim)
+    val gotV3 = graft.functions.Pca.thirdComponentInt(
+      emb, col("embedding"), dim)
+    assert(gotV1.sameElements(v1), "v1 diverges from driver replay")
+    assert(gotV2.sameElements(v2), "v2 diverges from driver replay")
+    assert(gotV3.sameElements(v3), "v3 diverges from driver replay")
+    // no persisted blocks may leak out of the trains
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
+      "PCA train leaked persisted RDDs")
+  }
+
+  test("Pca persisted loops keep exact integers past UnrollMax dims") {
+    import spark.implicits._
+    val dim = 130 // > UnrollMax(128): dot/deflation run the HOF forms
+    val scale = 256
+    val rnd = new scala.util.Random(7)
+    val rows = Array.fill(40)(Array.fill(dim)(rnd.nextDouble() * 2 - 1))
+    val df = rows.map(_.toSeq).toSeq.toDF("embedding")
+    // driver-side exact integer replay (the deflation-chain spec's
+    // reference, at a width that forces the fallback path)
+    val q = rows.map(_.map(x => math.floor(x * scale).toLong))
+    val mean = Array.tabulate(dim)(j => q.map(_(j)).sum / q.length)
+    val c0 = q.map(r => Array.tabulate(dim)(j => r(j) - mean(j)))
+    def power(lanes: Array[Array[Long]], iters: Int): Array[Long] = {
+      var v = Array.fill(dim)(scale.toLong)
+      for (_ <- 1 to iters) {
+        val w = Array.fill(dim)(BigInt(0))
+        lanes.foreach { r =>
+          var d = BigInt(0)
+          for (j <- 0 until dim) d += BigInt(r(j)) * v(j)
+          for (j <- 0 until dim) w(j) += BigInt(r(j)) * d
+        }
+        val maxAbs = w.map(_.abs).max
+        v = w.map(x => ((x * scale) / maxAbs).toLong)
+      }
+      v
+    }
+    def deflate(lanes: Array[Array[Long]], v: Array[Long])
+        : Array[Array[Long]] = {
+      val vsq = v.map(x => x * x).sum
+      lanes.map { r =>
+        var d = 0L
+        for (j <- 0 until dim) d += r(j) * v(j)
+        Array.tabulate(dim) { j =>
+          val num = v(j) * d
+          r(j) - (num - (num % vsq)) / vsq
+        }
+      }
+    }
+    val v1 = power(c0, 3)
+    val v2 = power(deflate(c0, v1), 3)
+    val gotV1 = graft.functions.Pca.topComponentInt(
+      df, col("embedding"), dim)
+    val gotV2 = graft.functions.Pca.secondComponentInt(
+      df, col("embedding"), dim)
+    assert(gotV1.sameElements(v1), "wide-dim v1 diverges from replay")
+    assert(gotV2.sameElements(v2), "wide-dim v2 diverges from replay")
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.ExpandExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.functions._
 
 /** Plan-regression gate over the WHOLE declared query surface: a future
   * edit that reintroduces an unbroadcast dimension join (nested-loop), a
@@ -158,5 +159,48 @@ class PlanAuditSpec extends SparkSpec {
           .map(n => s"$name: scan reads $n columns (pruning lost)")
       }
     withClue(offences.mkString("\n")) { offences shouldBe empty }
+  }
+
+  test("Opaque passes values through and blocks pushdown-style moves") {
+    import spark.implicits._
+    val df = Seq(1, 2, 3, 4).toDF("x")
+    val got = df.filter(graft.expressions.Opaque(col("x") % 2 === 0))
+      .collect().map(_.getInt(0)).sorted
+    assert(got.sameElements(Array(2, 4)))
+    // the wrapped expression must report non-deterministic
+    assert(!org.apache.spark.sql.GraftSql
+      .expression(graft.expressions.Opaque(col("x") > 1)).deterministic)
+  }
+
+  test("parallelismFloor lifts low-partition scans, leaves wide ones, keeps values") {
+    val docs = Tables(spark, sf001, "documents").select("doc_id", "text")
+    val p = spark.sparkContext.defaultParallelism
+    assert(docs.rdd.getNumPartitions < p, "fixture: testdata scan is narrow")
+    val floored = Tables.parallelismFloor(docs)
+    assert(floored.rdd.getNumPartitions >= p)
+    val wide = docs.repartition(p * 2)
+    assert(Tables.parallelismFloor(wide).rdd.getNumPartitions == p * 2,
+      "already-parallel input must not gain an exchange")
+    val a = docs.agg(sum(octet_length(col("text"))), count(lit(1))).head()
+    val b = floored.agg(sum(octet_length(col("text"))), count(lit(1))).head()
+    assert(a == b)
+  }
+
+  test("parallelismFloor floors narrow scans without df.rdd, skips non-narrow plans") {
+    val docs = Tables(spark, sf001, "documents").select("doc_id", "text")
+    // scanWidth sees the single-file scan without converting to RDD
+    assert(Tables.scanWidth(docs).exists(_ >= 1))
+    val p = spark.sparkContext.defaultParallelism
+    assert(Tables.parallelismFloor(docs).rdd.getNumPartitions >= p)
+    // a shuffling plan is not narrow: no width probe, no floor — the
+    // r10 .rdd probe would have materialized its stages at
+    // construction under AQE (ADVICE r10 / VERDICT item 10)
+    val agged = docs.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    assert(Tables.scanWidth(agged).isEmpty)
+    assert(Tables.parallelismFloor(agged) eq agged)
+    // filters over the scan stay narrow
+    val filtered = docs.filter(
+      org.apache.spark.sql.functions.length(col("text")) > 10)
+    assert(Tables.scanWidth(filtered).exists(_ >= 1))
   }
 }

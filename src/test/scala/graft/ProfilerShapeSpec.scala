@@ -123,4 +123,39 @@ class ProfilerShapeSpec extends SparkSpec {
     one(134217728L)._5 shouldBe 1L
     one(134217729L)._5 shouldBe 2L
   }
+
+  test("KmvAgg estimate+sketch equal the udaf Aggregators, schema included") {
+    import org.apache.spark.sql.functions.udaf
+    val li = Tables(spark, sf001, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"),
+        col("l_partkey").cast("string").as("l_comment"))
+      .repartition(7) // force partial buffers + merges
+    for (k <- Seq(2, 16, 1024)) {
+      val legacyEst = udaf(new LegacyAggregators.KmvAggregator(k))
+      val legacySk = udaf(new LegacyAggregators.KmvSketchAggregator(k))
+      val h = coalesce(
+        graft.functions.Kmv.u32(col("l_comment")), lit(-1L))
+      val oldDf = li.groupBy(col("l_suppkey") % 5)
+        .agg(legacyEst(h).as("est"), legacySk(h).as("sk"))
+      val newDf = li.groupBy(col("l_suppkey") % 5)
+        .agg(graft.expressions.KmvAgg.estimate(h, k).as("est"),
+          graft.expressions.KmvAgg.sketch(h, k).as("sk"))
+      assert(newDf.schema == oldDf.schema,
+        s"k=$k schema: ${newDf.schema} vs ${oldDf.schema}")
+      val o = oldDf.collect().map(r => (r.get(0), r.getLong(1),
+        r.getSeq[Long](2))).sortBy(_._1.toString)
+      val n = newDf.collect().map(r => (r.get(0), r.getLong(1),
+        r.getSeq[Long](2))).sortBy(_._1.toString)
+      assert(o.toSeq == n.toSeq, s"k=$k values diverge")
+    }
+    // null-sentinel + all-null group behavior
+    import spark.implicits._
+    val edge = Seq((1, -1L), (1, 5L), (2, -1L)).toDF("g", "h")
+    val got = edge.groupBy(col("g"))
+      .agg(graft.expressions.KmvAgg.estimate(col("h"), 4).as("est"),
+        graft.expressions.KmvAgg.sketch(col("h"), 4).as("sk"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2)))
+      .sortBy(_._1)
+    assert(got.toSeq == Seq((1, 1L, Seq(5L)), (2, 0L, Seq.empty[Long])))
+  }
 }

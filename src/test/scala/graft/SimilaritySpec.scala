@@ -680,4 +680,83 @@ class SimilaritySpec extends SparkSpec {
     out(9L)._3 shouldBe 1L
     out(9L)._2 shouldBe 1.0 +- 1e-5
   }
+
+  test("TopKAgg/TopTermsAgg/MinKAgg equal the udaf Aggregators, schema included") {
+    import org.apache.spark.sql.functions.udaf
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    // ties on score (incl. +/-0.0), duplicate ids, many groups
+    val rows = (1 to 5000).map { i =>
+      val g = i % 13
+      val score = rnd.nextInt(20) match {
+        case 0 => 0.0
+        case 1 => -0.0
+        case s => (s - 10).toDouble / 4.0
+      }
+      (g.toLong, (i % 700).toLong, score)
+    }
+    val df = rows.toDF("query_id", "neighbor_id", "score").repartition(9)
+    for (k <- Seq(1, 3, 10)) {
+      val legacy = udaf(new LegacyAggregators.TopKAggregator(k))
+      val oldDf = df.groupBy(col("query_id"))
+        .agg(legacy(col("neighbor_id"), col("score")).as("top"))
+      val newDf = df.groupBy(col("query_id"))
+        .agg(graft.expressions.TopKAgg(
+          col("neighbor_id"), col("score"), k).as("top"))
+      assert(newDf.schema == oldDf.schema,
+        s"k=$k schema: ${newDf.schema} vs ${oldDf.schema}")
+      val key = (r: org.apache.spark.sql.Row) => r.getLong(0)
+      val o = oldDf.collect().sortBy(key).map(_.toString).toSeq
+      val n = newDf.collect().sortBy(key).map(_.toString).toSeq
+      assert(o == n, s"k=$k TopK values diverge")
+    }
+    // terms: unicode + empty strings
+    val terms = (1 to 2000).map { i =>
+      val t = Seq("alpha", "βeta", "", "Ünïco", "zz", "a b")(i % 6) + (i % 17)
+      (i % 7, t, (i % 23).toDouble / 3.0)
+    }.toDF("group", "term", "score").repartition(5)
+    val legacyT = udaf(new LegacyAggregators.TopTermsAggregator(4))
+    val oT = terms.groupBy(col("group"))
+      .agg(legacyT(col("term"), col("score")).as("top"))
+    val nT = terms.groupBy(col("group"))
+      .agg(graft.expressions.TopTermsAgg(col("term"), col("score"), 4)
+        .as("top"))
+    assert(nT.schema == oT.schema, s"${nT.schema} vs ${oT.schema}")
+    assert(oT.collect().sortBy(_.getInt(0)).map(_.toString).toSeq ==
+      nT.collect().sortBy(_.getInt(0)).map(_.toString).toSeq)
+    // min-k string pairs
+    val keyed = (1 to 2000).map { i =>
+      (i % 5, f"k${i % 97}%03d", f"id${i % 31}%04d", i.toLong)
+    }.toDF("group", "sort_key", "id", "payload").repartition(5)
+    val legacyM = udaf(new LegacyAggregators.MinKAggregator(6))
+    val oM = keyed.groupBy(col("group"))
+      .agg(legacyM(col("sort_key"), col("id"), col("payload")).as("top"))
+    val nM = keyed.groupBy(col("group"))
+      .agg(graft.expressions.MinKAgg(col("sort_key"), col("id"),
+        col("payload"), 6).as("top"))
+    assert(nM.schema == oM.schema, s"${nM.schema} vs ${oM.schema}")
+    assert(oM.collect().sortBy(_.getInt(0)).map(_.toString).toSeq ==
+      nM.collect().sortBy(_.getInt(0)).map(_.toString).toSeq)
+  }
+
+  test("native TopKAgg survives the ObjectHashAggregate sort-based fallback") {
+    import org.apache.spark.sql.functions.udaf
+    import spark.implicits._
+    // > spark.sql.objectHashAggregate.sortBased.fallbackThreshold (128)
+    // distinct groups per task forces the serialize-into-sort path;
+    // equality with the udaf pins serialize/deserialize + sorted merge
+    val rows = (1 to 40000).map { i =>
+      ((i % 1500).toLong, (i % 37).toLong, ((i * 31) % 101).toDouble / 7.0)
+    }
+    val df = rows.toDF("query_id", "neighbor_id", "score").repartition(3)
+    val legacy = udaf(new LegacyAggregators.TopKAggregator(5))
+    val o = df.groupBy(col("query_id"))
+      .agg(legacy(col("neighbor_id"), col("score")).as("top"))
+      .collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+    val n = df.groupBy(col("query_id"))
+      .agg(graft.expressions.TopKAgg(col("neighbor_id"), col("score"), 5)
+        .as("top"))
+      .collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+    assert(o == n)
+  }
 }

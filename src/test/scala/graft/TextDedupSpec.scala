@@ -212,6 +212,54 @@ class TextDedupSpec extends SparkSpec {
     diff shouldBe 0L
   }
 
+  // shingle base hashes of the sf0.001 corpus, as Dedup computes them
+  private def baseHashes = transform(Dedup.shingles($"text", 3),
+    s => pmod(xxhash64(s), lit(graft.expressions.MinHashCoeffs.P)))
+
+  test("MinHash bands equal a driver-side model of the MinHashCoeffs lanes") {
+    import graft.expressions.{MinHash, MinHashCoeffs}
+    val (k, bands, seed) = (64, 16, 42L)
+    val rows = Tables(spark, sf0001, "documents")
+      .select(baseHashes.as("x"), MinHash.bands(baseHashes, k, bands, seed).as("b"))
+      .collect()
+    val (as, bs) = MinHashCoeffs(k, seed)
+    rows.length should be > 0
+    rows.foreach { r =>
+      val xs = r.getSeq[Long](0)
+      val sig = (0 until k).map(j => xs.foldLeft(MinHashCoeffs.P)(
+        (m, x) => math.min(m, (as(j) * x + bs(j)) % MinHashCoeffs.P)))
+      val model = sig.grouped(k / bands)
+        .map(_.foldLeft(1125899906842597L)((h, lane) => 31L * h + lane)).toSeq
+      r.getSeq[Long](1) shouldBe model
+    }
+  }
+
+  test("MinHash outputs are bit-identical with codegen on and under NO_CODEGEN") {
+    import graft.expressions.MinHash
+    val docs = Tables(spark, sf0001, "documents")
+    val outs = Seq(MinHash.signature(baseHashes, 64, 42L),
+      MinHash.bands(baseHashes, 64, 16, 42L), MinHash.bands(baseHashes, 32, 8, 7L))
+    def run(confs: (String, String)*): Map[Long, Seq[Seq[Long]]] = {
+      val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        docs.select($"doc_id" +: outs: _*).collect().map { r =>
+          r.getLong(0) -> (1 to outs.length).map(i => r.getSeq[Long](i))
+        }.toMap
+      } finally before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val generated = run("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val interpreted = run("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    generated.size shouldBe docs.count()
+    generated shouldBe interpreted
+    generated.values.foreach(v => v.map(_.length) shouldBe Seq(64, 16, 8))
+  }
+
   test("tfidf topTerms: exact scores on a toy corpus; ties by term asc") {
     val docs = Seq(
       (1L, "en", "apple apple banana"),
@@ -542,6 +590,35 @@ class TextDedupSpec extends SparkSpec {
     e shouldBe lens.map(_.toLong * 2).sum
     b shouldBe e   // recall 1.0 by construction
     s shouldBe e   // no collision false-positives on this plant
+  }
+
+  test("exactSpanRecallTwin == exactSpanRecallMulti(windows = Seq(w)), " +
+      "n_cov_scan named n_cov_rolling") {
+    // the planted corpus of the recall audit, then the real sf0.001 one
+    val lens = Seq(8, 12, 15, 16, 17, 24, 32)
+    val planted = lens.flatMap { len =>
+      val span = (0 until len).map(i => s"p${len}t$i")
+      def doc(id: Long, tag: String, offset: Int) = {
+        val filler = (0 until 40).map(i => s"f$tag$i")
+        (id, (filler.take(offset) ++ span ++ filler.drop(offset))
+          .mkString(" "))
+      }
+      Seq(doc(len * 10L, s"a$len", 7), doc(len * 10L + 1, s"b$len", 19))
+    }.toDF("doc_id", "text")
+    val documents = Tables(spark, sf0001, "documents")
+    Seq(planted -> "planted", documents -> "sf0.001").foreach { case (docs, what) =>
+      val twin = Dedup.exactSpanRecallTwin(docs, $"text", $"doc_id",
+        exactLen = 4, windowTokens = 16)
+      val multi = Dedup.exactSpanRecallMulti(docs, $"text", $"doc_id",
+          exactLen = 4, windows = Seq(16))
+        .withColumnRenamed("n_cov_scan", "n_cov_rolling")
+      withClue(s"$what: ") {
+        twin.columns.toSeq shouldBe multi.columns.toSeq
+        val t = twin.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+        t shouldBe multi.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+        t.map(_(4).asInstanceOf[Long]).sum should be > 0L
+      }
+    }
   }
 
   test("trimDuplicatedSpansRolling: md5 and xxhash paths agree here") {
