@@ -106,6 +106,18 @@ object SparkEntry {
        |  md5(string_agg(array_to_string(piece, ' '), ' ' ORDER BY s)) AS digest
        |FROM pieces GROUP BY 1, 2""".stripMargin
 
+  /** Row-hash view of [[Pack.inputTargetBlocks]] output, the shape
+    * [[TrainBlocksOracle]] replays: md5 of the comma-joined input and
+    * target ids, and the count of non-padding targets. */
+  private def trainBlockDigests(blocks: DataFrame): DataFrame =
+    blocks.select(col("group_id"), col("example_id"),
+      md5(array_join(transform(col("input_ids"), _.cast("string")), ","))
+        .as("input_digest"),
+      md5(array_join(transform(col("target_ids"), _.cast("string")), ","))
+        .as("target_digest"),
+      aggregate(col("class_weights"), lit(0L), (a, x) => a + x)
+        .as("n_weight1"))
+
   /** Fixed per-tag scratch dir under java.io.tmpdir: repeated
     * bench/verify runs WIPE and reuse one path per query instead of
     * accumulating a fresh full-corpus copy per invocation (the jsonl
@@ -276,16 +288,9 @@ object SparkEntry {
       PartitionedDataset.writeTFRecords(
         PartitionedDataset.packExamples(blocks,
           Grouper.byColumn("group_id")), tmp)
-      PartitionedDataset.decodeExamples(
+      trainBlockDigests(PartitionedDataset.decodeExamples(
         PartitionedDataset.loadTFRecords(s, s"$tmp/groups.tfrecord-*"),
-        blocks.schema)
-        .select(col("group_id"), col("example_id"),
-          md5(array_join(transform(col("input_ids"), _.cast("string")),
-            ",")).as("input_digest"),
-          md5(array_join(transform(col("target_ids"), _.cast("string")),
-            ",")).as("target_digest"),
-          aggregate(col("class_weights"), lit(0L), (a, x) => a + x)
-            .as("n_weight1"))
+        blocks.schema))
     }, oracle =
       // train-block replay: vocab ids per token position, per-lang
       // global stream order (doc_id, pos), 129-id blocks, shifted
@@ -3204,15 +3209,8 @@ object SparkEntry {
       val enc = graft.functions.Vocab.encodeIds(docs,
           col("doc_id"), col("text"), k = 500)
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      Pack.inputTargetBlocks(enc, col("lang"), col("doc_id"),
-          col("ids"), seqLen = 128)
-        .select(col("group_id"), col("example_id"),
-          md5(array_join(transform(col("input_ids"), _.cast("string")),
-            ",")).as("input_digest"),
-          md5(array_join(transform(col("target_ids"), _.cast("string")),
-            ",")).as("target_digest"),
-          aggregate(col("class_weights"), lit(0L), (a, x) => a + x)
-            .as("n_weight1"))
+      trainBlockDigests(Pack.inputTargetBlocks(enc, col("lang"),
+        col("doc_id"), col("ids"), seqLen = 128))
     }, oracle = TrainBlocksOracle),
     // SUBSAMPLE -> LM-BLOCKS composition: word2vec frequency
     // subsampling thins the token stream (stopwords decimated, rare
@@ -3225,15 +3223,8 @@ object SparkEntry {
       val enc = graft.functions.Vocab.subsampleIds(docs,
           col("doc_id"), col("text"), t = 0.001, k = 500)
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      Pack.inputTargetBlocks(enc, col("lang"), col("doc_id"),
-          col("ids"), seqLen = 128)
-        .select(col("group_id"), col("example_id"),
-          md5(array_join(transform(col("input_ids"), _.cast("string")),
-            ",")).as("input_digest"),
-          md5(array_join(transform(col("target_ids"), _.cast("string")),
-            ",")).as("target_digest"),
-          aggregate(col("class_weights"), lit(0L), (a, x) => a + x)
-            .as("n_weight1"))
+      trainBlockDigests(Pack.inputTargetBlocks(enc, col("lang"),
+        col("doc_id"), col("ids"), seqLen = 128))
     }, oracle =
       // the composition: subsample keep-rule CTEs feeding the block
       // CTEs — both replayed verbatim from their standalone twins

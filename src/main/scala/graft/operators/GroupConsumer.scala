@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -9,13 +8,15 @@ import graft.functions.TextAnalysis
 /** Consumer-side per-group preprocessing (SURVEY §2.6) — the reference's
   * tokenize → concatenate → chunk-into-fixed-blocks pipeline
   * (examples/dataset_utils.py:112-148, applied per group at
-  * train_jax.py:118-122), expressed relationally: explode tokens with
-  * positions, assign a global per-group sequence, bucket into blocks.
+  * train_jax.py:118-122), expressed relationally on the fixed-context
+  * packer's span glue: each document gets its running token offset,
+  * explodes into only the blocks it overlaps, and the pieces glue per
+  * block.
   *
-  * Scale shape: one shuffle on the group key serves the sequence window
-  * AND the per-block aggregation; token explosion is linear and never
-  * collects a group in memory (unlike the tf.data original, which
-  * buffers per group).
+  * Scale shape: one shuffle on the group key serves the offset window,
+  * a second on (group, block) the glue, both carrying document-sized
+  * rows; no token ever becomes its own row and no group is collected in
+  * memory (unlike the tf.data original, which buffers per group).
   */
 object GroupConsumer {
 
@@ -30,35 +31,14 @@ object GroupConsumer {
   def chunkedBlocks(df: DataFrame, grouper: Grouper, textCol: Column,
                     orderCol: Column, blockSize: Int,
                     dropRemainder: Boolean = false): DataFrame = {
-    // global token sequence = per-DOC running offset + within-doc token
-    // position: the window sorts only the document rows, not the
-    // exploded tokens (15M-token stress case: the token-level
-    // row_number sort was the pipeline's dominant cost)
-    val docs = grouper.keyed(df)
-      .select(col(grouper.name), orderCol.as("__ord"),
-        TextAnalysis.tokens(textCol).as("__toks"))
-    // xxhash64 of the token array breaks orderCol ties deterministically:
-    // without it the running-sum offsets below would depend on the
-    // engine's tie order (nondeterministic digests). Two rows tying on
-    // BOTH columns carry identical token lists, so their order is
-    // immaterial.
-    val wDoc = Window.partitionBy(col(grouper.name))
-      .orderBy(col("__ord"), xxhash64(col("__toks")))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withOffset = docs.withColumn("__offset",
-      coalesce(sum(size(col("__toks"))).over(wDoc).cast("long"), lit(0L)))
-    val seqd = withOffset
-      .select(col(grouper.name), col("__offset"),
-        posexplode(col("__toks")).as(Seq("__pos", "__tok")))
-      .withColumn("__seq", col("__offset") + col("__pos") + 1)
-      .withColumn("block_idx", expr(s"CAST((__seq - 1) DIV $blockSize AS BIGINT)"))
-    val blocks = seqd
-      .groupBy(col(grouper.name), col("block_idx"))
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        md5(array_join(transform(
-          array_sort(collect_list(struct(col("__seq"), col("__tok")))),
-          x => x.getField("__tok")), " ")).as("block_digest"))
+    require(blockSize > 0, "blockSize must be positive")
+    val docs = Pack.docOffsets(grouper.keyed(df), col(grouper.name),
+      orderCol, TextAnalysis.tokens(textCol))
+    val blocks = Pack.gluedParts(docs, blockSize)
+      .select(col("group_id").as(grouper.name),
+        col("example_id").as("block_idx"),
+        col("n_tokens"),
+        md5(concat_ws(" ", col("__blk"))).as("block_digest"))
     if (dropRemainder) blocks.filter(col("n_tokens") === blockSize) else blocks
   }
 

@@ -30,7 +30,7 @@ final case class PackBuffer(items: Seq[Array[Byte]], total: Long)
   * deterministic variant see [[Pack.packCappedDeterministic]].
   */
 final class PackWithLimit(limit: Long)
-    extends Aggregator[Array[Byte], PackBuffer, Seq[Array[Byte]]] {
+    extends Aggregator[Array[Byte], PackBuffer, PackBuffer] {
 
   override def zero: PackBuffer = PackBuffer(Vector.empty, 0L)
 
@@ -57,11 +57,12 @@ final class PackWithLimit(limit: Long)
       PackBuffer(items, total)
     }
 
-  override def finish(b: PackBuffer): Seq[Array[Byte]] = b.items
+  // the buffer IS the result: its total is the group's num_bytes, so
+  // nothing re-walks the packed array to sum it
+  override def finish(b: PackBuffer): PackBuffer = b
 
   override def bufferEncoder: Encoder[PackBuffer] = Encoders.product[PackBuffer]
-  override def outputEncoder: Encoder[Seq[Array[Byte]]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Array[Byte]]]()
+  override def outputEncoder: Encoder[PackBuffer] = bufferEncoder
 }
 
 /** Partition-and-pack — the reference's flagship pipeline
@@ -74,7 +75,8 @@ object Pack {
   /** Reference protobuf size ceiling (beam_transforms.py:27). */
   val BytesLimit: Long = 2000000000L
 
-  /** The capped packer as a DataFrame aggregation column:
+  /** The capped packer as a DataFrame aggregation column, a struct of
+    * `items` (the packed payloads) and `total` (their byte sum):
     * `df.groupBy("group_id").agg(packWithLimit(limit)($"bytes"))`. */
   def packWithLimit(limit: Long = BytesLimit): Column => Column = {
     val u = udaf(new PackWithLimit(limit))
@@ -90,14 +92,12 @@ object Pack {
     grouper.keyed(df)
       .select(col(grouper.name), payload.cast("binary").as("__payload"))
       .groupBy(col(grouper.name))
-      .agg(packWithLimit(limit)(col("__payload")).as("examples"))
+      .agg(packWithLimit(limit)(col("__payload")).as("__packed"))
       .select(
         col(grouper.name),
-        col("examples"),
-        size(col("examples")).cast("long").as("num_examples"),
-        coalesce(aggregate(col("examples"), lit(0L),
-          (acc, x) => acc + octet_length(x).cast("long")), lit(0L))
-          .as("num_bytes"))
+        col("__packed.items").as("examples"),
+        size(col("__packed.items")).cast("long").as("num_examples"),
+        col("__packed.total").as("num_bytes"))
 
   /** Deterministic capped pack: rows are packed greedily in ascending
     * (byte size, tiebreak) order, which makes the surviving set — not
@@ -169,14 +169,12 @@ object Pack {
     * and splits documents — both shapes ship in production, for
     * different trainers.
     *
-    * Topology: no token ever becomes its own row. Per-doc token arrays
-    * are materialized once behind a repartition barrier (alias-inlining
-    * hazard — the tokenize battery must not be rebuilt inside the
-    * window/agg); one window computes each doc's running token offset;
-    * each doc explodes into only the examples it overlaps (≈ 1 + k/L
-    * rows per doc, NOT k); array slices carve the per-example pieces;
-    * one groupBy glues pieces in stream order. Two exchanges total
-    * (group, then group × example), both carrying doc-granularity rows.
+    * Topology: no token ever becomes its own row. [[docOffsets]] gives
+    * each doc its running token offset in one window; each doc explodes
+    * into only the examples it overlaps (≈ 1 + k/L rows per doc, NOT
+    * k); array slices carve the per-example pieces; one groupBy glues
+    * pieces in stream order. Two exchanges total (group, then group ×
+    * example), both carrying doc-granularity rows.
     *
     * Output: (group_id, example_id, n_tokens, n_docs, digest) where
     * digest is md5 of the space-joined example tokens — order-sensitive,
@@ -184,80 +182,46 @@ object Pack {
   def packFixedContext(df: DataFrame, groupCol: Column, idCol: Column,
                        toksCol: Column, seqLen: Int): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
-    val L = lit(seqLen.toLong)
-    val base = df
-      .select(groupCol.as("group_id"), idCol.cast("long").as("id"),
-        toksCol.as("__toks"))
-      .withColumn("__k", size(col("__toks")).cast("long"))
-      .repartition(col("group_id"))
-    val w = Window.partitionBy(col("group_id")).orderBy(col("id"))
-    glueSpans(
-      base
-        .withColumn("__end", sum(col("__k")).over(w))
-        .withColumn("__start", col("__end") - col("__k"))
-        .drop("__end"),
-      seqLen)
+    glueSpans(docOffsets(df, groupCol, idCol.cast("long"), toksCol), seqLen)
   }
 
   /** [[packFixedContext]] without the per-group window — the 100 TB
     * path when groups are FEW and huge (5 languages over a corpus puts
     * a window's whole partition on one reducer). Token offsets come
-    * from the repo's two-pass prefix-sum shape instead
-    * (`Splits.sliceByPosition`): range-partition + sort by (group, id),
-    * collect per-partition per-group token totals (groups are
-    * contiguous under the range partitioning, so this is
-    * O(partitions + groups) driver state — ONE entry per partition per
-    * resident group), fold base offsets on the driver, broadcast back,
-    * and let each partition number its own rows. Both `.rdd` passes
-    * share one RDD instance, so the sampled range boundaries are
-    * computed once and consistent. Group ids travel as strings here
-    * (offset-map keys); results are identical to the window path. */
+    * from the two-pass running sum ([[Splits.runningSums]]) over the
+    * window path's (group, id, xxhash64(tokens)) order, so results are
+    * identical to the window path. Group ids travel as strings here
+    * (offset-map keys). */
   def packFixedContextScalable(df: DataFrame, groupCol: Column,
                                idCol: Column, toksCol: Column,
                                seqLen: Int): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
-    val spark = df.sparkSession
     val base = df
       .select(groupCol.cast("string").as("group_id"),
         idCol.cast("long").as("id"), toksCol.as("__toks"))
       .withColumn("__k", size(col("__toks")).cast("long"))
-      .repartitionByRange(col("group_id"), col("id"))
-      .sortWithinPartitions(col("group_id"), col("id"))
-    val rdd = base.rdd // single reference: both passes see one partitioning
-    val gIdx = base.schema.fieldIndex("group_id")
-    val kIdx = base.schema.fieldIndex("__k")
-    val perPart = rdd.mapPartitionsWithIndex { (i, it) =>
-      val m = scala.collection.mutable.LinkedHashMap[String, Long]()
-      it.foreach { r =>
-        val g = r.getString(gIdx)
-        m.update(g, m.getOrElse(g, 0L) + r.getLong(kIdx))
-      }
-      Iterator.single(i -> m.toVector)
-    }.collect().sortBy(_._1)
-    val running = scala.collection.mutable.HashMap[String, Long]()
-    val bases = Map.newBuilder[(Int, String), Long]
-    perPart.foreach { case (i, gs) =>
-      gs.foreach { case (g, k) =>
-        bases += ((i, g) -> running.getOrElse(g, 0L))
-        running.update(g, running.getOrElse(g, 0L) + k)
-      }
-    }
-    val bcast = spark.sparkContext.broadcast(bases.result())
-    val outSchema = base.schema
-      .add(org.apache.spark.sql.types.StructField("__start",
-        org.apache.spark.sql.types.LongType, nullable = false))
-    val withStart = spark.createDataFrame(
-      rdd.mapPartitionsWithIndex { (i, it) =>
-        val local = scala.collection.mutable.HashMap[String, Long]()
-        it.map { r =>
-          val g = r.getString(gIdx)
-          val start = bcast.value.getOrElse((i, g), 0L) +
-            local.getOrElse(g, 0L)
-          local.update(g, local.getOrElse(g, 0L) + r.getLong(kIdx))
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ start)
-        }
-      }, outSchema)
-    glueSpans(withStart, seqLen)
+    glueSpans(Splits.runningSums(base, "group_id", col("__k"),
+      col("id"), xxhash64(col("__toks")))._1, seqLen)
+  }
+
+  /** Each doc's offset in its group's token stream: (group_id, id,
+    * __toks, __k = token count, __start). The token arrays materialize
+    * once behind a `repartition(group_id)` barrier (alias-inlining
+    * hazard — the tokenize battery must not be rebuilt inside the
+    * window/agg), which the window reuses. Docs run in
+    * (id, xxhash64(__toks)) order over a ROWS frame: the hash breaks id
+    * ties deterministically, and two docs tying on both carry the same
+    * tokens, so every doc owns its own span and which of the two comes
+    * first is immaterial. */
+  private[operators] def docOffsets(df: DataFrame, groupCol: Column,
+                                    idCol: Column, toksCol: Column): DataFrame = {
+    val w = Window.partitionBy(col("group_id"))
+      .orderBy(col("id"), xxhash64(col("__toks")))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.select(groupCol.as("group_id"), idCol.as("id"), toksCol.as("__toks"))
+      .withColumn("__k", size(col("__toks")).cast("long"))
+      .repartition(col("group_id"))
+      .withColumn("__start", sum(col("__k")).over(w) - col("__k"))
   }
 
   /** Shared tail of the fixed-context packers: input carries
@@ -272,11 +236,12 @@ object Pack {
         col("n_docs"),
         md5(concat_ws(" ", col("__blk"))).as("digest"))
 
-  /** The span-glue core shared by [[packFixedContext]]'s digest view
-    * and [[inputTargetBlocks]]' id view: (group_id, example_id,
-    * n_tokens, n_docs, __blk = the glued token array in stream
-    * order). */
-  private def gluedParts(withStart: DataFrame, seqLen: Int): DataFrame = {
+  /** The span-glue core shared by [[packFixedContext]]'s digest view,
+    * [[inputTargetBlocks]]' id view and `GroupConsumer.chunkedBlocks`:
+    * (group_id, example_id, n_tokens, n_docs, __blk = the glued token
+    * array in stream order). */
+  private[operators] def gluedParts(withStart: DataFrame,
+                                    seqLen: Int): DataFrame = {
     val L = lit(seqLen.toLong)
     val spans = withStart
       // zero-token docs are dropped HERE (explode of null emits no
@@ -325,18 +290,7 @@ object Pack {
                         idsCol: Column, seqLen: Int): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
     val B = seqLen + 1
-    val base = df
-      .select(groupCol.as("group_id"), idCol.cast("long").as("id"),
-        idsCol.as("__toks"))
-      .withColumn("__k", size(col("__toks")).cast("long"))
-      .repartition(col("group_id"))
-    val w = Window.partitionBy(col("group_id")).orderBy(col("id"))
-    gluedParts(
-      base
-        .withColumn("__end", sum(col("__k")).over(w))
-        .withColumn("__start", col("__end") - col("__k"))
-        .drop("__end"),
-      B)
+    gluedParts(docOffsets(df, groupCol, idCol.cast("long"), idsCol), B)
       .filter(col("n_tokens") === B.toLong) // full blocks only
       .select(col("group_id"), col("example_id"),
         slice(col("__blk"), 1, seqLen).as("input_ids"),
@@ -360,15 +314,7 @@ object Pack {
                       idsCol: Column, seqLen: Int): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
     val B = seqLen + 1
-    val base = df
-      .select(groupCol.as("group_id"), idCol.cast("long").as("id"),
-        idsCol.as("__toks"))
-      .withColumn("__k", size(col("__toks")).cast("long"))
-      .repartition(col("group_id"))
-    val w = Window.partitionBy(col("group_id")).orderBy(col("id"))
-    base
-      .withColumn("__end", sum(col("__k")).over(w))
-      .withColumn("__start", col("__end") - col("__k"))
+    docOffsets(df, groupCol, idCol.cast("long"), idsCol)
       .filter(col("__k") > 0) // empty docs own no tokens, no seam
       .select(col("group_id"),
         expr(s"__start DIV $B").as("example_id"),

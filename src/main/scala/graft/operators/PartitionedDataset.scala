@@ -60,8 +60,8 @@ object PartitionedDataset {
     packed.write.mode("overwrite").parquet(dir)
 
   /** [[writeTFRecords]] with DETERMINISTIC shard assignment: each group
-    * goes to shard `md5_bucket(group_id) mod nShards` via an explicit
-    * identity partitioner, so the shard CONTENTS (not just the count)
+    * goes to shard `md5_bucket(group_id) mod nShards` via
+    * `repartitionById`, so the shard CONTENTS (not just the count)
     * are a pure function of the data — a retry, a different cluster, or
     * another engine produces byte-identical shard membership. This is
     * what makes a seeded-shuffle loader reproducible end to end: the
@@ -71,23 +71,11 @@ object PartitionedDataset {
     * file), preserving the `-of-NNNNN` contract. */
   def writeTFRecordsSharded(packed: DataFrame, dir: String, nShards: Int,
                             prefix: String = "groups.tfrecord"): Seq[String] = {
-    val spark = packed.sparkSession
-    import spark.implicits._
     val shard = pmod(
       graft.expressions.Md5Hex.u32(col("group_id").cast("string")),
       lit(nShards.toLong))
-    val pairs = packed
-      .select(shard.as("__shard"),
-        sequenceExample(col("examples")).as("record"))
-      .as[(Long, Array[Byte])]
-      .rdd
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = nShards
-        override def getPartition(key: Any): Int =
-          key.asInstanceOf[Long].toInt
-      })
-      .values
-    TFRecordIO.write(spark.createDataset(pairs), dir, prefix)
+    writeTFRecords(packed.repartitionById(nShards, shard.cast("int")),
+      dir, prefix)
   }
 
   /** Load TFRecord shards back into anonymous group rows

@@ -306,55 +306,74 @@ object Splits {
     * global order sees the same source mix, with NO global sort and no
     * single-partition window anywhere (positions gap once a shorter
     * source exhausts; ORDER semantics are unaffected). The per-source
-    * dense rank uses the [[sliceByPosition]] topology: range-partition
-    * on (source, md5, id), per-partition per-source counts to the
-    * driver (bounded: partitions × sources), offsets broadcast back,
-    * one imperative pass per partition. Output:
-    * (id, source, rank_in_source, global_pos). */
+    * dense rank is a [[runningSums]] of 1 over (source, md5, id).
+    * Output: (id, source, rank_in_source, global_pos). */
   def interleavedOrder(df: DataFrame, idCol: Column,
                        sourceCol: Column): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = df.sparkSession
     val base = df.select(idCol.cast("long").as("id"),
       sourceCol.cast("string").as("source"),
       graft.expressions.Md5Hex.u32(idCol.cast("string")).as("__u"))
-    val parts = base
-      .repartitionByRange(col("source"), col("__u"), col("id"))
-      .sortWithinPartitions(col("source"), col("__u"), col("id"))
-    val counts: Array[(Int, String, Long)] =
-      parts.rdd.mapPartitionsWithIndex { (i, it) =>
-        val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        it.foreach { r =>
-          val s = r.getString(1); m(s) = m.getOrElse(s, 0L) + 1L
-        }
-        m.iterator.map { case (s, n) => (i, s, n) }
-      }.collect()
-    val srcs = counts.map(_._2).distinct.sorted
-    val srcIdx = srcs.zipWithIndex.toMap
-    val nSrc = srcs.length.toLong
-    val offsets: Map[(Int, String), Long] =
-      counts.groupBy(_._2).flatMap { case (s, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1).map { case (pid, _, n) =>
-          val o = ((pid, s), acc); acc += n; o
-        }
+    val (ranked, sources) =
+      runningSums(base, "source", lit(1L), col("__u"), col("id"))
+    val srcs = sources.sorted
+    ranked.select(col("id"), col("source"),
+      col("__start").as("rank_in_source"),
+      (col("__start") * srcs.length +
+        array_position(typedLit(srcs), col("source")) - 1)
+        .as("global_pos"))
+  }
+
+  /** Per-key running sum of `weight` in the total order
+    * (key, `order`...), without a per-key window (a few huge keys would
+    * put a window's whole partition on one reducer). The two-pass shape
+    * of [[sliceByPosition]]: range-partition and sort, collect each
+    * (partition, key) total to the driver (keys are contiguous under
+    * the range partitioning, so O(partitions + keys) entries), fold
+    * them into exclusive base offsets, and let each partition continue
+    * the sum from its bases. Both passes read one RDD instance, so the
+    * sampled range boundaries are computed once. `key` names a string
+    * column. Returns `df` plus `__start` (the sum over the rows before
+    * this one in its key) and the keys seen. */
+  private[operators] def runningSums(df: DataFrame, key: String,
+                                     weight: Column,
+                                     order: Column*): (DataFrame, Seq[String]) = {
+    val sortCols = col(key) +: order
+    val parts = df.withColumn("__w", weight.cast("long"))
+      .repartitionByRange(sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+    val rdd = parts.rdd
+    val kIdx = parts.schema.fieldIndex(key)
+    val wIdx = parts.schema.fieldIndex("__w")
+    val totals = rdd.mapPartitionsWithIndex { (i, it) =>
+      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      it.foreach { r =>
+        val g = r.getString(kIdx); m(g) = m.getOrElse(g, 0L) + r.getLong(wIdx)
       }
-    val out = parts.rdd.mapPartitionsWithIndex { (i, it) =>
+      m.iterator.map { case (g, n) => (i, g, n) }
+    }.collect().sortBy(_._1)
+    val running = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val bases = totals.map { case (i, g, n) =>
+      val b = running.getOrElse(g, 0L)
+      running(g) = b + n
+      (i, g) -> b
+    }.toMap
+    val out = rdd.mapPartitionsWithIndex { (i, it) =>
+      var started = false
       var cur: String = null
-      var rank = 0L
+      var acc = 0L
       it.map { r =>
-        val s = r.getString(1)
-        if (s != cur) { cur = s; rank = offsets.getOrElse((i, s), 0L) }
-        val row = org.apache.spark.sql.Row(
-          r.getLong(0), s, rank, rank * nSrc + srcIdx(s))
-        rank += 1
+        val g = r.getString(kIdx)
+        if (!started || g != cur) {
+          started = true; cur = g; acc = bases.getOrElse((i, g), 0L)
+        }
+        val row = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
+        acc += r.getLong(wIdx)
         row
       }
     }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("id", LongType), StructField("source", StringType),
-      StructField("rank_in_source", LongType),
-      StructField("global_pos", LongType))))
+    (df.sparkSession.createDataFrame(out, parts.schema.add(
+      "__start", org.apache.spark.sql.types.LongType, nullable = false)),
+      running.keys.toSeq)
   }
 
   /** Deterministic fixed-size sample PER GROUP: the md5-smallest k ids

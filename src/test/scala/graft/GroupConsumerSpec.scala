@@ -23,6 +23,9 @@ class GroupConsumerSpec extends SparkSpec {
       df, Grouper.byColumn("k"), $"text", $"doc_id", blockSize = 3,
       dropRemainder = true)
     ragged.agg(sum($"n_tokens")).as[Long].head() shouldBe 6L // 8 -> two full blocks
+    an[IllegalArgumentException] should be thrownBy
+      GroupConsumer.chunkedBlocks(df, Grouper.byColumn("k"), $"text",
+        $"doc_id", blockSize = 0)
   }
 
   test("chunkedBlocks: partitioning-invariant digests") {
@@ -34,6 +37,32 @@ class GroupConsumerSpec extends SparkSpec {
         .select("group_id", "block_idx", "block_digest")
         .as[(String, Long, String)].collect().toSeq
     run(docs.repartition(11)) shouldBe run(docs.coalesce(1))
+  }
+
+  private def md5hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  test("chunkedBlocks == driver model on the sf0.001 corpus") {
+    // model: each lang's tokens in doc_id order, cut every n tokens,
+    // md5 of each space-joined block
+    val docs = Tables(spark, sf0001, "documents")
+    val n = 64
+    val got = GroupConsumer.chunkedBlocks(docs, Grouper.byColumn("lang"),
+        $"text", $"doc_id", n)
+      .select($"group_id", $"block_idx", $"n_tokens", $"block_digest")
+      .as[(String, Long, Long, String)].collect().toSet
+    val streams = docs.select($"lang", $"doc_id",
+        graft.functions.TextAnalysis.tokens($"text").as("t"))
+      .as[(String, Long, Seq[String])].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).flatMap(_._3)).toMap
+    val expect = streams.flatMap { case (lang, toks) =>
+      toks.grouped(n).zipWithIndex.map { case (b, i) =>
+        (lang, i.toLong, b.size.toLong, md5hex(b.mkString(" ")))
+      }
+    }.toSet
+    got should not be empty
+    got shouldBe expect
   }
 
   test("shuffleExamples: deterministic permutation, same multiset") {

@@ -221,6 +221,60 @@ class PackSpec extends SparkSpec {
     scalable shouldBe window
   }
 
+  test("duplicate ids in a group: window == scalable, no example over seqLen") {
+    // group g: id 1 -> a b c, id 1 -> d e, id 2 -> f; seqLen 2. The two
+    // id-1 docs tie, so either may come first, but each token belongs
+    // to exactly one 2-token example
+    val df = Seq((1L, "a b c"), (1L, "d e"), (2L, "f"))
+      .toDF("doc_id", "text").withColumn("g", lit("g"))
+    val toks = graft.functions.TextAnalysis.tokens($"text")
+    def collectAll(d: org.apache.spark.sql.DataFrame) =
+      d.select($"example_id", $"n_tokens", $"n_docs", $"digest")
+        .as[(Long, Long, Long, String)].collect().toSet
+    val window = collectAll(Pack.packFixedContext(df, $"g", $"doc_id",
+      toks, seqLen = 2))
+    val scalable = collectAll(Pack.packFixedContextScalable(df, $"g",
+      $"doc_id", toks, seqLen = 2))
+    window shouldBe scalable
+    window.foreach(_._2 should be <= 2L)
+    def cut(stream: String) = stream.split(" ").grouped(2).zipWithIndex
+      .map { case (b, e) => md5hex(b.mkString(" ")) -> e.toLong }.toSet
+    Set(cut("a b c d e f"), cut("d e a b c f")) should contain(
+      window.map(r => r._4 -> r._1))
+    // ids: the 6-id stream holds exactly two full 3-id blocks
+    val ids = Seq((1L, Seq(1, 2, 3)), (1L, Seq(4, 5)), (2L, Seq(6)))
+      .toDF("doc_id", "ids").withColumn("g", lit("g"))
+    val blocks = Pack.inputTargetBlocks(ids, $"g", $"doc_id", $"ids",
+        seqLen = 2)
+      .select($"example_id", $"input_ids", $"target_ids")
+      .as[(Long, Seq[Int], Seq[Int])].collect().sortBy(_._1)
+    blocks.map(_._1).toSeq shouldBe Seq(0L, 1L)
+    blocks.flatMap { case (_, in, tg) => in :+ tg.last }.sorted.toSeq shouldBe
+      (1 to 6)
+  }
+
+  test("packFixedContextScalable keeps a null group as its own stream") {
+    // 12 null-group docs spread over several range partitions (AQE
+    // would coalesce this tiny shuffle into one); each partition
+    // continues the null group's running sum
+    val df = (1 to 16).map(i => (if (i % 4 == 0) Some("g") else None,
+        i.toLong, s"t$i u$i"))
+      .toDF("g", "doc_id", "text")
+    val toks = graft.functions.TextAnalysis.tokens($"text")
+    def collectAll(d: org.apache.spark.sql.DataFrame) =
+      d.select($"group_id", $"example_id", $"n_tokens", $"digest")
+        .as[(Option[String], Long, Long, String)].collect().toSet
+    val window = collectAll(Pack.packFixedContext(df, $"g", $"doc_id",
+      toks, seqLen = 3))
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val previous = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try collectAll(Pack.packFixedContextScalable(df, $"g", $"doc_id", toks,
+      seqLen = 3)) shouldBe window
+    finally spark.conf.set(key, previous)
+    window.count(_._1.isEmpty) shouldBe 8 // 24 tokens, 3 per example
+  }
+
   test("packFixedContext == naive driver recompute on the sf0.001 corpus") {
     val docs = Tables(spark, sf0001, "documents")
     val L = 32
