@@ -11,7 +11,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * and `graft.functions.TopK`. They are the reference models of the
   * differential specs (ProfilerShapeSpec, SimilaritySpec): each
   * native aggregate must equal its Aggregator bit for bit, schema
-  * included. */
+  * included. The top-k ones differ from SQL order only on NaN scores,
+  * -0.0 vs 0.0, and strings whose UTF-16 and UTF-8 orders disagree. */
 object LegacyAggregators {
 
   /** Bounded min-k-distinct buffer with the TopK compaction discipline:

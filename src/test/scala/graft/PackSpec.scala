@@ -215,8 +215,9 @@ class PackSpec extends SparkSpec {
         .as[(String, Long, Long, Long, String)].collect().toSet
     val window = collectAll(Pack.packFixedContext(docs, $"lang", $"doc_id",
       graft.functions.TextAnalysis.tokens($"text"), seqLen = 32))
-    val scalable = collectAll(Pack.packFixedContextScalable(docs, $"lang",
-      $"doc_id", graft.functions.TextAnalysis.tokens($"text"), seqLen = 32))
+    val scalable = uncoalesced(collectAll(Pack.packFixedContextScalable(
+      docs, $"lang", $"doc_id", graft.functions.TextAnalysis.tokens($"text"),
+      seqLen = 32)))
     window should not be empty
     scalable shouldBe window
   }
@@ -266,12 +267,8 @@ class PackSpec extends SparkSpec {
         .as[(Option[String], Long, Long, String)].collect().toSet
     val window = collectAll(Pack.packFixedContext(df, $"g", $"doc_id",
       toks, seqLen = 3))
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val previous = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try collectAll(Pack.packFixedContextScalable(df, $"g", $"doc_id", toks,
-      seqLen = 3)) shouldBe window
-    finally spark.conf.set(key, previous)
+    uncoalesced(collectAll(Pack.packFixedContextScalable(df, $"g",
+      $"doc_id", toks, seqLen = 3))) shouldBe window
     window.count(_._1.isEmpty) shouldBe 8 // 24 tokens, 3 per example
   }
 

@@ -119,8 +119,8 @@ class PipelineMixSpec extends SparkSpec {
 
   test("interleavedOrder: dense md5 ranks, formula positions, partition-invariant") {
     val docs = Tables(spark, sf0001, "documents")
-    val out = Splits.interleavedOrder(docs, $"doc_id", $"source")
-      .as[(Long, String, Long, Long)].collect()
+    val out = uncoalesced(Splits.interleavedOrder(docs, $"doc_id", $"source")
+      .as[(Long, String, Long, Long)].collect())
     out.length shouldBe docs.count()
     val srcs = out.map(_._2).distinct.sorted
     val si = srcs.zipWithIndex.toMap
@@ -146,9 +146,9 @@ class PipelineMixSpec extends SparkSpec {
     val window = ordered.take(srcs.length * math.min(5, minSrcSize))
     window.groupBy(identity).values.map(_.size).toSet.size shouldBe 1
     // invariant under input partitioning
-    val re = Splits.interleavedOrder(docs.repartition(17, $"lang"),
-      $"doc_id", $"source")
-      .as[(Long, String, Long, Long)].collect()
+    val re = uncoalesced(Splits.interleavedOrder(
+      docs.repartition(17, $"lang"), $"doc_id", $"source")
+      .as[(Long, String, Long, Long)].collect())
     re.sortBy(_._1).toSeq shouldBe out.sortBy(_._1).toSeq
   }
 

@@ -627,6 +627,81 @@ class SimilaritySpec extends SparkSpec {
     plan should not include "Window"
   }
 
+  test("TopK.perQuery ranks NaN and ±0.0 scores at the k boundary in SQL order") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TopK
+    // DuckDB 1.0.0, ORDER BY score DESC, neighbor_id over these six
+    // rows: 3 (NaN), 4 (1.5), 0, 1, 2, 5 — NaN sorts largest, and
+    // -0.0/0.0 tie and break on the id; the window gives the same.
+    // Query 1 lacks the NaN row, so its boundary sits on ±0.0 alone
+    val scores = Seq(-0.0, 0.0, -0.0, Double.NaN, 1.5, 0.0)
+    val scored = (0 until 3).flatMap { q =>
+      scores.zipWithIndex.collect {
+        case (s, n) if q != 1 || n != 3 => (q.toLong, n.toLong, s)
+      }
+    }.toDF("query_id", "neighbor_id", "score").repartition(4)
+    // scores as text: -0.0 stays apart from 0.0 and NaN equals NaN
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Int, Double)].collect()
+        .map(r => (r._1, r._2, r._3, r._4.toString)).toSet
+    // and 300 such scores per query in one partition, so the buffers
+    // compact and then skip rows ordered after their k-th entry
+    val many = (0 until 900).map { i =>
+      ((i % 3).toLong, i.toLong, scores(i * 7 % 6))
+    }.toDF("query_id", "neighbor_id", "score").coalesce(1)
+    val w = Window.partitionBy($"query_id")
+      .orderBy($"score".desc, $"neighbor_id")
+    for (df <- Seq(scored, many); k <- Seq(1, 2, 3, 4, 6, 40))
+      withClue(s"k=$k") {
+        rows(TopK.perQuery(df, k)) shouldBe rows(
+          df.withColumn("rank", row_number().over(w))
+            .filter($"rank" <= k)
+            .select($"query_id", $"neighbor_id", $"rank", $"score"))
+      }
+    TopK.perQuery(scored, 6).filter($"query_id" === 0).orderBy("rank")
+      .select("neighbor_id").as[Long].collect().toSeq shouldBe
+      Seq(3L, 4L, 0L, 1L, 2L, 5L)
+  }
+
+  test("TopK.perGroupTerms breaks score ties by UTF-8 bytes, like the window") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TopK
+    // DuckDB 1.0.0, ORDER BY score DESC, term: a, Ａx, 😀x (UTF-16
+    // units would put the surrogate pair of 😀 before U+FF21)
+    val scored = Seq(1, 2).flatMap { g =>
+      Seq("😀x", "Ａx", "a").map(t => (g, t, 1.0))
+    }.toDF("group", "term", "score").repartition(3)
+    val w = Window.partitionBy($"group").orderBy($"score".desc, $"term")
+    for (k <- 1 to 3) withClue(s"k=$k") {
+      TopK.perGroupTerms(scored, k).as[(Int, String, Int, Double)]
+        .collect().toSet shouldBe
+        scored.withColumn("rank", row_number().over(w))
+          .filter($"rank" <= k)
+          .select($"group", $"term", $"rank", $"score")
+          .as[(Int, String, Int, Double)].collect().toSet
+    }
+  }
+
+  test("TopK.perGroupMinK orders string ids by UTF-8 bytes, like the window") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.TopK
+    // DuckDB 1.0.0, ORDER BY sort_key, id: a, Ａx, 😀x
+    val keyed = Seq(1, 2).flatMap { g =>
+      Seq("😀x", "Ａx", "a").zipWithIndex.map { case (id, p) =>
+        (g, "s", id, p.toLong)
+      }
+    }.toDF("group", "sort_key", "id", "payload").repartition(3)
+    val w = Window.partitionBy($"group").orderBy($"sort_key", $"id")
+    for (k <- 1 to 3) withClue(s"k=$k") {
+      TopK.perGroupMinK(keyed, k).as[(Int, String, Long)]
+        .collect().toSet shouldBe
+        keyed.withColumn("rank", row_number().over(w))
+          .filter($"rank" <= k)
+          .select($"group", $"id", $"payload")
+          .as[(Int, String, Long)].collect().toSet
+    }
+  }
+
   test("int8 quantization: codes in range, order-preserving, extrema map to 0/255") {
     val df = Seq(
       (1L, Seq(0.0f, -2.0f)), (2L, Seq(5.0f, 0.0f)),
@@ -758,5 +833,36 @@ class SimilaritySpec extends SparkSpec {
         .as("top"))
       .collect().sortBy(_.getLong(0)).map(_.toString).toSeq
     assert(o == n)
+  }
+
+  test("native TopTermsAgg and MinKAgg survive the sort-based fallback") {
+    import org.apache.spark.sql.functions.udaf
+    import spark.implicits._
+    // > 128 distinct groups per task: the string and long columns go
+    // through the one serialize/deserialize path too
+    val terms = (1 to 40000).map { i =>
+      ((i % 1500).toLong, s"t${i % 37}", ((i * 31) % 101).toDouble / 7.0)
+    }.toDF("group", "term", "score").repartition(3)
+    val legacyT = udaf(new LegacyAggregators.TopTermsAggregator(5))
+    val oT = terms.groupBy(col("group"))
+      .agg(legacyT(col("term"), col("score")).as("top"))
+      .collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+    val nT = terms.groupBy(col("group"))
+      .agg(graft.expressions.TopTermsAgg(col("term"), col("score"), 5)
+        .as("top"))
+      .collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+    assert(oT == nT)
+    val keyed = (1 to 40000).map { i =>
+      ((i % 1500).toLong, f"k${i % 53}%03d", f"id${i % 37}%04d", i.toLong)
+    }.toDF("group", "sort_key", "id", "payload").repartition(3)
+    val legacyM = udaf(new LegacyAggregators.MinKAggregator(5))
+    val oM = keyed.groupBy(col("group"))
+      .agg(legacyM(col("sort_key"), col("id"), col("payload")).as("top"))
+      .collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+    val nM = keyed.groupBy(col("group"))
+      .agg(graft.expressions.MinKAgg(col("sort_key"), col("id"),
+        col("payload"), 5).as("top"))
+      .collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+    assert(oM == nM)
   }
 }

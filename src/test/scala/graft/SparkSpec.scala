@@ -14,4 +14,14 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
+
+  /** Runs `body` with AQE partition coalescing off, so a small range
+    * shuffle keeps its partitions (and the per-partition bases of a
+    * two-pass running sum get checked). */
+  def uncoalesced[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val previous = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, previous)
+  }
 }

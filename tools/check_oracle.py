@@ -49,6 +49,24 @@ def _selftest():
     _driver_sort_probe(pa.table({"s": ["a", "b"], "n": [1, 2]}))
     print("OK selftest: string/int columns pass driver-sort probe")
 
+    # the CTE lint counts table reads only: a quoted 'g' (a regex flag),
+    # a column x.g and a select-list g are not reads of CTE g
+    inst = _cte_expansion_lint("selftest", """
+        WITH g AS (SELECT 1 AS g),
+        p AS (SELECT x.g, regexp_replace('a', 'a', 'b', 'g') AS r, g
+              FROM g x)
+        SELECT * FROM p""")
+    assert inst["g"] == 1, inst
+    print("OK selftest: quoted 'g' and column x.g are not CTE reads")
+    # a three-deep chain read twice per level multiplies to 2^3 and warns
+    chain = """
+        WITH a AS (SELECT 1 AS v),
+        b AS (SELECT * FROM a, a AS a2),
+        c AS (SELECT * FROM b JOIN b AS b2 ON true)
+        SELECT * FROM c, (SELECT * FROM c) c2"""
+    assert _cte_expansion_lint("selftest_chain", chain, threshold=8)["a"] == 8
+    print("OK selftest: three-deep chain read twice per level warns")
+
 
 def _driver_sort_probe(tbl):
     """Replicate the driver's pandas compare boundary: to_pandas() then
@@ -66,17 +84,40 @@ def _driver_sort_probe(tbl):
     df.sort_values(by=list(df.columns), inplace=False, kind="mergesort")
 
 
-if sys.argv[1] == "--selftest":
-    _selftest()
-    sys.exit(0)
-
-sfdir, outdir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
-
-oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+def _table_refs(name, sql):
+    """Times `name` is read as a table in `sql` (quoted strings already
+    stripped): right after FROM or JOIN, or after a comma of a FROM
+    list — a comma whose nearest clause keyword at the same paren depth
+    is FROM, JOIN or ON. A column `x.name`, a select-list `, name` and
+    a call `name(` are not table reads."""
+    import re
+    n = 0
+    for m in re.finditer(r"(\bFROM|\bJOIN|,)\s+%s\b(?!\s*[.(])" % re.escape(name),
+                         sql, re.I):
+        if m.group(1) != ",":
+            n += 1
+            continue
+        depth, k = 0, m.start()
+        while k > 0:
+            k -= 1
+            ch = sql[k]
+            if ch == ")":
+                depth += 1
+            elif ch == "(":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif depth == 0 and ch.isalpha() and (k == 0 or not (
+                    sql[k - 1].isalnum() or sql[k - 1] == "_")):
+                w = re.match(r"\w+", sql[k:]).group(0).upper()
+                if w in ("FROM", "JOIN", "ON"):
+                    n += 1
+                    break
+                if w in ("SELECT", "WHERE", "GROUP", "ORDER", "HAVING",
+                         "WINDOW", "QUALIFY", "LIMIT", "VALUES", "WITH",
+                         "BY", "USING", "RETURNING"):
+                    break
+    return n
 
 
 def _cte_expansion_lint(name, sql, threshold=32):
@@ -95,21 +136,25 @@ def _cte_expansion_lint(name, sql, threshold=32):
     materialized full cross product). A/B-time before applying; a
     reviewed-and-declined flag is a valid resolution."""
     import re
+    sql = re.sub(r"'(?:[^']|'')*'", "''", sql)
     defs = [(m.group(1), m.group(2) is not None, m.start())
             for m in re.finditer(r"(\w+)\s+AS\s+(MATERIALIZED\s+)?\(", sql)]
     if not defs:
-        return
+        return {}
     names = [d[0] for d in defs]
     mat = {d[0]: d[1] for d in defs}
     pos = {d[0]: d[2] for d in defs}
-    # reference counts of each cte inside each later cte body / final
-    # select (approximate: count word occurrences after the def site,
-    # attributing each to the region of the next def)
-    bounds = sorted(pos.values()) + [len(sql)]
-    region_of = {}
-    for n in names:
-        i = bounds.index(pos[n])
-        region_of[n] = (pos[n], bounds[i + 1] if i + 1 < len(bounds) else len(sql))
+    # reference counts of each cte inside each cte body and the final
+    # select (table reads; a body is its def's parenthesized span)
+    def body(p):
+        o, depth = sql.index("(", p), 0
+        for k in range(o, len(sql)):
+            depth += {"(": 1, ")": -1}.get(sql[k], 0)
+            if depth == 0:
+                return o, k + 1
+        return o, len(sql)
+    region_of = {n: body(pos[n]) for n in names}
+    tail_start = max(b for _, b in region_of.values())
     inst = {}
     # REVERSE order: a CTE's referrers appear later in the WITH chain,
     # so their instantiation counts must exist before the referee's —
@@ -121,16 +166,29 @@ def _cte_expansion_lint(name, sql, threshold=32):
         for m, (a, b) in region_of.items():
             if m == n:
                 continue
-            cnt = len(re.findall(r"\b%s\b" % re.escape(n), sql[a:b]))
+            cnt = _table_refs(n, sql[a:b])
             if cnt:
                 refs += cnt * (1.0 if mat.get(m, False) else inst.get(m, 1.0))
-        tail_start = max(b for _, b in region_of.values())
-        refs += len(re.findall(r"\b%s\b" % re.escape(n), sql[tail_start:]))
+        refs += _table_refs(n, sql[tail_start:])
         inst[n] = 1.0 if mat[n] else max(refs, 1.0)
     worst = max(inst.items(), key=lambda kv: kv[1])
     if worst[1] >= threshold:
         print(f"LINT {name}: plain CTE '{worst[0]}' expands ~{worst[1]:.0f}x "
               f"(chain re-expansion) — mark it AS MATERIALIZED")
+    return inst
+
+
+if sys.argv[1] == "--selftest":
+    _selftest()
+    sys.exit(0)
+
+sfdir, outdir = sys.argv[1], sys.argv[2]
+con = duckdb.connect()
+for t in ["region","nation","customer","supplier","part","orders",
+          "lineitem","events","documents","embeddings"]:
+    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
+
+oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 
 
 fail = 0
