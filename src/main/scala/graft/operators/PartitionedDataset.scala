@@ -54,11 +54,6 @@ object PartitionedDataset {
     TFRecordIO.write(records, dir, prefix, suffix)
   }
 
-  /** Engine-native sink: packed groups as Parquet (keeps the group id —
-    * the optional upgrade SURVEY §1.4.2 allows). */
-  def writeParquet(packed: DataFrame, dir: String): Unit =
-    packed.write.mode("overwrite").parquet(dir)
-
   /** [[writeTFRecords]] with DETERMINISTIC shard assignment: each group
     * goes to shard `md5_bucket(group_id) mod nShards` via
     * `repartitionById`, so the shard CONTENTS (not just the count)

@@ -5,10 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace, ScalaUDF, StringSplit}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, MapElements}
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.expressions.{DecodeExample, EncodeExample, StripSplitSize}
+import graft.expressions.{CappedPack, DecodeExample, EncodeExample, StripSplitSize}
 import graft.functions.WordCount
 import graft.operators.{GroupCounts, Grouper, PartitionedDataset}
 
@@ -40,6 +41,13 @@ class CodecKernelSpec extends SparkSpec {
 
     val cols = docs.columns.map(col).toSeq
     decoded.orderBy(cols: _*).collect().toSeq shouldBe docs.orderBy(cols: _*).collect().toSeq
+  }
+
+  test("the pack plan runs one native capped pack and no ScalaAggregator") {
+    val packed = PartitionedDataset.packExamples(
+      Tables(spark, sf0001, "documents"), Grouper.byColumn("lang"))
+    exprs(packed).collect { case a: ScalaAggregator[_, _, _] => a } shouldBe empty
+    exprs(packed).collect { case p: CappedPack => p } should have size 1
   }
 
   test("GroupCounts counts words with the kernel, not regexp_replace + split") {

@@ -12,7 +12,10 @@ import org.apache.spark.sql.expressions.Aggregator
   * differential specs (ProfilerShapeSpec, SimilaritySpec): each
   * native aggregate must equal its Aggregator bit for bit, schema
   * included. The top-k ones differ from SQL order only on NaN scores,
-  * -0.0 vs 0.0, and strings whose UTF-16 and UTF-8 orders disagree. */
+  * -0.0 vs 0.0, and strings whose UTF-16 and UTF-8 orders disagree.
+  * The capped packer that `CappedPack` replaced, `PackWithLimit` with
+  * its `PackBuffer`, keeps its package and lives in
+  * `graft/operators/LegacyPack.scala`. */
 object LegacyAggregators {
 
   /** Bounded min-k-distinct buffer with the TopK compaction discipline:

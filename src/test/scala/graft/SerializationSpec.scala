@@ -170,7 +170,8 @@ class SerializationSpec extends SparkSpec {
     val nation = Tables(spark, sf0001, "nation")
     val packed = PartitionedDataset.packExamples(
       nation, Grouper.byColumn("n_regionkey"))
-    PartitionedDataset.writeParquet(packed, dir)
+    // engine-native sink: Parquet keeps the group id (SURVEY §1.4.2)
+    packed.write.mode("overwrite").parquet(dir)
     val loaded = spark.read.parquet(dir)
     loaded.select("group_id").distinct().count() shouldBe 5
     val decoded = PartitionedDataset.decodeExamples(loaded, nation.schema)
