@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions.{col, sum, xxhash64}
+import org.apache.spark.sql.functions.col
+import org.json4s._
 
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -21,48 +22,15 @@ object Bench {
     // absorb session/codegen warm-up outside the timed region so the
     // first query's number is comparable to the rest
     try {
-      spark.range(1000).groupBy((org.apache.spark.sql.functions.col("id") % 7))
-        .count().count()
+      spark.range(1000).groupBy(col("id") % 7).count().count()
       Tables(spark, sfDir, "region").count()
     } catch { case _: Throwable => () }
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // snapshot persistent RDD ids so the post-query cleanup below can
-      // drop ONLY blocks this query created — unpersisting everything
-      // would invalidate any future cross-query cached/checkpointed
-      // DataFrame with a missing-block error traceable only to this loop
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      // force FULL materialization of every output column: a bare
-      // .count() lets Catalyst prune unused projections, so projection-
-      // heavy queries would time little more than the parquet scan.
-      // xxhash64 over all columns consumes each value produced. The
-      // digest sums as DECIMAL(38,0): summing raw longs overflows under
-      // ANSI after ~2 random hashes, aborting the job MID-MATERIALIZATION
-      // and silently under-reporting the query (the catch below ate it).
-      try {
-        val df = fn(spark, sfDir)
-        df.agg(sum(xxhash64(df.columns.toIndexedSeq.map(col): _*).cast("decimal(38,0)")))
-          .collect()
-      } catch {
-        case t: Throwable =>
-          // record the failure IN the artifact: a time-to-failure summed
-          // into the total would read as a plausible fast success
-          failed += name
-          System.err.println(s"[bench] $name FAILED: ${t.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop this query's localCheckpoint blocks before the next one:
-      // checkpoint-heavy queries otherwise pile storage onto the heap
-      // and every LATER query pays the GC drag (~40% uniform inflation
-      // observed across the 222-query run before this unpersist)
-      spark.sparkContext.getPersistentRDDs
-        .foreach { case (id, rdd) =>
-          if (!persistedBefore.contains(id)) rdd.unpersist(blocking = false)
-        }
-      name -> dt
-    }
-    val lines = resultLines(results, failed.toSeq, prior, cpus, sfDir)
+    val outcomes = QueryRun.names.map(name => QueryRun(spark, sfDir, "bench", name)(QueryRun.digest(_)))
+    val results = outcomes.map(o => o.name -> o.seconds).toMap
+    // failures are recorded IN the artifact: a time-to-failure summed
+    // into the total would read as a plausible fast success
+    val failed = outcomes.filterNot(_.ok).map(_.name)
+    val lines = resultLines(results, failed, prior, cpus, sfDir)
     Files.writeString(Paths.get(outPath), lines.head + "\n")
     lines.foreach(println)
     spark.stop()
@@ -110,24 +78,25 @@ object Bench {
 
   // Locale.ROOT: f"" uses the JVM default locale, and a comma-decimal
   // locale (de_DE) would render 0,95 and corrupt the JSON artifact.
-  private def num(v: Double, digits: Int): String =
+  private[graft] def num(v: Double, digits: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f",
       java.lang.Double.valueOf(v))
+
+  /** The number fields of a JSON object, in order; other fields and
+    * non-objects give nothing. */
+  private[graft] def numbers(j: JValue): List[(String, Double)] = j match {
+    case JObject(fs) => fs.collect {
+      case (k, JDouble(v))  => k -> v
+      case (k, JInt(v))     => k -> v.toDouble
+      case (k, JDecimal(v)) => k -> v.toDouble
+      case (k, JLong(v))    => k -> v.toDouble
+    }
+    case _ => Nil
+  }
 
   /** Parse the per-query seconds map out of a prior bench artifact
     * (json4s ships with Spark; absent/corrupt artifact -> empty). */
   def priorQueries(path: String): Map[String, Double] =
-    try {
-      import org.json4s._
-      val j = jackson.JsonMethods.parse(Files.readString(Paths.get(path)))
-      j \ "queries" match {
-        case JObject(fs) => fs.collect {
-          case (k, JDouble(v))  => k -> v
-          case (k, JInt(v))     => k -> v.toDouble
-          case (k, JDecimal(v)) => k -> v.toDouble
-          case (k, JLong(v))    => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-    } catch { case _: Throwable => Map.empty }
+    try numbers(jackson.JsonMethods.parse(Files.readString(Paths.get(path))) \ "queries").toMap
+    catch { case _: Throwable => Map.empty }
 }

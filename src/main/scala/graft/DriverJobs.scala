@@ -23,6 +23,7 @@ object DriverJobs {
     * threads do not inherit the caller's job group and description, so
     * each job sets them before submitting: listeners attribute its Spark
     * jobs to the caller, and cancelling the caller's group reaches them.
+    * Under [[QueryRun]] the caller's group is the query name.
     * The wait is bounded by [[WaitTimeout]]; on timeout the caller's job
     * group is cancelled and the TimeoutException rethrown. */
   def runAll[T](sc: SparkContext)(jobs: Seq[() => T]): Seq[T] = {

@@ -2,9 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
+import org.json4s.{JObject, JValue}
+import org.json4s.jackson.JsonMethods.{compact, parse, parseOpt, render}
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, QueryRun}
+import graft.Bench.{num, numbers}
 
 /** Isolated cold/warm timing for a set of declared queries, written as
   * one JSON file (`BENCH_ISOLATED.json`) committed alongside the round's
@@ -27,7 +29,7 @@ object BenchIsolated {
     // (which embeds per-query ratios vs the prior committed run) and
     // measure every >2.5x line plus the top entries — so each committed
     // outlier carries a same-HEAD cold/warm pair.
-    val names: Seq[String] =
+    val names: Seq[String] = QueryRun.resolve(
       if (args.length > 2 && args(2) == "auto") {
         val artifact = if (args.length > 3) args(3) else "BENCH_OUT.json"
         val auto = autoOutliers(artifact)
@@ -38,99 +40,65 @@ object BenchIsolated {
       } else if (args.length > 2) args.drop(2).toSeq
       else Seq("dedup_keep_best_documents", "dedup_clusters_documents",
         "events_stream_interval_join", "dedup_ngram_documents",
-        "pack_token_budget_documents")
-    val reps = 3
-    val cpus = GraftSession.envCores
-    val spark = GraftSession.local(cpus)
-    graft.Tables(spark, dir, "region").count() // absorb session warm-up
-    val rows = names.map { name =>
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, dir)
-        df.agg(sum(xxhash64(df.columns.toIndexedSeq.map(col): _*).cast("decimal(38,0)")))
-          .collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val cold = times.head
-      val warm = times.tail.min
-      System.err.println(s"[isolated] $name cold=${num(cold)} warm=${num(warm)}")
-      s"""    "$name": {"cold": ${num(cold)}, "warm": ${num(warm)}}"""
-    }
+        "pack_token_budget_documents"))
     // Append-keyed by round label + HEAD (never overwrite): prior
     // rounds' cold/warm history must survive in the committed artifact
     // so adjudication of older bench runs doesn't require re-deriving
-    // the isolation pairs at a later HEAD.
-    val key = sys.env.getOrElse("BENCH_ISOLATED_KEY",
-      s"r@${gitHead()}")
-    val prior = priorEntries(out)
+    // the isolation pairs at a later HEAD. Read before any query runs.
+    val prior = priorRounds(out)
+    val cpus = GraftSession.envCores
+    val spark = GraftSession.local(cpus)
+    graft.Tables(spark, dir, "region").count() // absorb session warm-up
+    // a name with a failed run is left out; its FAILED line says why
+    val rows = names.flatMap { name =>
+      val runs = Seq.fill(3)(QueryRun(spark, dir, "isolated", name)(QueryRun.digest(_)))
+      Option.when(runs.forall(_.ok)) {
+        val (cold, warm) = (num(runs.head.seconds, 3), num(runs.tail.map(_.seconds).min, 3))
+        System.err.println(s"[isolated] $name cold=$cold warm=$warm")
+        s"""    "$name": {"cold": $cold, "warm": $warm}"""
+      }
+    }
+    val key = sys.env.getOrElse("BENCH_ISOLATED_KEY", s"r@${gitHead()}")
     // duplicate-key JSON silently loses an entry on the next parse, so
     // a re-run under the same key (same round label + short HEAD) must
     // not collide: pick the first free "<key>", "<key>-2", ... suffix
-    val taken = prior.flatMap(_.linesIterator.toSeq.headOption)
-      .flatMap { l =>
-        val i = l.indexOf('"'); val j = l.indexOf('"', i + 1)
-        if (i >= 0 && j > i) Some(l.substring(i + 1, j)) else None
-      }.toSet
+    val taken = prior.map(_._1).toSet
     val freeKey = (Iterator(key) ++
       Iterator.from(2).map(n => s"$key-$n")).find(!taken(_)).get
     val entry = rows.mkString(
       s"""  "$freeKey": {\n    "sf": "$dir", "cpus": $cpus,\n""",
       ",\n", "\n  }")
+    val kept = prior.map { case (k, v) => s"""  "$k": ${compact(render(v))}""" }
     Files.writeString(Paths.get(out),
-      (prior :+ entry).mkString("{\n", ",\n", "\n}\n"))
+      (kept :+ entry).mkString("{\n", ",\n", "\n}\n"))
     spark.stop()
   }
-
-  /** Locale-independent fixed-point (a comma-decimal default locale
-    * would corrupt the JSON artifact). */
-  private def num(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", java.lang.Double.valueOf(v))
 
   private def gitHead(): String =
     try scala.sys.process.Process(Seq("git", "rev-parse", "--short", "HEAD"))
       .!!.trim
     catch { case _: Throwable => "unknown" }
 
-  /** Existing round entries as rendered JSON fragments. A legacy flat
-    * artifact (pre-append format: top-level sf/cpus/queries) is wrapped
-    * whole under a "legacy" key so its history is kept. */
-  private def priorEntries(path: String): Seq[String] =
-    try {
-      import org.json4s._
-      val txt = Files.readString(Paths.get(path))
-      jackson.JsonMethods.parse(txt) match {
-        case JObject(fs) if fs.nonEmpty =>
-          val isKeyed = fs.forall { case (_, v) => v.isInstanceOf[JObject] }
-          if (isKeyed)
-            fs.map { case (k, v) =>
-              s"""  "$k": ${jackson.JsonMethods.compact(
-                jackson.JsonMethods.render(v))}"""
-            }
-          else Seq(s"""  "legacy": ${jackson.JsonMethods.compact(
-            jackson.JsonMethods.render(JObject(fs)))}""")
-        case _ => Seq.empty
-      }
-    } catch { case _: Throwable => Seq.empty }
+  /** The round entries of an existing artifact, in file order; a
+    * missing file has none. A file that does not parse, or whose
+    * top-level values are not all round objects, fails: rewriting it
+    * with only the new entry would lose every earlier round. */
+  private[graft] def priorRounds(path: String): List[(String, JValue)] =
+    if (!Files.exists(Paths.get(path))) Nil
+    else parseOpt(Files.readString(Paths.get(path))) match {
+      case Some(JObject(fs)) if fs.forall(_._2.isInstanceOf[JObject]) => fs
+      case _ => throw new IllegalStateException(
+        s"$path is not a JSON object keyed by round; it is left as it is")
+    }
 
   /** The outlier list embedded by Bench: every ratios_vs_prior.top
     * entry with ratio > 2.5, or (if none cross the bar) the single
     * worst one as a sanity anchor. */
   def autoOutliers(artifact: String): Seq[String] =
     try {
-      import org.json4s._
-      val j = jackson.JsonMethods.parse(
-        Files.readString(Paths.get(artifact)))
-      j \ "ratios_vs_prior" \ "top" match {
-        case JObject(fs) =>
-          val parsed = fs.collect {
-            case (k, JDouble(v))  => k -> v
-            case (k, JInt(v))     => k -> v.toDouble
-            case (k, JDecimal(v)) => k -> v.toDouble
-          }
-          val over = parsed.filter(_._2 > 2.5).map(_._1)
-          if (over.nonEmpty) over
-          else parsed.sortBy(-_._2).take(1).map(_._1)
-        case _ => Seq.empty
-      }
+      val parsed = numbers(parse(Files.readString(Paths.get(artifact))) \ "ratios_vs_prior" \ "top")
+      val over = parsed.filter(_._2 > 2.5).map(_._1)
+      if (over.nonEmpty) over
+      else parsed.sortBy(-_._2).take(1).map(_._1)
     } catch { case _: Throwable => Seq.empty }
 }

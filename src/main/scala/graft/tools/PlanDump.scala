@@ -2,10 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, QueryRun}
 
 /** Writes `<outDir>/<query>_<suffix>.txt` with the formatted physical
   * plan of each named declared query (every query when none is named)
@@ -22,11 +22,9 @@ import graft.{GraftSession, SparkEntry}
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val outDir = args(1)
-    val suffix = args(2)
-    val named = args.drop(3).toSeq
-    val names = if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
+    val Array(dir, outDir, suffix) = args.take(3)
+    val named = QueryRun.resolve(args.drop(3).toSeq)
+    val names = if (named.nonEmpty) named else QueryRun.names.sorted
     val spark = GraftSession.local(4, "spark.sql.adaptive.enabled" -> "false")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
@@ -38,38 +36,31 @@ object PlanDump {
           jobN += 1
           sb.append(s"--- construction-time job $jobN ($funcName, " +
               f"${durationNs / 1e9}%.2fs) ---%n")
-            .append(qe.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+            .append(qe.explainString(ExplainMode.fromString("formatted")))
             .append("\n")
         }
         override def onFailure(funcName: String, qe: QueryExecution,
                                exception: Exception): Unit = ()
       }
       spark.listenerManager.register(listener)
-      try {
-        val df = SparkEntry.queries(name)(spark, dir)
+      QueryRun(spark, dir, "plandump", name) { df =>
         // the listener bus is async; drain it FULLY before
         // snapshotting (a fixed sleep could under-wait on slow
         // construction jobs and silently drop plans from the
         // evidence file — ADVICE r10)
         val drained = org.apache.spark.GraftSparkInternals
           .drainListenerBus(spark.sparkContext, 60000L)
-        spark.listenerManager.unregister(listener)
         sb.insert(0, s"--- listener bus drained=$drained, " +
           s"$jobN construction jobs captured ---\n")
         sb.append(s"=== $name final plan ===\n")
-          .append(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+          .append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
           sb.toString)
         println(s"[plandump] wrote $outDir/${name}_$suffix.txt " +
           s"($jobN construction jobs)")
         println(scorecard(name, df.queryExecution.executedPlan.toString))
-      } catch {
-        case e: Throwable =>
-          spark.listenerManager.unregister(listener)
-          println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
+      spark.listenerManager.unregister(listener)
     }
     spark.stop()
   }
