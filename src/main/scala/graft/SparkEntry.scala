@@ -118,27 +118,6 @@ object SparkEntry {
       aggregate(col("class_weights"), lit(0L), (a, x) => a + x)
         .as("n_weight1"))
 
-  /** Fixed per-tag scratch dir under java.io.tmpdir: repeated
-    * bench/verify runs WIPE and reuse one path per query instead of
-    * accumulating a fresh full-corpus copy per invocation (the jsonl
-    * and TFRecord sinks write the whole documents table each run —
-    * ADVICE r3). Driver gates run serially, so a fixed path is
-    * race-free; the dir itself is (re)created by the writer. */
-  private def scratchDir(tag: String): String = {
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-scratch", tag)
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) {
-        val children = f.listFiles()
-        if (children != null) children.foreach(wipe)
-      }
-      f.delete(): Unit
-    }
-    wipe(p.toFile)
-    java.nio.file.Files.createDirectories(p.getParent)
-    p.toString
-  }
-
   /** Builder of every catalog query, by name. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.map(q => q.name -> q.build).toMap
@@ -189,7 +168,7 @@ object SparkEntry {
     QuerySpec("group_counts_text_sink", { (s, dir) =>
       val counts =
         GroupCounts(Tables(s, dir, "documents"), Grouper.byColumn("lang"))
-      val tmp = scratchDir("textsink")
+      val tmp = Scratch.dir("textsink")
       GroupCounts.writeFormatted(counts, tmp, delimiter = "|")
       s.read.text(tmp).select(col("value").as("line"))
         .filter(col("line") =!= GroupCounts.Header)
@@ -245,7 +224,7 @@ object SparkEntry {
     // must be the original table. Exercises the whole wire-compat stack.
     QuerySpec("roundtrip_documents", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = scratchDir("roundtrip")
+      val tmp = Scratch.dir("roundtrip")
       val packed = PartitionedDataset.packExamples(
         docs, Grouper.byColumn("lang"))
       PartitionedDataset.writeTFRecords(packed, tmp)
@@ -260,7 +239,7 @@ object SparkEntry {
     // framing is wrapped (TFRecordIO AUTO-detects by suffix both ways).
     QuerySpec("roundtrip_documents_gzip", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = scratchDir("roundtrip_gz")
+      val tmp = Scratch.dir("roundtrip_gz")
       val packed = PartitionedDataset.packExamples(
         docs, Grouper.byColumn("lang"))
       PartitionedDataset.writeTFRecords(packed, tmp, suffix = ".gz")
@@ -284,7 +263,7 @@ object SparkEntry {
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       val blocks = Pack.inputTargetBlocks(enc, col("lang"),
         col("doc_id"), col("ids"), seqLen = 128)
-      val tmp = scratchDir("train-blocks")
+      val tmp = Scratch.dir("train-blocks")
       PartitionedDataset.writeTFRecords(
         PartitionedDataset.packExamples(blocks,
           Grouper.byColumn("group_id")), tmp)
@@ -1513,7 +1492,7 @@ object SparkEntry {
         lit(1000000000L) + col("event_id")
       EventStream.watermarkDropLive(Tables(s, dir, "events"),
         arrival = col("ts") + jitter, tsCol = col("ts"),
-        scratch = scratchDir("wmdrop"))
+        scratch = Scratch.dir("wmdrop"))
     }, oracle =
       // LIVE drop-metric replay: batch = 2-day arrival slice
       // (dense_rank), watermark for LATE-EVENT filtering = ms-floored
@@ -1600,7 +1579,7 @@ object SparkEntry {
     QuerySpec("events_stream_cmcu_heavy_users", { (s, dir) =>
       EventStream.cmcuHeavyUsers(Tables(s, dir, "events"),
         tsCol = col("ts"), termCol = col("user_id"),
-        scratch = scratchDir("cmcu"))
+        scratch = Scratch.dir("cmcu"))
     }, oracle =
       // CM-CU replay: the same (slice, sorted-term) update sequence the
       // harness pins, folded through a recursive CTE — each step raises
@@ -1839,7 +1818,7 @@ object SparkEntry {
     // schema pinned (no inference pass over 100 TB), prove lossless.
     QuerySpec("source_jsonl_roundtrip", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = scratchDir("jsonl")
+      val tmp = Scratch.dir("jsonl")
       docs.write.mode("overwrite").json(tmp)
       s.read.schema(docs.schema).json(tmp)
     }, oracle = "SELECT doc_id, text, lang, source, n_chars FROM documents"),
@@ -1848,7 +1827,7 @@ object SparkEntry {
     // format itself — proves the engine is not parquet-bound.
     QuerySpec("source_orc_roundtrip", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = scratchDir("orc")
+      val tmp = Scratch.dir("orc")
       docs.write.mode("overwrite").orc(tmp)
       s.read.schema(docs.schema).orc(tmp)
     }, oracle = "SELECT doc_id, text, lang, source, n_chars FROM documents"),
@@ -1860,8 +1839,8 @@ object SparkEntry {
     // rewrite of the old files.
     QuerySpec("source_schema_evolution", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val v1 = scratchDir("schema-v1")
-      val v2 = scratchDir("schema-v2")
+      val v1 = Scratch.dir("schema-v1")
+      val v2 = Scratch.dir("schema-v2")
       docs.filter(col("doc_id") < 250)
         .select(col("doc_id"), col("lang"))
         .write.mode("overwrite").parquet(v1)
@@ -1886,7 +1865,7 @@ object SparkEntry {
     // schema pinned on read — no inference pass over 100 TB.
     QuerySpec("source_csv_roundtrip", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = scratchDir("csv")
+      val tmp = Scratch.dir("csv")
       // univocity TRIMS leading/trailing blanks by default on BOTH
       // sides (write defaults true, read trims too) — turn it off
       // everywhere or values silently mutate in the roundtrip
@@ -1908,7 +1887,7 @@ object SparkEntry {
     // row-oriented interchange path alongside the columnar ones.
     QuerySpec("source_avro_roundtrip", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = scratchDir("avro")
+      val tmp = Scratch.dir("avro")
       graft.sources.AvroIO.write(docs, tmp)
       graft.sources.AvroIO.read(s, s"$tmp/part-*.avro", docs.schema)
     }, oracle = "SELECT doc_id, text, lang, source, n_chars FROM documents"),
@@ -2883,7 +2862,7 @@ object SparkEntry {
         col("c_nationkey").as("b"))
       val delta = cust.filter(cid % 5 === 0)
         .select(cid.as("cid"), dkey.as("k"), col("c_nationkey").as("b"))
-      val tmp = scratchDir("passjoin_idx")
+      val tmp = Scratch.dir("passjoin_idx")
       EntityMatch.writePassJoinIndex(
         EntityMatch.passJoinIndexBuild(clean,
           col("cid"), col("k"), col("b"), maxDist = 3), tmp)
@@ -3126,7 +3105,7 @@ object SparkEntry {
     // both oracle-exact. The global 8-row window is roster-sized.
     QuerySpec("loader_shuffled_shards", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      val tmp = scratchDir("shards")
+      val tmp = Scratch.dir("shards")
       val packed = PartitionedDataset.packExamples(
         docs, Grouper.byColumn("lang"))
       val paths = PartitionedDataset.writeTFRecordsSharded(
@@ -4493,7 +4472,7 @@ object SparkEntry {
     // the round-trip through parquet must change nothing.
     QuerySpec("similarity_ivf_persisted", { (s, dir) =>
       val emb = Tables(s, dir, "embeddings")
-      val tmp = scratchDir("ivf-index")
+      val tmp = Scratch.dir("ivf-index")
       Similarity.writeIvfIndex(
         Similarity.ivfIndexAnchored(emb, col("vec_id"), col("embedding"),
           nCells = 16, nProbe = 4), tmp)
@@ -5638,8 +5617,7 @@ object SparkEntry {
     // (lost rows, mis-assigned shard, clobbered key) fails the hash
     // compare — manifest-vs-files consistency pinned by the gate.
     QuerySpec("export_sorted_files", { (s, dir) =>
-      val out = "/tmp/graft_sorted_export_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Scratch.dir("sorted-export")
       SortedExport.write(Tables(s, dir, "orders"),
         key = "o_totalprice", id = "o_orderkey", nShards = 8, path = out)
       val u32 = graft.expressions.Md5Hex.u32(col("o_orderkey").cast("string"))
@@ -6346,10 +6324,9 @@ object SparkEntry {
     // coarse layout column is the first-order 100 TB lever.
     QuerySpec("source_partition_pruning", { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      graft.sources.Bucketed.writePartitioned(docs,
-        "/tmp/graft_partitioned/documents", "lang")
-      graft.sources.Bucketed
-        .readPartitioned(s, "/tmp/graft_partitioned/documents")
+      val path = Scratch.dir("partitioned-documents")
+      graft.sources.Bucketed.writePartitioned(docs, path, "lang")
+      graft.sources.Bucketed.readPartitioned(s, path)
         .filter(col("lang").isin("en", "fr"))
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -6365,9 +6342,9 @@ object SparkEntry {
       val ord = Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"))
       graft.sources.Bucketed.write(li, "graft_li_b",
-        "/tmp/graft_bucketed/lineitem", "l_orderkey", 8)
+        Scratch.dir("bucketed-lineitem"), "l_orderkey", 8)
       graft.sources.Bucketed.write(ord, "graft_ord_b",
-        "/tmp/graft_bucketed/orders", "o_orderkey", 8)
+        Scratch.dir("bucketed-orders"), "o_orderkey", 8)
       graft.sources.Bucketed.read(s, "graft_li_b").hint("merge")
         .join(graft.sources.Bucketed.read(s, "graft_ord_b").hint("merge"),
           col("l_orderkey") === col("o_orderkey"))
@@ -7014,7 +6991,8 @@ object SparkEntry {
       val enc = Png.encodeColumn(
         Tables(s, dir, "documents").select(col("doc_id"), px.as("px")),
         col("doc_id"), col("px"), w = 8, h = 8)
-      Png.decodeColumn(enc, col("media_id"), col("payload")).toDF()
+      Multimodal.decodeGray(enc, col("media_id"), col("payload"), "png",
+        Png.decode).toDF()
     }, oracle =
       // png replay: the oracle never parses the container — it recomputes
       // the md5-derived RASTER bytes and their stats; the Spark side must
@@ -7048,7 +7026,8 @@ object SparkEntry {
       val enc = Png.encodeRgbColumn(
         Tables(s, dir, "documents").select(col("doc_id"), px.as("px")),
         col("doc_id"), col("px"), w = 8, h = 8)
-      Png.decodeRgbColumn(enc, col("media_id"), col("payload")).toDF()
+      Multimodal.decodeRgb(enc, col("media_id"), col("payload"), Png.decode)
+        .toDF()
     }, oracle = {
       // NOTE: the concat operator must END each line — a continuation
       // line starting with whitespace + '||' loses a bar to the outer
@@ -7075,9 +7054,10 @@ object SparkEntry {
          |FROM b""".stripMargin
     }),
     // The compressed path through the LaneCodec boundary: PNG payloads
-    // -> Png.PngLanes inside decodeFeatures — lane sums over DECODED
-    // pixels, exact. (n_bytes is excluded: compressed size depends on
-    // the deflate implementation and is not engine-replayable.)
+    // -> PixelLanes(Png.decode) inside decodeFeatures — lane sums over
+    // DECODED pixels, exact. (n_bytes is excluded: compressed size
+    // depends on the deflate implementation and is not
+    // engine-replayable.)
     QuerySpec("multimodal_png_features", { (s, dir) =>
       import s.implicits._
       val px = concat((0 until 4).map(i =>
@@ -7090,7 +7070,7 @@ object SparkEntry {
         col("payload"), lit(8).as("width"), lit(8).as("height"),
         lit("png").as("format")).as[Multimodal.Media]
       Multimodal.decodeFeatures(media.repartition(8), dim = 8,
-          codec = Png.PngLanes).toDF()
+          codec = Multimodal.PixelLanes(Png.decode)).toDF()
         .select(col("media_id"), col("kind"),
           md5(concat_ws(",",
             transform(col("lane_sums"), v => v.cast("string"))))
@@ -7125,10 +7105,11 @@ object SparkEntry {
       val blob = concat((for (b <- 0 until 4; k <- 0 until 4) yield
         unhex(md5(concat(lit(s"jg${b}x$k:"),
           col("doc_id").cast("string"))))): _*)
-      val enc = Jpeg.encodeGrayColumn(
+      val enc = Jpeg.encodeColumn(
         Tables(s, dir, "documents").select(col("doc_id"), blob.as("blob")),
         col("doc_id"), col("blob"), w = 16, h = 16)
-      Jpeg.decodeColumn(enc, col("media_id"), col("payload")).toDF()
+      Multimodal.decodeGray(enc, col("media_id"), col("payload"), "jpeg",
+        Jpeg.decode).toDF()
     }, oracle =
       // jpeg replay: coefficients -> pinned integer IDCT -> pixel stats;
       // the container (huffman/markers) is the Spark side's burden
@@ -7147,10 +7128,12 @@ object SparkEntry {
       val blob = concat((for (b <- 0 until 6; k <- 0 until 4) yield
         unhex(md5(concat(lit(s"jc${b}x$k:"),
           col("doc_id").cast("string"))))): _*)
-      val enc = Jpeg.encodeYccColumn(
+      val enc = Jpeg.encodeColumn(
         Tables(s, dir, "documents").select(col("doc_id"), blob.as("blob")),
-        col("doc_id"), col("blob"), w = 16, h = 8)
-      Jpeg.decodeRgbColumn(enc, col("media_id"), col("payload")).toDF()
+        col("doc_id"), col("blob"), w = 16, h = 8,
+        comps = Seq((1, 0), (2, 1), (3, 1)))
+      Multimodal.decodeRgb(enc, col("media_id"), col("payload"), Jpeg.decode)
+        .toDF()
     }, oracle =
       (jpegCoefPipeline("jc", 6,
         "(CASE WHEN b % 3 = 0 THEN qt0[n + 1] ELSE qt1[n + 1] END)") + ",\n" +
@@ -7187,10 +7170,11 @@ object SparkEntry {
       val blob = concat((for (b <- 0 until 6; k <- 0 until 4) yield
         unhex(md5(concat(lit(s"jr${b}x$k:"),
           col("doc_id").cast("string"))))): _*)
-      val enc = Jpeg.encodeGrayColumn(
+      val enc = Jpeg.encodeColumn(
         Tables(s, dir, "documents").select(col("doc_id"), blob.as("blob")),
         col("doc_id"), col("blob"), w = 24, h = 16, restartInterval = 2)
-      Jpeg.decodeColumn(enc, col("media_id"), col("payload")).toDF()
+      Multimodal.decodeGray(enc, col("media_id"), col("payload"), "jpeg",
+        Jpeg.decode).toDF()
     }, oracle =
       // restart replay: identical coefficient pipeline (the restart
       // machinery is container-only); 6 blocks, 24x16
@@ -7211,10 +7195,13 @@ object SparkEntry {
       val blob = concat((for (b <- 0 until 6; k <- 0 until 4) yield
         unhex(md5(concat(lit(s"j4${b}x$k:"),
           col("doc_id").cast("string"))))): _*)
-      val enc = Jpeg.encodeYcc420Column(
+      val enc = Jpeg.encodeColumn(
         Tables(s, dir, "documents").select(col("doc_id"), blob.as("blob")),
-        col("doc_id"), col("blob"), w = 16, h = 16)
-      Jpeg.decodeRgbColumn(enc, col("media_id"), col("payload")).toDF()
+        col("doc_id"), col("blob"), w = 16, h = 16,
+        comps = Seq((1, 0), (2, 1), (3, 1)),
+        sampling = Seq((2, 2), (1, 1), (1, 1)))
+      Multimodal.decodeRgb(enc, col("media_id"), col("payload"), Jpeg.decode)
+        .toDF()
     }, oracle = {
       // 4:2:0 replay: the 6 per-MCU block rasters pivot into one
       // list-of-lists row per doc (ll[1..4] = Y quadrants, ll[5]/ll[6] =
@@ -7247,7 +7234,7 @@ object SparkEntry {
            |  CAST(CAST(list_sum(bl) AS BIGINT) AS BIGINT) AS b_sum
            |FROM rgb""".stripMargin
     }),
-    // JPEG through the LaneCodec boundary: Jpeg.JpegLanes inside
+    // JPEG through the LaneCodec boundary: PixelLanes(Jpeg.decode) in
     // decodeFeatures — lane sums over DECODED pixels, exact (the PNG
     // twin's contract, now for the second compressed format).
     QuerySpec("multimodal_jpeg_features", { (s, dir) =>
@@ -7255,14 +7242,14 @@ object SparkEntry {
       val blob = concat((for (b <- 0 until 4; k <- 0 until 4) yield
         unhex(md5(concat(lit(s"jg${b}x$k:"),
           col("doc_id").cast("string"))))): _*)
-      val enc = Jpeg.encodeGrayColumn(
+      val enc = Jpeg.encodeColumn(
         Tables(s, dir, "documents").select(col("doc_id"), blob.as("blob")),
         col("doc_id"), col("blob"), w = 16, h = 16)
       val media = enc.select(col("media_id"), lit("image").as("kind"),
         col("payload"), lit(16).as("width"), lit(16).as("height"),
         lit("jpeg").as("format")).as[Multimodal.Media]
       Multimodal.decodeFeatures(media.repartition(8), dim = 8,
-          codec = Jpeg.JpegLanes).toDF()
+          codec = Multimodal.PixelLanes(Jpeg.decode)).toDF()
         .select(col("media_id"), col("kind"),
           md5(concat_ws(",",
             transform(col("lane_sums"), v => v.cast("string"))))
@@ -7408,8 +7395,8 @@ object SparkEntry {
       val src = Tables.eventsStream(s, dir)
       // scratch (wiped per run): a reused checkpoint dir with a reused
       // sink dir would otherwise make AvailableNow a no-op on rerun
-      val out = scratchDir("streamsink")
-      val cp = scratchDir("streamsink-cp")
+      val out = Scratch.dir("streamsink")
+      val cp = Scratch.dir("streamsink-cp")
       val q = src.select(col("event_id"), col("user_id"),
           col("event_type"), expr("ts DIV 1000").as("t_us"), col("value"))
         .writeStream.format("parquet")
@@ -7434,7 +7421,7 @@ object SparkEntry {
     // absorbed by its marker (idempotent). Output = the final table;
     // exact integer sums make it byte-identical however batched.
     QuerySpec("events_stream_upsert_totals", { (s, dir) =>
-      val files = scratchDir("upsert-files")
+      val files = Scratch.dir("upsert-files")
       Tables(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"))
         .repartition(4)
@@ -7442,10 +7429,10 @@ object SparkEntry {
       val schema = s.read.parquet(files).schema
       def stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(files)
-      val table = scratchDir("upsert-table")
-      EventStream.upsertTotalsRun(stream, table, scratchDir("upsert-cp1"))
+      val table = Scratch.dir("upsert-table")
+      EventStream.upsertTotalsRun(stream, table, Scratch.dir("upsert-cp1"))
       // full replay, fresh checkpoint: markers must absorb every batch
-      EventStream.upsertTotalsRun(stream, table, scratchDir("upsert-cp2"))
+      EventStream.upsertTotalsRun(stream, table, Scratch.dir("upsert-cp2"))
       EventStream.latestSnapshot(s, table).get
     }, oracle =
       // upsert-table replay: the final merged snapshot equals the plain
@@ -7462,7 +7449,7 @@ object SparkEntry {
     // yield the same bit-exact board the one-shot SQL replay computes.
     QuerySpec("events_stream_decay_totals", { (s, dir) =>
       val h = 259200L * 1000000000L // 3-day half-life, as the batch twin
-      val files = scratchDir("decay-files")
+      val files = Scratch.dir("decay-files")
       Tables(s, dir, "events")
         .select(col("event_type"), col("ts"), col("value"))
         .repartition(4)
@@ -7470,10 +7457,10 @@ object SparkEntry {
       val schema = s.read.parquet(files).schema
       def stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(files)
-      val table = scratchDir("decay-table")
-      EventStream.decayTotalsRun(stream, table, scratchDir("decay-cp1"), h)
+      val table = Scratch.dir("decay-table")
+      EventStream.decayTotalsRun(stream, table, Scratch.dir("decay-cp1"), h)
       // full replay, fresh checkpoint: markers must absorb every batch
-      EventStream.decayTotalsRun(stream, table, scratchDir("decay-cp2"), h)
+      EventStream.decayTotalsRun(stream, table, Scratch.dir("decay-cp2"), h)
       EventStream.decayedLeaderboard(s, table)
     }, oracle =
       // streaming decay twin: calendar buckets (k = max_bucket - bucket,

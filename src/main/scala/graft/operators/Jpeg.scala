@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.operators.Multimodal.{DecodedImage, LaneCodec}
+import graft.operators.Multimodal.Raster
 
 /** REAL baseline-DCT JPEG codec (ISO/IEC 10918-1), built entirely on
   * the JDK — the compressed-image leg the PNG codec couldn't cover
@@ -281,17 +280,9 @@ object Jpeg {
              sampling: Seq[(Int, Int)] = Nil,
              restartInterval: Int = 0): Array[Byte] = {
     require(restartInterval >= 0, "restart interval must be >= 0")
-    val samp = if (sampling.isEmpty) comps.map(_ => (1, 1)) else sampling
-    require(samp.length == comps.length, "sampling/comps length mismatch")
-    require(samp.forall { case (sh, sv) =>
-      (sh == 1 || sh == 2) && (sv == 1 || sv == 2) },
-      s"sampling factors must be 1 or 2: $samp")
-    val hmax = samp.map(_._1).max; val vmax = samp.map(_._2).max
-    val mx = (w + 8 * hmax - 1) / (8 * hmax)
-    val my = (h + 8 * vmax - 1) / (8 * vmax)
-    val blocksPerMcu = samp.map { case (sh, sv) => sh * sv }.sum
-    require(blocks.length == mx * my * blocksPerMcu,
-      s"${blocks.length} blocks != ${mx}x$my MCUs x $blocksPerMcu")
+    val (samp, nMcu, blocksPerMcu) = scanShape(w, h, comps, sampling)
+    require(blocks.length == nMcu * blocksPerMcu,
+      s"${blocks.length} blocks != $nMcu MCUs x $blocksPerMcu")
     val out = new java.io.ByteArrayOutputStream()
     writeMarker(out, 0xD8) // SOI
     writeSegment(out, 0xDB, dqtBody(0, QtLuma))
@@ -322,7 +313,7 @@ object Jpeg {
     var bi = 0
     var m = 0
     var rst = 0
-    while (m < mx * my) {
+    while (m < nMcu) {
       if (restartInterval > 0 && m > 0 && m % restartInterval == 0) {
         // restart boundary: pad to a byte, emit RSTm (cycling 0..7,
         // NOT byte-stuffed), reset every DC predictor (spec E.1.4)
@@ -346,6 +337,21 @@ object Jpeg {
     bw.flush()
     writeMarker(out, 0xD9) // EOI
     out.toByteArray
+  }
+
+  /** A scan's checked sampling factors (1x1 per component when
+    * `sampling` is empty), its MCU count and its blocks per MCU. */
+  private def scanShape(w: Int, h: Int, comps: Seq[(Int, Int)],
+                        sampling: Seq[(Int, Int)]): (Seq[(Int, Int)], Int, Int) = {
+    val samp = if (sampling.isEmpty) comps.map(_ => (1, 1)) else sampling
+    require(samp.length == comps.length, "sampling/comps length mismatch")
+    require(samp.forall { case (sh, sv) =>
+      (sh == 1 || sh == 2) && (sv == 1 || sv == 2) },
+      s"sampling factors must be 1 or 2: $samp")
+    val hmax = samp.map(_._1).max; val vmax = samp.map(_._2).max
+    val mx = (w + 8 * hmax - 1) / (8 * hmax)
+    val my = (h + 8 * vmax - 1) / (8 * vmax)
+    (samp, mx * my, samp.map { case (sh, sv) => sh * sv }.sum)
   }
 
   // ---------------------------------------------------------- decoder
@@ -401,19 +407,15 @@ object Jpeg {
   @inline private def extend(v: Int, s: Int): Int =
     if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
 
-  /** A decoded image: `pixels` row-major, interleaved RGB when
-    * channels == 3 (YCbCr converted), single plane when grayscale. */
-  final case class Image(width: Int, height: Int, channels: Int,
-                         pixels: Array[Byte])
-
   private def be16(b: Array[Byte], o: Int): Int =
     ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
 
   /** Full baseline decode: gray / 4:4:4 / 4:2:0 (sampling factors 1-2
     * per axis, replicate upsample) and DRI/RSTn restart intervals.
     * Fails loudly on anything outside that scope (progressive,
-    * extended, 12-bit, factors > 2). */
-  def decode(b: Array[Byte]): Image = {
+    * extended, 12-bit, factors > 2). Color scans come out as
+    * interleaved RGB (YCbCr converted). */
+  def decode(b: Array[Byte]): Raster = {
     require(b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xD8,
       "not a JPEG payload (missing SOI)")
     var i = 2
@@ -603,7 +605,7 @@ object Jpeg {
         while (x < w) { out(y * w + x) = sampleOf(0, y, x).toByte; x += 1 }
         y += 1
       }
-      Image(w, h, 1, out)
+      Raster(w, h, 1, out)
     } else {
       val out = new Array[Byte](w * h * 3)
       var y = 0
@@ -621,7 +623,7 @@ object Jpeg {
         }
         y += 1
       }
-      Image(w, h, 3, out)
+      Raster(w, h, 3, out)
     }
   }
 
@@ -639,133 +641,23 @@ object Jpeg {
       else 0
     }
 
-  /** Encode a grayscale JPEG per row from a blob of nBlocks*64
-    * md5-derived bytes (the coefficient source). Per-partition
-    * iterator shape, like the PNG encoders. */
-  def encodeGrayColumn(df: DataFrame, idCol: Column, blobCol: Column,
-                       w: Int, h: Int, restartInterval: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val nBlocks = ((w + 7) / 8) * ((h + 7) / 8)
-    df.select(idCol.cast("long").as("id"), blobCol.as("blob"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, blob) =>
-        require(blob.length == nBlocks * 64,
-          s"blob ${blob.length} != $nBlocks x 64")
-        val blocks = IndexedSeq.tabulate(nBlocks)(b => coefFromBytes(blob, b * 64))
-        (id, encode(w, h, Seq((1, 0)), blocks,
-          restartInterval = restartInterval))
-      })
-      .toDF("media_id", "payload")
-  }
-
-  /** 4:4:4 YCbCr encode twin: blob carries nMcu*3*64 bytes, MCU-major
-    * then component (Y, Cb, Cr). Chroma uses quant table 1. */
-  def encodeYccColumn(df: DataFrame, idCol: Column, blobCol: Column,
-                      w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val nMcu = ((w + 7) / 8) * ((h + 7) / 8)
-    df.select(idCol.cast("long").as("id"), blobCol.as("blob"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, blob) =>
-        require(blob.length == nMcu * 3 * 64,
-          s"blob ${blob.length} != $nMcu x 3 x 64")
-        val blocks =
-          IndexedSeq.tabulate(nMcu * 3)(b => coefFromBytes(blob, b * 64))
-        (id, encode(w, h, Seq((1, 0), (2, 1), (3, 1)), blocks))
-      })
-      .toDF("media_id", "payload")
-  }
-
-  /** 4:2:0 encode twin — the sampling real-world JPEGs actually use:
-    * MCU = 16x16 pixels = [Y00 Y01 Y10 Y11 Cb Cr], luma 2x2, chroma
-    * 1x1 (one chroma sample per 2x2 luma pixels). Blob carries
-    * nMcu*6*64 coefficient-source bytes in that block order. */
-  def encodeYcc420Column(df: DataFrame, idCol: Column, blobCol: Column,
-                         w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val nMcu = ((w + 15) / 16) * ((h + 15) / 16)
-    df.select(idCol.cast("long").as("id"), blobCol.as("blob"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, blob) =>
-        require(blob.length == nMcu * 6 * 64,
-          s"blob ${blob.length} != $nMcu x 6 x 64")
-        val blocks =
-          IndexedSeq.tabulate(nMcu * 6)(b => coefFromBytes(blob, b * 64))
-        (id, encode(w, h, Seq((1, 0), (2, 1), (3, 1)), blocks,
-          sampling = Seq((2, 2), (1, 1), (1, 1))))
-      })
-      .toDF("media_id", "payload")
-  }
-
-  /** Decode grayscale JPEG payloads into header + exact pixel stats
-    * (the [[Multimodal.decodePgm]] / [[Png.decodeColumn]] shape). */
-  def decodeColumn(df: DataFrame, idCol: Column,
-                   payloadCol: Column): Dataset[DecodedImage] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(idCol.cast("long").as("id"), payloadCol.as("p"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) =>
-        val img = decode(b)
-        require(img.channels == 1,
-          s"expected grayscale, payload is ${img.channels}-channel")
-        var sum = 0L; var mn = 255; var mx = 0; var i = 0
-        while (i < img.pixels.length) {
-          val v = img.pixels(i) & 0xff
-          sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-          i += 1
-        }
-        DecodedImage(id, "jpeg", img.width, img.height, 255,
-          img.pixels.length.toLong, sum, mn, mx)
-      })
-  }
-
-  final case class DecodedRgb(media_id: Long, width: Int, height: Int,
-                              n_pixels: Long, r_sum: Long, g_sum: Long,
-                              b_sum: Long)
-
-  /** Decode color JPEGs into exact per-channel integer sums (post
-    * YCbCr->RGB — the fixed-point conversion is part of the decode
-    * contract and the oracle replays it). */
-  def decodeRgbColumn(df: DataFrame, idCol: Column,
-                      payloadCol: Column): Dataset[DecodedRgb] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(idCol.cast("long").as("id"), payloadCol.as("p"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) =>
-        val img = decode(b)
-        require(img.channels == 3,
-          s"expected color, payload is ${img.channels}-channel")
-        val sums = new Array[Long](3)
-        var i = 0
-        while (i < img.pixels.length) {
-          sums(i % 3) += (img.pixels(i) & 0xff)
-          i += 1
-        }
-        DecodedRgb(id, img.width, img.height, (img.pixels.length / 3).toLong,
-          sums(0), sums(1), sums(2))
-      })
-  }
-
-  /** The compressed-codec plug-in for JPEG payloads — lane sums over
-    * DECODED grayscale pixels through [[Multimodal.decodeFeatures]]'s
-    * [[LaneCodec]] boundary, same lane rule as [[Png.PngLanes]]. */
-  object JpegLanes extends LaneCodec {
-    def lanes(payload: Array[Byte], dim: Int): Array[Long] = {
-      val img = decode(payload)
-      require(img.channels == 1,
-        s"expected grayscale, payload is ${img.channels}-channel")
-      val sums = new Array[Long](dim)
-      var i = 0
-      while (i < img.pixels.length) {
-        sums(i % dim) += (img.pixels(i) & 0xff)
-        i += 1
-      }
-      sums
-    }
+  /** Per-row JPEG encode of a coefficient-blob column: each blob holds
+    * 64 md5-derived bytes per block ([[coefFromBytes]]) in [[encode]]'s
+    * MCU-interleaved block order for the scan that `comps` and
+    * `sampling` describe: gray `Seq((1, 0))`; 4:4:4 color
+    * `Seq((1, 0), (2, 1), (3, 1))` (chroma on quant table 1); 4:2:0
+    * color adds sampling `Seq((2, 2), (1, 1), (1, 1))`. */
+  def encodeColumn(df: DataFrame, idCol: Column, blobCol: Column,
+                   w: Int, h: Int, comps: Seq[(Int, Int)] = Seq((1, 0)),
+                   sampling: Seq[(Int, Int)] = Nil,
+                   restartInterval: Int = 0): DataFrame = {
+    val (_, nMcu, blocksPerMcu) = scanShape(w, h, comps, sampling)
+    val nBlocks = nMcu * blocksPerMcu
+    Multimodal.payloads(df, idCol, blobCol) { (id, blob) =>
+      require(blob.length == nBlocks * 64,
+        s"blob ${blob.length} != $nBlocks x 64")
+      val blocks = IndexedSeq.tabulate(nBlocks)(b => coefFromBytes(blob, b * 64))
+      (id, encode(w, h, comps, blocks, sampling, restartInterval))
+    }.toDF("media_id", "payload")
   }
 }

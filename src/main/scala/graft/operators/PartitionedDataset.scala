@@ -13,13 +13,13 @@ import graft.sources.TFRecordIO
   * the reference's `tfds_to_tfrecords` (tfds_pipelines.py:25-78) and
   * `PartitionedDataset` (data_loaders.py:31-125) surfaces.
   *
-  * Engine-native representation: groups are rows of
-  * `(group_id, examples array<binary>, num_examples, num_bytes)` stored
-  * as Parquet (columnar, splittable, self-describing — strictly better
-  * than row-proto TFRecords for everything except TF interop). The
-  * TFRecord/SequenceExample path is the wire-compat add-on, reproducing
-  * the reference's exact on-disk format including the id-drop invariant
-  * (the group id is REMOVED before the sink, tfds_pipelines.py:64-66).
+  * Packed groups are rows of
+  * `(group_id, examples array<binary>, num_examples, num_bytes)`
+  * ([[packExamples]]). Their one on-disk form is the reference's:
+  * TFRecord files of one SequenceExample per group, with the group id
+  * REMOVED before the sink (tfds_pipelines.py:64-66), optionally
+  * sharded by a hash of the group id ([[writeTFRecordsSharded]]).
+  * [[loadTFRecords]] reads them back as `(file, examples)` rows.
   */
 object PartitionedDataset {
 

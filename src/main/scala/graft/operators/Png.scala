@@ -2,25 +2,25 @@ package graft.operators
 
 import java.util.zip.{CRC32, DataFormatException, Deflater, Inflater}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.operators.Multimodal.{DecodedImage, LaneCodec}
+import graft.operators.Multimodal.Raster
 
-/** REAL compressed-image codec: PNG, 8-bit grayscale, non-interlaced —
-  * built entirely on the JDK (`java.util.zip` DEFLATE + CRC32), no
-  * media library. This replaces the involution stub as the declared
-  * compressed path behind [[Multimodal.LaneCodec]]: the decoder walks
-  * the chunk stream with VERIFIED CRCs, inflates the zlib-wrapped IDAT
-  * payload (adler checked by `Inflater`), and undoes all five PNG
-  * scanline filters (None/Sub/Up/Average/Paeth) byte-exactly.
+/** REAL compressed-image codec: PNG, 8-bit grayscale or truecolor,
+  * non-interlaced — built entirely on the JDK (`java.util.zip` DEFLATE
+  * + CRC32), no media library. The decoder walks the chunk stream with
+  * VERIFIED CRCs, inflates the zlib-wrapped IDAT payload (adler
+  * checked by `Inflater`), and undoes all five PNG scanline filters
+  * (None/Sub/Up/Average/Paeth) byte-exactly into a
+  * [[Multimodal.Raster]]; the Spark operators over it are
+  * [[Multimodal.decodeGray]], [[Multimodal.decodeRgb]] and
+  * [[Multimodal.PixelLanes]].
   *
-  * Scope is stated, not hidden: color type 0 (grayscale), bit depth 8,
-  * interlace 0. Anything else fails loudly — truecolor/palette/16-bit
-  * decode is a widening of [[bpp]] and the filter arithmetic, not a
-  * different architecture. Reference anchor: the reference's image
-  * feature surface is MNIST 28x28x1 grayscale
-  * (integration_test.py:29), exactly this pixel shape.
+  * Scope is stated, not hidden: color types 0 (grayscale) and 2
+  * (truecolor), bit depth 8, interlace 0. Anything else fails loudly.
+  * Reference anchor: the reference's image feature surface is MNIST
+  * 28x28x1 grayscale (integration_test.py:29), exactly this pixel
+  * shape.
   *
   * The encoder exists so declared queries can roundtrip REAL payloads
   * whose pixel bytes stay engine-replayable (md5-derived): it rotates
@@ -125,29 +125,16 @@ object Png {
 
   // ------------------------------------------------------------ decode
 
-  /** Parsed grayscale image: header fields + the defiltered raster. */
-  final case class Gray8(width: Int, height: Int, pixels: Array[Byte])
-
-  /** Parsed image, channel-aware: `pixels` is interleaved
-    * (stride = width * channels bytes per row). */
-  final case class Image(width: Int, height: Int, channels: Int,
-                         pixels: Array[Byte])
-
-  /** Gray-8 entry kept as the narrow API: full parse + a loud channel
-    * check. */
-  def decodeGray8(b: Array[Byte]): Gray8 = {
-    val img = decode(b)
-    require(img.channels == 1,
-      s"expected grayscale, payload is ${img.channels}-channel")
-    Gray8(img.width, img.height, img.pixels)
-  }
+  /** Gray-8 entry kept as the narrow API: full parse + the loud
+    * channel check. */
+  def decodeGray8(b: Array[Byte]): Raster = decode(b).withChannels(1)
 
   /** Full PNG parse: signature, CRC-verified chunk walk, zlib inflate
     * (adler verified by Inflater), 5-filter scanline reconstruction
     * with the left neighbor `bpp` bytes back (PNG spec §9.2) — gray-8
     * (color 0) and truecolor-8 (color 2) share the one loop. Fails
     * loudly on anything else. */
-  def decode(b: Array[Byte]): Image = {
+  def decode(b: Array[Byte]): Raster = {
     require(b.length >= 8 && Signature.indices.forall(i => b(i) == Signature(i)),
       "not a PNG payload (bad signature)")
     var i = 8
@@ -217,7 +204,7 @@ object Png {
       }
       r += 1
     }
-    Image(w, h, channels, px)
+    Raster(w, h, channels, px)
   }
 
   /** Paeth predictor (PNG spec §9.4) — nearest of left/up/up-left to
@@ -261,97 +248,16 @@ object Png {
 
   // --------------------------------------------------- Spark operators
 
-  /** The compressed-codec plug-in: PNG payloads -> interleaved integer
-    * lane sums over the DECODED pixels (same lane rule as
-    * [[Multimodal.RawByteLanes]], applied post-decode) — the declared
-    * compressed path through [[Multimodal.decodeFeatures]]. */
-  object PngLanes extends LaneCodec {
-    def lanes(payload: Array[Byte], dim: Int): Array[Long] = {
-      val img = decodeGray8(payload)
-      val sums = new Array[Long](dim)
-      var i = 0
-      while (i < img.pixels.length) {
-        sums(i % dim) += (img.pixels(i) & 0xff)
-        i += 1
-      }
-      sums
-    }
-  }
-
   /** Per-row PNG encode of an md5-derivable raster column — the payload
-    * CONSTRUCTION side of the declared roundtrip (per-partition
-    * iterator shape, same as the decoders). */
+    * CONSTRUCTION side of the declared roundtrip. */
   def encodeColumn(df: DataFrame, idCol: Column, pxCol: Column,
-                   w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(idCol.cast("long").as("id"), pxCol.as("px"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, px) =>
-        (id, encodeGray8(w, h, px))
-      })
+                   w: Int, h: Int): DataFrame =
+    Multimodal.payloads(df, idCol, pxCol)((id, px) => (id, encodeGray8(w, h, px)))
       .toDF("media_id", "payload")
-  }
 
   /** Truecolor encode twin of [[encodeColumn]] (interleaved RGB). */
   def encodeRgbColumn(df: DataFrame, idCol: Column, pxCol: Column,
-                      w: Int, h: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(idCol.cast("long").as("id"), pxCol.as("px"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, px) =>
-        (id, encodeRgb8(w, h, px))
-      })
+                      w: Int, h: Int): DataFrame =
+    Multimodal.payloads(df, idCol, pxCol)((id, px) => (id, encodeRgb8(w, h, px)))
       .toDF("media_id", "payload")
-  }
-
-  /** Per-channel stats of a decoded truecolor payload. */
-  final case class DecodedRgb(media_id: Long, width: Int, height: Int,
-                              n_pixels: Long, r_sum: Long, g_sum: Long,
-                              b_sum: Long)
-
-  /** Decode truecolor PNG payloads into exact per-channel integer
-    * sums — the color twin of [[decodeColumn]]. */
-  def decodeRgbColumn(df: DataFrame, idCol: Column,
-                      payloadCol: Column): Dataset[DecodedRgb] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(idCol.cast("long").as("id"), payloadCol.as("p"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) =>
-        val img = decode(b)
-        require(img.channels == 3,
-          s"expected truecolor, payload is ${img.channels}-channel")
-        val sums = new Array[Long](3)
-        var i = 0
-        while (i < img.pixels.length) {
-          sums(i % 3) += (img.pixels(i) & 0xff)
-          i += 1
-        }
-        DecodedRgb(id, img.width, img.height,
-          (img.pixels.length / 3).toLong, sums(0), sums(1), sums(2))
-      })
-  }
-
-  /** Decode a PNG payload column into header + exact pixel stats (the
-    * [[Multimodal.decodePgm]] shape for the compressed format). */
-  def decodeColumn(df: DataFrame, idCol: Column,
-                   payloadCol: Column): Dataset[DecodedImage] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(idCol.cast("long").as("id"), payloadCol.as("p"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, b) =>
-        val img = decodeGray8(b)
-        var sum = 0L; var mn = 255; var mx = 0; var i = 0
-        while (i < img.pixels.length) {
-          val v = img.pixels(i) & 0xff
-          sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-          i += 1
-        }
-        DecodedImage(id, "png", img.width, img.height, 255,
-          img.pixels.length.toLong, sum, mn, mx)
-      })
-  }
 }

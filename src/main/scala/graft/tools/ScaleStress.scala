@@ -688,11 +688,11 @@ object ScaleStress {
     time("jpeg decode (1M 16x16 gray payloads)") {
       val blob = concat((for (b <- 0 until 4; k <- 0 until 4) yield
         unhex(md5(concat(lit(s"sg${b}x$k:"), col("id").cast("string"))))): _*)
-      val enc = graft.operators.Jpeg.encodeGrayColumn(
+      val enc = graft.operators.Jpeg.encodeColumn(
         docs.filter(col("id") < 1000000L).select(col("id"), blob.as("blob")),
         col("id"), col("blob"), w = 16, h = 16)
-      graft.operators.Jpeg.decodeColumn(enc, col("media_id"), col("payload"))
-        .toDF().agg(sum(col("pixel_sum"))).collect()
+      graft.operators.Multimodal.decodeGray(enc, col("media_id"),
+        col("payload"), "jpeg", graft.operators.Jpeg.decode).toDF().agg(sum(col("pixel_sum"))).collect()
     }
 
     // Aho-Corasick at blocklist scale: two-token phrases over the doc

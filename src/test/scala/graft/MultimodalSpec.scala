@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Multimodal
+import graft.operators.{Jpeg, Multimodal}
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -79,14 +79,6 @@ class MultimodalSpec extends SparkSpec {
     val frames = df.select(Multimodal.sampleFrames($"payload", 3, 2).as("f"))
       .as[Seq[Array[Byte]]].head()
     frames.map(new String(_, "UTF-8")) shouldBe Seq("abc", "ghi")
-  }
-
-  test("resizeStub: factor-2 decimation halves the payload") {
-    val df = Seq("abcdefgh").toDF("t")
-      .select($"t".cast("binary").as("payload"))
-    val out = df.select(Multimodal.resizeStub($"payload", 2).as("r"))
-      .as[Array[Byte]].head()
-    new String(out, "UTF-8") shouldBe "aceg"
   }
 
   test("phash64: hand-computed bits, identical payloads collide, twins near") {
@@ -175,6 +167,22 @@ class MultimodalSpec extends SparkSpec {
     an[Exception] should be thrownBy Multimodal.decodeWav(
       Seq((2L, "nope".getBytes("US-ASCII"))).toDF("id", "p"),
       $"id", $"p").collect()
+  }
+
+  test("channel check: JPEG payloads of the wrong channel count fail " +
+      "loudly in the RGB, gray and lane operators") {
+    val zz = Array.tabulate(64)(i => if (i == 0) 12 else if (i % 9 == 0) -3 else 0)
+    val gray = Jpeg.encode(8, 8, Seq((1, 0)), IndexedSeq(zz))
+    val rgb = Jpeg.encode(8, 8, Seq((1, 0), (2, 1), (3, 1)), IndexedSeq(zz, zz, zz))
+    val df = Seq((1L, gray, rgb)).toDF("id", "gray", "rgb")
+    failure(Multimodal.decodeRgb(df, $"id", $"gray", Jpeg.decode).collect()) should
+      include("expected truecolor, payload is 1-channel")
+    failure(Multimodal.decodeGray(df, $"id", $"rgb", "jpeg", Jpeg.decode)
+      .collect()) should include("expected grayscale, payload is 3-channel")
+    val media = Seq(Multimodal.Media(1L, "image", rgb, 8, 8, "jpeg")).toDS()
+    failure(Multimodal.decodeFeatures(media, dim = 8,
+      codec = Multimodal.PixelLanes(Jpeg.decode)).collect()) should
+      include("expected grayscale, payload is 3-channel")
   }
 }
 

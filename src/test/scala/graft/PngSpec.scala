@@ -107,16 +107,20 @@ class PngSpec extends SparkSpec {
   }
 
   test("channel mismatch fails loudly (gray payload through the RGB path)") {
+    // and an RGB payload through the gray operator and the lane codec
     val gray = Png.encodeGray8(4, 4, raster(4, 4)((r, c) => r + c))
-    val e = intercept[IllegalArgumentException](
-      Png.decode(gray).channels match {
-        case 1 => throw new IllegalArgumentException(
-          "expected truecolor, payload is 1-channel")
-        case _ => ()
-      })
-    e.getMessage should include("truecolor")
-    intercept[IllegalArgumentException](Png.decodeGray8(
-      Png.encodeRgb8(2, 2, Array.fill(12)(7.toByte))))
+    val rgb = Png.encodeRgb8(2, 2, Array.fill(12)(7.toByte))
+    val df = Seq((1L, gray, rgb)).toDF("id", "gray", "rgb")
+    failure(Multimodal.decodeRgb(df, col("id"), col("gray"), Png.decode)
+      .collect()) should include("expected truecolor, payload is 1-channel")
+    failure(Multimodal.decodeGray(df, col("id"), col("rgb"), "png", Png.decode)
+      .collect()) should include("expected grayscale, payload is 3-channel")
+    val media = Seq(Multimodal.Media(1L, "image", rgb, 2, 2, "png")).toDS()
+    failure(Multimodal.decodeFeatures(media, dim = 8,
+      codec = Multimodal.PixelLanes(Png.decode)).collect()) should
+      include("expected grayscale, payload is 3-channel")
+    failure(Png.decodeGray8(rgb)) should
+      include("expected grayscale, payload is 3-channel")
   }
 
   test("PngLanes through decodeFeatures: lane sums equal pixel-lane sums") {
@@ -124,8 +128,8 @@ class PngSpec extends SparkSpec {
     val media = Seq(
       Multimodal.Media(1L, "image", Png.encodeGray8(8, 8, px), 8, 8, "png"))
       .toDS()
-    val row = Multimodal.decodeFeatures(media, dim = 8, codec = Png.PngLanes)
-      .collect().head
+    val row = Multimodal.decodeFeatures(media, dim = 8,
+      codec = Multimodal.PixelLanes(Png.decode)).collect().head
     val expect = Array.tabulate(8)(j =>
       px.indices.filter(_ % 8 == j).map(px(_) & 0xff).map(_.toLong).sum)
     row.lane_sums.toSeq shouldBe expect.toSeq
@@ -138,8 +142,8 @@ class PngSpec extends SparkSpec {
         md5(concat(lit("c:"), col("id"))),
         md5(concat(lit("d:"), col("id"))))).as("px"))
     val enc = Png.encodeColumn(df, col("id"), col("px"), w = 8, h = 8)
-    val dec = Png.decodeColumn(enc, col("media_id"), col("payload"))
-      .collect().sortBy(_.media_id)
+    val dec = Multimodal.decodeGray(enc, col("media_id"), col("payload"),
+      "png", Png.decode).collect().sortBy(_.media_id)
     dec should have length 6
     val pxRows = df.select(col("id"), col("px"))
       .as[(Long, Array[Byte])].collect().sortBy(_._1)

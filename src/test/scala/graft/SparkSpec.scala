@@ -15,6 +15,14 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
   def sf0001 = "/root/testdata/sf0.001"
   def sf001 = "/root/testdata/sf0.01"
 
+  /** Every message along the cause chain of what `run` throws (a task
+    * failure wraps the executor's exception). */
+  def failure(run: => Any): String = {
+    val e = intercept[Exception](run)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+  }
+
   /** Runs `body` with AQE partition coalescing off, so a small range
     * shuffle keeps its partitions (and the per-partition bases of a
     * two-pass running sum get checked). */
